@@ -19,7 +19,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * Null semantics: null if either side is null or lengths differ
   * (mirrors SQL null-propagation; a length mismatch is data corruption,
   * surfaced as null not an exception so a scan over dirty data
-  * completes). Zero-norm inputs yield null (cosine undefined).
+  * completes). Zero-norm inputs yield null (cosine undefined). NaN or
+  * infinite elements yield NaN.
+  *
+  * The loop itself is [[CosineKernel.cosine]], shared with the
+  * driver-side index buffer (`graft.llm.IndexBuffer`), so both
+  * paths compute the same double by construction.
   */
 final case class CosineSimilarityExpr(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -42,53 +47,64 @@ final case class CosineSimilarityExpr(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      val xi = x.getDouble(i); val yi = y.getDouble(i)
-      dot += xi * yi; na += xi * xi; nb += yi * yi
-      i += 1
-    }
-    if (na == 0.0 || nb == 0.0) null
-    else dot / (math.sqrt(na) * math.sqrt(nb))
+    val r = CosineKernel.cosine(x, y)
+    if (java.lang.Double.isNaN(r) && CosineKernel.undefined(x, y)) null
+    else r
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
-      val ok = ctx.freshName("ok")
+    nullSafeCodeGen(ctx, ev, (a, b) =>
       s"""
-         |int $n = $a.numElements();
-         |boolean $ok = $n == $b.numElements();
-         |double $dot = 0.0, $na = 0.0, $nb = 0.0;
-         |if ($ok) {
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { $ok = false; break; }
-         |    double $xi = $a.getDouble($i);
-         |    double $yi = $b.getDouble($i);
-         |    $dot += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
-         |  }
-         |}
-         |if (!$ok || $na == 0.0 || $nb == 0.0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-         |}
-       """.stripMargin
-    })
+         |${ev.value} = graft.functions.CosineKernel.cosine($a, $b);
+         |${ev.isNull} = java.lang.Double.isNaN(${ev.value}) &&
+         |  graft.functions.CosineKernel.undefined($a, $b);
+       """.stripMargin)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimilarityExpr =
     copy(left = newLeft, right = newRight)
 
   override def prettyName: String = "graft_cosine"
+}
+
+/** The one cosine loop: dot and both squared norms accumulated in a
+  * single i-ascending pass, then `dot / (sqrt(na) * sqrt(nb))`. NaN
+  * stands for two outcomes: SQL null (a length mismatch, a null
+  * element, a zero norm) and the NaN that NaN or infinite elements
+  * produce; [[undefined]] tells them apart, off the hot path.
+  */
+object CosineKernel {
+  def cosine(x: ArrayData, y: ArrayData): Double = {
+    val n = x.numElements()
+    if (n != y.numElements()) return Double.NaN
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return Double.NaN
+      val xi = x.getDouble(i); val yi = y.getDouble(i)
+      dot += xi * yi; na += xi * xi; nb += yi * yi
+      i += 1
+    }
+    if (na == 0.0 || nb == 0.0) Double.NaN
+    else dot / (math.sqrt(na) * math.sqrt(nb))
+  }
+
+  /** Whether the cosine of `x` and `y` is SQL null: lengths differ, an
+    * element is null, or a norm is zero. Each squared norm is summed
+    * in the same order as in [[cosine]], so the zero test sees the
+    * same double.
+    */
+  def undefined(x: ArrayData, y: ArrayData): Boolean = {
+    val n = x.numElements()
+    if (n != y.numElements()) return true
+    var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return true
+      val xi = x.getDouble(i); val yi = y.getDouble(i)
+      na += xi * xi; nb += yi * yi
+      i += 1
+    }
+    na == 0.0 || nb == 0.0
+  }
 }

@@ -347,9 +347,30 @@ object IndexManifest {
     */
   val RetainVersions = 2
 
+  /** Test hook, fired by [[resolve]] with `(root, version)` right after
+    * a read resolved the pointer. Specs commit from here to land a
+    * writer between a read's resolution and its artifact reads.
+    */
+  @volatile private[graft] var resolveHook: (String, String) => Unit =
+    (_, _) => ()
+
   /** The committed version name, if any. */
   def current(root: String): Option[String] =
     history(root).headOption
+
+  /** THE read-path pointer resolution: the committed version a read
+    * serves, resolved once and passed to every artifact read of that
+    * read, so a concurrent commit can never make one read combine two
+    * versions (the pre-compaction data with the compacted version's
+    * empty tombstone set, say). Throws `IllegalArgumentException` on a
+    * root with nothing committed.
+    */
+  def resolve(root: String): String = {
+    val v = current(root)
+    require(v.isDefined, s"no committed index at $root")
+    resolveHook(root, v.get)
+    v.get
+  }
 
   /** Committed lineage, newest first (the pointer's lines). Old
     * single-line manifests parse as a one-element history.
@@ -424,6 +445,19 @@ object IndexManifest {
         _ => spark.read.parquet(path).schema)
       spark.read.schema(sch).parquet(path)
     }
+
+  /** A partitioned write of zero rows (a compaction that folded away
+    * every row) leaves no parquet file, and an artifact without one
+    * cannot be read. This writes one empty file under partition value
+    * 0 of each of `partitionCols`, so the artifact keeps its schema and
+    * later appends keep the same directory shape. A no-op when `dir`
+    * already holds a parquet file.
+    */
+  private[llm] def keepSchema(df: org.apache.spark.sql.DataFrame,
+      dir: String, partitionCols: String*): Unit =
+    if (!ioFor(dir).hasParquet(dir))
+      df.drop(partitionCols: _*).limit(0).write.mode("overwrite")
+        .parquet(partitionCols.map(c => s"$c=0").mkString(s"$dir/", "/", ""))
 
   /** Whether artifact `name` exists with at least one parquet file —
     * the optional-artifact probe (tombstones, level-0 deltas).
@@ -750,14 +784,35 @@ object IndexManifest {
     * protection claim. Also throws `IllegalStateException` on an
     * empty root (nothing committed to pin).
     */
-  def pinCurrent(root: String): ReaderPin = {
+  def pinCurrent(root: String): ReaderPin =
+    pinWith(root)(current(root).getOrElse(throw new IllegalStateException(
+      s"no committed index at $root")))
+
+  /** Pin `version`, which a read already [[resolve]]d, rather than
+    * whatever is current now: a read that pins after resolving never
+    * resolves the pointer a second time. Same lock and fence as
+    * [[pinCurrent]]. The version must still be retained (in the
+    * lineage, or held by another pin) when the lock is taken; a
+    * version that more commits than [[RetainVersions]] pushed out
+    * in between throws `IllegalStateException`, since GC may already
+    * have reaped its files.
+    */
+  def pinVersion(root: String, version: String): ReaderPin =
+    pinWith(root) {
+      if (!history(root).contains(version) &&
+          !pinnedVersions(root).contains(version))
+        throw new IllegalStateException(s"version $version of $root " +
+          "left the retained lineage before it could be pinned")
+      version
+    }
+
+  private def pinWith(root: String)(choose: => String): ReaderPin = {
     val io = ioFor(root)
     var last: ConcurrentCommitException = null
     var i = 0
     while (i < PinAcquireAttempts) {
       val pinned = io.withLock(root) {
-        val v = current(root).getOrElse(throw new IllegalStateException(
-          s"no committed index at $root"))
+        val v = choose
         val dir = s"$root/$PinsDir"
         io.mkdirs(dir)
         // failpoint: a TTL-scale stall between resolving the version
@@ -790,10 +845,18 @@ object IndexManifest {
     * is lexically scoped; keep the raw pair only for pins that
     * genuinely outlive a scope (handed to another thread or stage).
     */
-  def withPin[T](root: String)(body: ReaderPin => T): T = {
-    val pin = pinCurrent(root)
+  def withPin[T](root: String)(body: ReaderPin => T): T =
+    releasing(pinCurrent(root))(body)
+
+  /** [[withPin]] for a version a read already resolved
+    * ([[pinVersion]]).
+    */
+  def withVersionPin[T](root: String, version: String)(
+      body: ReaderPin => T): T =
+    releasing(pinVersion(root, version))(body)
+
+  private def releasing[T](pin: ReaderPin)(body: ReaderPin => T): T =
     try body(pin) finally pin.release()
-  }
 
   final class ReaderPin private[IndexManifest](val root: String,
       val version: String, file: String) {

@@ -66,6 +66,19 @@ private[graft] sealed trait ManifestIo {
   def newestMtime(path: String): Long
   /** Any `*.parquet` file anywhere under `path`? */
   def hasParquet(path: String): Boolean
+  /** Every `*.parquet` file anywhere under `path`; empty for a missing
+    * path.
+    */
+  def parquetFiles(path: String): Seq[String]
+  /** A value each commit of `version` writes afresh, so a root that is
+    * wiped and rebuilt (its version names restart) gives its new
+    * `version` a different stamp than the old one had. Posix: the
+    * version dir's mtime. Object stores, where a dir is a key prefix
+    * with no mtime of its own: the commit sentinel's content, the
+    * commit's wall-clock millis. None when the version has no stamp
+    * (a missing sentinel).
+    */
+  def versionStamp(root: String, version: String): Option[String]
   /** Hard-link primitive (layout `link`). Link-less stores throw the
     * documented contract error, never a raw NIO exception.
     */
@@ -229,6 +242,17 @@ private[graft] object PosixManifestIo extends ManifestIo {
           walk(c))
     walk(new java.io.File(path))
   }
+  def parquetFiles(path: String): Seq[String] = {
+    def walk(f: java.io.File): Seq[String] =
+      Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
+        .flatMap(c =>
+          if (c.isDirectory) walk(c)
+          else if (c.getName.endsWith(".parquet")) Seq(c.getPath)
+          else Nil)
+    walk(new java.io.File(path))
+  }
+  def versionStamp(root: String, version: String): Option[String] =
+    Some(mtime(s"$root/$version")).filter(_ > 0).map(_.toString)
   def createLink(to: String, from: String): Unit =
     IndexManifest.linkFn(Paths.get(to), Paths.get(from))
 
@@ -777,6 +801,24 @@ private[graft] object HadoopManifestIo extends ManifestIo {
     val p = new Path(path)
     f.exists(p) && f.getFileStatus(p).isDirectory && walk(p)
   }
+  def parquetFiles(path: String): Seq[String] = {
+    val f = fs(path)
+    val p = new Path(path)
+    if (!f.exists(p)) Nil
+    else {
+      val it = f.listFiles(p, true)
+      val out = Seq.newBuilder[String]
+      while (it.hasNext) {
+        val st = it.next()
+        if (st.getPath.getName.endsWith(".parquet"))
+          out += st.getPath.toString
+      }
+      out.result()
+    }
+  }
+  def versionStamp(root: String, version: String): Option[String] =
+    try Some(readString(s"$root/$version/$CommittedMarkerFile"))
+    catch { case _: java.io.FileNotFoundException => None }
   def createLink(to: String, from: String): Unit =
     throw new UnsupportedOperationException(
       "hard links do not exist on object stores: index roots on a " +

@@ -370,8 +370,7 @@ object Pq {
     // ONE pointer resolution: every artifact below reads from the same
     // committed version, listing-layout refs resolved uniformly by
     // [[IndexManifest.artifactPaths]]
-    val ver = version.orElse(IndexManifest.current(path))
-    require(ver.isDefined, s"no committed index at $path")
+    val ver = Some(version.getOrElse(IndexManifest.resolve(path)))
     val p = IndexManifest.readArtifact(spark, path, "params", ver)
       .select(col("dim").cast("int"), col("m").cast("int"),
         col("k").cast("int"))

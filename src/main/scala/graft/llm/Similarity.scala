@@ -741,8 +741,7 @@ object Similarity {
     // ONE pointer resolution: every artifact below reads from the same
     // committed version ([[IndexManifest.artifactPaths]] resolves
     // listing-layout refs uniformly)
-    val ver = version.orElse(IndexManifest.current(path))
-    require(ver.isDefined, s"no committed index at $path")
+    val ver = Some(version.getOrElse(IndexManifest.resolve(path)))
     val df = IndexManifest.readArtifact(spark, path, "data", ver)
     // partition-column types infer as the narrowest integral; probes
     // compare against Int cell ids
@@ -1054,17 +1053,19 @@ object Similarity {
     IndexManifest.mutate(path) { m =>
       val dead = readTombstones(spark, path, m.base)
       val base = readLshIndex(spark, path, m.base)
-      (dead match {
+      val folded = (dead match {
         case Some(ids) => base.join(broadcast(ids),
           base("id") === ids("graft_dead_id"), "left_anti")
         case None => base
       })
         .select(col("table"), col("sig"), col("id"), col("vec"),
           col("grp"))
+      folded
         .repartition(col("table"), col("grp"))
         .sortWithinPartitions(col("sig"))
         .write.mode("overwrite").partitionBy("table", "grp")
         .parquet(s"${m.dir}/data")
+      IndexManifest.keepSchema(folded, s"${m.dir}/data", "table", "grp")
       // tombstones are folded into the rewrite: the new version carries
       // none, and both changes publish in the ONE pointer flip
       IndexManifest.commitCas(path, m.version, m.base): Unit
@@ -1113,44 +1114,84 @@ object Similarity {
       IndexManifest.commitCas(path, m.version, m.base): Unit
     }
 
-  /** The tombstone set, if any deletions are pending (None ⇒ serve
-    * pays zero anti-join cost — the common case and the post-compact
-    * steady state).
+  /** The tombstone set of `version`, if any deletions are pending
+    * (None ⇒ serve pays zero anti-join cost — the common case and the
+    * post-compact steady state).
     */
   private def readTombstones(spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      version: Option[String] = None): Option[DataFrame] = {
-    val ver = version.orElse(IndexManifest.current(path))
-    if (IndexManifest.artifactNonEmpty(path, "tombstones", ver))
-      Some(IndexManifest.readArtifact(spark, path, "tombstones", ver))
+      path: String, version: Option[String]): Option[DataFrame] =
+    if (IndexManifest.artifactNonEmpty(path, "tombstones", version))
+      Some(IndexManifest.readArtifact(spark, path, "tombstones", version))
     else None
-  }
 
   def readLshIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, version: Option[String] = None): DataFrame = {
     val df = IndexManifest.readArtifact(spark, path, "data",
-      version.orElse(IndexManifest.current(path)))
+      Some(version.getOrElse(IndexManifest.resolve(path))))
     df.select(col("id"), col("vec"), col("sig"),
       col("table").cast("int").as("table"),
       col("grp").cast("long").as("grp"))
   }
 
-  /** Serve a top-k query from a disk LSH index: the closed multiprobe
-    * list per table compiles to partition filters on `(table, grp)` —
-    * only probed directories are listed/read — plus an exact `sig IN`
-    * row filter evaluated against sorted row groups. Per-query bytes
-    * read = O(probes · groupOccupancy), independent of corpus size.
+  /** Per table: the query's probed signatures (Hamming ≤
+    * `probeHamming`) and their `grp = sig mod groups` directories.
+    */
+  private def annProbes(query: Array[Double], dim: Int, bits: Int,
+      tables: Int, probeHamming: Int, groups: Int,
+      seedPrefix: String): IndexedSeq[(Seq[Long], Seq[Long])] =
+    (0 until tables).map { t =>
+      val qSig = signatureOf(query, hyperplanes(dim, bits, s"$seedPrefix/t$t"))
+      val sigs = probeSignatures(qSig, bits, probeHamming)
+      (sigs, sigs.map(sg => java.lang.Math.floorMod(sg, groups.toLong)).distinct)
+    }
+
+  /** Serve a top-k query from a disk LSH index. The read resolves the
+    * committed version once ([[IndexManifest.resolve]]); everything
+    * below reads that version only.
+    *
+    * A version whose `data` and `tombstones` decode within the
+    * driver-side buffer's budget (1/32 of the driver's max heap, in
+    * decoded bytes; see `IndexBuffer`) is decoded once into
+    * primitive arrays, and every read of it is then answered in this
+    * JVM with no Spark job, as a local `DataFrame` — the same probe
+    * predicate, tombstone anti-join, cosine kernel and
+    * `score desc, id` order as the plan below, so the same rows and
+    * bit-equal scores. The first read after each commit pays the
+    * decode (a footer read, then one streamed scan per artifact).
+    *
+    * A bigger version runs the partition-pruned Spark plan: the closed
+    * multiprobe list per table compiles to partition filters on
+    * `(table, grp)` — only probed directories are listed/read — plus
+    * an exact `sig IN` row filter evaluated against sorted row groups.
+    * Per-query bytes read = O(probes · groupOccupancy), independent of
+    * corpus size.
     */
   def topKAnnDisk(spark: org.apache.spark.sql.SparkSession, path: String,
       query: Array[Double], dim: Int, bits: Int, tables: Int, k: Int,
       probeHamming: Int = 2, groups: Int = 64,
       seedPrefix: String = "lsh"): DataFrame = {
-    val idx = readLshIndex(spark, path)
-    val probe = (0 until tables).map { t =>
-      val qSig = signatureOf(query, hyperplanes(dim, bits, s"$seedPrefix/t$t"))
-      val sigs = probeSignatures(qSig, bits, probeHamming)
-      val grps = sigs.map(sg => java.lang.Math.floorMod(sg, groups.toLong))
-        .distinct
+    val ver = IndexManifest.resolve(path)
+    IndexBuffer.lsh(spark, path, ver) match {
+      case Some(buffered) => buffered.topK(spark, annProbes(query, dim, bits,
+        tables, probeHamming, groups, seedPrefix), query, k)
+      case None => topKAnnDiskPlan(spark, path, ver, query, dim, bits,
+        tables, k, probeHamming, groups, seedPrefix)
+    }
+  }
+
+  /** The Spark plan of [[topKAnnDisk]] over an already-resolved
+    * `version` — the path for versions over the buffer's budget, and
+    * the reference the buffered serve is checked against.
+    */
+  private[graft] def topKAnnDiskPlan(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      version: String, query: Array[Double], dim: Int, bits: Int,
+      tables: Int, k: Int, probeHamming: Int = 2, groups: Int = 64,
+      seedPrefix: String = "lsh"): DataFrame = {
+    val idx = readLshIndex(spark, path, Some(version))
+    val probes = annProbes(query, dim, bits, tables, probeHamming, groups,
+      seedPrefix)
+    val probe = probes.zipWithIndex.map { case ((sigs, grps), t) =>
       col("table") === lit(t) && col("grp").isin(grps: _*) &&
         col("sig").isin(sigs: _*)
     }.reduce(_ || _)
@@ -1160,7 +1201,7 @@ object Similarity {
       .dropDuplicates("id")
     // pending tombstones anti-join away (deleted ids are unservable
     // before any physical rewrite); post-compaction this is a no-op
-    val alive = readTombstones(spark, path) match {
+    val alive = readTombstones(spark, path, Some(version)) match {
       case Some(ids) => hits.join(broadcast(ids),
         hits("id") === ids("graft_dead_id"), "left_anti")
       case None => hits

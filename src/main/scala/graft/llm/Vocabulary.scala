@@ -359,12 +359,14 @@ object Vocabulary {
         (base.join(broadcast(tomb.select(col("id"))), Seq("id"),
           "left_anti"), agg.getLong(0), agg.getLong(1))
       } else (base, 0L, 0L)
-    postings
+    val folded = postings
       .select(col("id"), col("dl"), col("term"), col("tf"), col("bkt"))
+    folded
       .repartition(col("bkt"))
       .sortWithinPartitions(col("term"))
       .write.mode("overwrite").partitionBy("bkt")
       .parquet(s"$staged/postings")
+    IndexManifest.keepSchema(folded, s"$staged/postings", "bkt")
     val old = IndexManifest.readArtifact(spark, path, "stats", m.base)
       .select(col("n_docs").cast("long"), col("sum_dl").cast("long"))
       .collect().head
@@ -384,16 +386,44 @@ object Vocabulary {
     * postings drop before df counts, and n_docs/avgdl recombine from
     * the exact integer sums — serve over a deleted index is
     * bit-identical to a rebuild over the surviving corpus.
+    *
+    * The read resolves the committed version once
+    * ([[IndexManifest.resolve]]). A version whose `postings`, `stats`
+    * and `tombstones` decode within the driver-side buffer's budget
+    * (1/32 of the driver's max heap, in decoded bytes; see
+    * `IndexBuffer`) is decoded once, and every read of it is then
+    * answered in this JVM with no Spark job, as a local
+    * `DataFrame` with the same rows, scores and schema as the plan
+    * below; the first read after each commit pays the decode. A bigger
+    * version runs the Spark plan, whose query terms compile to a
+    * closed `bkt` list that prunes the postings directories.
     */
   def bm25Disk(spark: org.apache.spark.sql.SparkSession, path: String,
       queryTerms: Seq[String], k1: Double = 1.5, b: Double = 0.75,
       topK: Int = 20, buckets: Int = 64): DataFrame = {
     require(queryTerms.nonEmpty, "bm25 needs at least one query term")
-    // ONE pointer resolution per query: every artifact read below
-    // comes from the same committed version, so a concurrent
-    // append/delete/compact can never serve a mixed index
-    val ver = IndexManifest.current(path)
-    require(ver.isDefined, s"no committed index at $path")
+    // ONE pointer resolution per query: every artifact read comes from
+    // the same committed version, so a concurrent append/delete/compact
+    // can never serve a mixed index
+    val ver = IndexManifest.resolve(path)
+    IndexBuffer.bm25(spark, path, ver) match {
+      case Some(buffered) =>
+        buffered.topK(spark, queryTerms, k1, b, topK, buckets)
+      case None => bm25DiskPlan(spark, path, ver, queryTerms, k1, b, topK,
+        buckets)
+    }
+  }
+
+  /** The Spark plan of [[bm25Disk]] over an already-resolved `version`
+    * — the path for versions over the buffer's budget, and the
+    * reference the buffered serve is checked against.
+    */
+  private[graft] def bm25DiskPlan(spark: org.apache.spark.sql.SparkSession,
+      path: String, version: String, queryTerms: Seq[String],
+      k1: Double = 1.5, b: Double = 0.75, topK: Int = 20,
+      buckets: Int = 64): DataFrame = {
+    require(queryTerms.nonEmpty, "bm25 needs at least one query term")
+    val ver = Some(version)
     val stats0 = IndexManifest.readArtifact(spark, path, "stats", ver)
     val bkts = queryTerms.map(termBucket(_, buckets)).distinct
     val postings0 = IndexManifest.readArtifact(spark, path, "postings", ver)

@@ -35,6 +35,28 @@ class CosineExprSpec extends SparkSpec {
     assert(out(3).isNullAt(0))
   }
 
+  test("NaN or infinite elements give NaN, not null, in eval and codegen") {
+    val nan = Double.NaN
+    val inf = Double.PositiveInfinity
+    val rows = Seq(
+      (0, Seq(1.0, nan), Seq(1.0, 2.0)),    // NaN element
+      (1, Seq(inf, 1.0), Seq(1.0, 2.0)),    // infinite element
+      (2, Seq(nan, 0.0), Seq(0.0, 0.0)),    // zero norm wins: null
+      (3, Seq(1.0, 2.0), Seq(2.0, 4.0)))    // finite
+    val literal = rows.toDF("i", "a", "b")
+    val path = java.nio.file.Files.createTempDirectory("cos_nan").toString
+    literal.write.mode("overwrite").parquet(path)
+    // a literal frame evaluates interpreted; the parquet scan codegens
+    Seq(literal, spark.read.parquet(path)).foreach { df =>
+      val out = df.select(col("i"), GraftFunctions.cosine(col("a"), col("b")))
+        .collect().sortBy(_.getInt(0))
+        .map(r => if (r.isNullAt(1)) None else Some(r.getDouble(1)))
+      assert(out(0).exists(_.isNaN) && out(1).exists(_.isNaN), out.toSeq)
+      assert(out(2).isEmpty, out.toSeq)
+      assert(out(3).exists(c => math.abs(c - 1.0) < 1e-12), out.toSeq)
+    }
+  }
+
   test("registered via SparkSessionExtensions and callable from SQL") {
     // injectFunction path without rebuilding the session: register into
     // the live registry through the same descriptor the extension uses

@@ -125,8 +125,9 @@ class IndexListingSpec extends SparkSpec {
       val idx = Similarity.readLshIndex(spark, dir)
       assert(Seq("table", "grp").forall(idx.columns.contains))
       val query = Array.tabulate(dim)(j => if (j == 0) 1.0 else 0.05)
-      val served = Similarity.topKAnnDisk(spark, dir, query, dim = dim,
-        bits = bits, tables = tables, k = 5, groups = groups)
+      val served = Similarity.topKAnnDiskPlan(spark, dir,
+        IndexManifest.resolve(dir), query, dim = dim, bits = bits,
+        tables = tables, k = 5, groups = groups)
       val scans = walkExecutedPlan(served.queryExecution.executedPlan)
         .collect { case s: FileSourceScanExec => s }
       assert(scans.nonEmpty)

@@ -31,6 +31,19 @@ class IndexManifestSpec extends SparkSpec {
 
   private def disarm(): Unit = IndexManifest.failpoint = _ => ()
 
+  /** The root's directories besides `pins/`, which holds no pin: a
+    * read decodes its version under a reader pin, so a root that has
+    * been read keeps an empty `pins/` beside its versions.
+    */
+  private def rootDirs(path: String): Set[String] = {
+    val pins = Option(new java.io.File(path, IndexManifest.PinsDir).list())
+      .toSeq.flatten
+    assert(pins.isEmpty, s"leaked reader pins: $pins")
+    new java.io.File(path).listFiles()
+      .filter(f => f.isDirectory && f.getName != IndexManifest.PinsDir)
+      .map(_.getName).toSet
+  }
+
   /** Age a whole tree past the stage TTL — GC's abandonment signal is
     * the NEWEST mtime anywhere in the stage tree, so every file must
     * look idle, not just the top dir. The heartbeat file carries its
@@ -91,8 +104,7 @@ class IndexManifestSpec extends SparkSpec {
       .filter(f => f.isDirectory && f.getName.startsWith("stage-"))
       .foreach(ageTree)
     IndexManifest.gc(path)
-    val vdirs = new java.io.File(path).listFiles()
-      .filter(_.isDirectory).map(_.getName).toSet
+    val vdirs = rootDirs(path)
     assert(vdirs == IndexManifest.history(path).toSet,
       s"GC left dirs outside the retained lineage: $vdirs")
   }
@@ -183,8 +195,7 @@ class IndexManifestSpec extends SparkSpec {
     // age the whole stage tree past the TTL: the next commit reaps it
     ageTree(new java.io.File(staged))
     Similarity.deleteFromLshIndex(df.filter(col("id") === 1), "id", path)
-    val vdirs = new java.io.File(path).listFiles()
-      .filter(_.isDirectory).map(_.getName).toSet
+    val vdirs = rootDirs(path)
     assert(!vdirs.contains(stageName),
       s"abandoned stage dir survived GC past its TTL: $vdirs")
     assert(vdirs == IndexManifest.history(path).toSet,
@@ -309,8 +320,7 @@ class IndexManifestSpec extends SparkSpec {
     val pre = annServe(path)
     val h = IndexManifest.history(path)
     assert(h.size == 2, s"commit should retain the superseded version: $h")
-    def vdirs = new java.io.File(path).listFiles()
-      .filter(_.isDirectory).map(_.getName).toSet
+    def vdirs = rootDirs(path)
     assert(vdirs == h.toSet)
     IndexManifest.expireVersions(path, keep = 1)
     assert(IndexManifest.history(path) == Seq(h.head),
@@ -328,8 +338,7 @@ class IndexManifestSpec extends SparkSpec {
       IndexManifest.commit(path, v, retain = retain)
       v
     }
-    def vdirs = new java.io.File(path).listFiles()
-      .filter(_.isDirectory).map(_.getName).toSet
+    def vdirs = rootDirs(path)
     // a lazy reader that resolved v1 survives TWO subsequent commits
     // when the writer declares the wider window …
     val v1 = mutate(retain = 3); val v2 = mutate(retain = 3)

@@ -180,9 +180,11 @@ class LshDiskSpec extends SparkSpec {
       Similarity.multiTableIndex(df, "vec", "id", dim = dim, bits = bits,
         tables = tables), dir, groups = groups)
     val query = Array.tabulate(dim)(j => if (j == 1) 1.0 else 0.05)
-    val served = Similarity.topKAnnDisk(spark, dir, query, dim = dim,
-      bits = bits, tables = tables, k = 5, probeHamming = 1,
-      groups = groups)
+    // the Spark plan: the path of versions over the driver-side
+    // buffer's budget
+    val served = Similarity.topKAnnDiskPlan(spark, dir,
+      IndexManifest.resolve(dir), query, dim = dim, bits = bits,
+      tables = tables, k = 5, probeHamming = 1, groups = groups)
     served.collect()
     val scan = walkExecutedPlan(served.queryExecution.executedPlan)
       .collect { case s: FileSourceScanExec => s }

@@ -285,6 +285,38 @@ class MockS3ManifestSpec extends SparkSpec {
     assertMockShape(root, local)
   }
 
+  test("a mocks3 root wiped and rebuilt between two reads serves the " +
+      "rebuilt index, not the buffered decode of the wiped one (its " +
+      "prefixes have no mtime)") {
+    val (root, _) = mockRoot("wipe")
+    def build(lo: Int): Unit = {
+      val docs = (lo until lo + 30).map { i =>
+        (i.toLong, s"w$i apple shared${i % 5} " +
+          (if (i % 3 == 0) "banana" else "cherry"))
+      }.toDF("doc_id", "text")
+      MockS3FileSystem.allowCopyRename = true
+      try Vocabulary.writeBm25Index(docs, "doc_id", "text", root, buckets = 4)
+      finally MockS3FileSystem.allowCopyRename = false
+    }
+    def serve() =
+      Vocabulary.bm25Disk(spark, root, Seq("apple", "banana"), topK = 10,
+          buckets = 4)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    build(0)
+    val before = serve()
+    val version = IndexManifest.current(root)
+    IndexManifest.ioFor(root).rmTree(root)
+    build(100)
+    assert(IndexManifest.current(root) == version,
+      "the rebuild did not reuse the wiped root's version name")
+    val after = serve()
+    assert(after.map(_._1).forall(_ >= 100),
+      s"the rebuilt root served the wiped root's ids: $after (was $before)")
+    assert(after == Vocabulary.bm25DiskPlan(spark, root, version.get,
+        Seq("apple", "banana"), topK = 10, buckets = 4)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+  }
+
   test("reader pins hold versions across mutation chains on mocks3, " +
       "and a released pin frees them for expiry") {
     val (root, _) = mockRoot("pin")

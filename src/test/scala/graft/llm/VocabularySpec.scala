@@ -91,8 +91,13 @@ class VocabularySpec extends SparkSpec {
     val got = disk.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got == mem, s"disk=$got mem=$mem")
     // bucket routing prunes partitions: only the query terms' buckets
-    // are listed
-    val scans = walkExecutedPlan(disk.queryExecution.executedPlan)
+    // are listed by the Spark plan (the path of versions over the
+    // driver-side buffer's budget)
+    val plan = Vocabulary.bm25DiskPlan(spark, path,
+      IndexManifest.resolve(path), terms, topK = 10, buckets = buckets)
+    assert(plan.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
+      mem)
+    val scans = walkExecutedPlan(plan.queryExecution.executedPlan)
       .collect {
         case s: org.apache.spark.sql.execution.FileSourceScanExec => s
       }
