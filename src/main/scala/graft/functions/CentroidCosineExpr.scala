@@ -15,12 +15,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * separate cosine expressions per row: k array traversals of wasted
   * compute, and — the actual observed cost at k≈30 — a generated
   * method large enough that codegen compilation dominated the whole
-  * radii job (2.2 s of a 4.4 s cold IVF+PQ build, measured in
-  * `tools/ProfileIvfPq`). This expression embeds the centroid matrix
-  * as a codegen reference object, precomputes each centroid's squared
-  * norm in the SAME i-ascending accumulation order
-  * [[CosineSimilarityExpr]] uses — so results are bit-identical to
-  * the composable form — and emits a single loop.
+  * radii job (2.2 s of a 4.4 s cold IVF+PQ build). This expression
+  * embeds the centroid matrix as a codegen reference object,
+  * precomputes each centroid's squared norm in the SAME i-ascending
+  * accumulation order [[CosineSimilarityExpr]] uses — so results are
+  * bit-identical to the composable form — and emits a single loop.
   *
   * Null semantics (mirroring [[CosineSimilarityExpr]] on the selected
   * centroid): null inputs, length mismatch, null element, zero-norm

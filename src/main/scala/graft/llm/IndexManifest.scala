@@ -388,7 +388,8 @@ object IndexManifest {
   }
 
   /** Physical directories composing artifact `name` of `version`
-    * (default: the current version) — THE read-path resolver, uniform
+    * (None, a writer's base on an empty root: no directories) — THE
+    * read-path resolver, uniform
     * across layouts: the version's own `name/` dir if it rewrote or
     * appended the artifact, plus every location its `FILES` listing
     * carries (always empty on `link` roots, whose carry materializes
@@ -398,12 +399,13 @@ object IndexManifest {
     * chains.
     */
   def artifactPaths(root: String, name: String,
-      version: Option[String] = None): Seq[String] =
-    version.orElse(current(root)).toSeq
+      version: Option[String]): Seq[String] =
+    version.toSeq
       .flatMap(v => physicalPaths(root, v, name))
       .map(rel => s"$root/$rel")
 
-  /** Read artifact `name` (of `version`, default current) as one
+  /** Read artifact `name` of `version` (readers pass
+    * [[resolve]]'s version, writers their mutation's base) as one
     * DataFrame across however many physical locations compose it.
     * Locations are read ONE PER SCAN and unioned (a multi-path read
     * would demand a shared partition-discovery basePath, which
@@ -415,7 +417,7 @@ object IndexManifest {
     */
   def readArtifact(spark: org.apache.spark.sql.SparkSession,
       root: String, name: String,
-      version: Option[String] = None): org.apache.spark.sql.DataFrame = {
+      version: Option[String]): org.apache.spark.sql.DataFrame = {
     val paths = artifactPaths(root, name, version)
     require(paths.nonEmpty,
       s"index artifact '$name' missing at $root (version=$version)")
@@ -463,7 +465,7 @@ object IndexManifest {
     * the optional-artifact probe (tombstones, level-0 deltas).
     */
   def artifactNonEmpty(root: String, name: String,
-      version: Option[String] = None): Boolean =
+      version: Option[String]): Boolean =
     artifactPaths(root, name, version)
       .exists(p => ioFor(root).hasParquet(p))
 

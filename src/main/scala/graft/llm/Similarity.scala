@@ -938,7 +938,8 @@ object Similarity {
       probeHamming: Int = 2, groups: Int = 64,
       seedPrefix: String = "lsh"): DataFrame = {
     val v = col(vecCol).cast("array<double>")
-    val idx = readLshIndex(spark, path)
+    val ver = IndexManifest.resolve(path)
+    val idx = readLshIndex(spark, path, Some(ver))
     val qSigCols = (0 until tables).map { t =>
       val planes = hyperplanes(dim, bits, s"$seedPrefix/t$t")
       struct(lit(t).as("table"), signature(v, planes).as("sig")).as(s"s$t")
@@ -957,8 +958,16 @@ object Similarity {
       .withColumn("grp", pmod(col("sig"), lit(groups.toLong)))
     val qVecs = broadcast(queries.select(col(idCol).as("query_id"),
       v.as("graft_knn_qv")))
-    idx.join(broadcast(qProbes), Seq("table", "grp", "sig"))
+    val hits = idx.join(broadcast(qProbes), Seq("table", "grp", "sig"))
       .select(col("query_id"), col("id"), col("vec"))
+    // pending tombstones of the same version anti-join away, as in
+    // topKAnnDiskPlan: a deleted id is never a neighbour
+    val alive = readTombstones(spark, path, Some(ver)) match {
+      case Some(ids) => hits.join(broadcast(ids),
+        hits("id") === ids("graft_dead_id"), "left_anti")
+      case None => hits
+    }
+    alive
       .dropDuplicates("query_id", "id")
       .join(qVecs, Seq("query_id"))
       .select(col("query_id"), col("id"),
@@ -1124,10 +1133,13 @@ object Similarity {
       Some(IndexManifest.readArtifact(spark, path, "tombstones", version))
     else None
 
+  /** The `data` artifact of `version`: readers pass
+    * [[IndexManifest.resolve]]'s version, writers their mutation's
+    * base.
+    */
   def readLshIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, version: Option[String] = None): DataFrame = {
-    val df = IndexManifest.readArtifact(spark, path, "data",
-      Some(version.getOrElse(IndexManifest.resolve(path))))
+      path: String, version: Option[String]): DataFrame = {
+    val df = IndexManifest.readArtifact(spark, path, "data", version)
     df.select(col("id"), col("vec"), col("sig"),
       col("table").cast("int").as("table"),
       col("grp").cast("long").as("grp"))
@@ -1246,7 +1258,8 @@ object Similarity {
     // fused own-centroid cosine: the composable element_at(array(k
     // cosines), cell+1) form planned k cosine expressions per row and
     // its codegen COMPILATION dominated the radii job at k≈30
-    // (ProfileIvfPq: 2.2 s → ~0.5 s); results are bit-identical
+    // (a cold IVF+PQ build's radii job: 2.2 s → ~0.5 s); results
+    // are bit-identical
     val ccos = graft.functions.GraftFunctions.centroidCosine(
       col("vec"), col("cell").cast("int"), centroids)
     val angle = when(ccos.isNull, lit(math.Pi))

@@ -80,10 +80,10 @@ object Catalog {
       .cast("double")
 
   /** Freshness stamp of source parquet paths (name:length:mtime of
-    * every part file) — the gate that makes a persisted layout
-    * investment (bucketed tables, disk indexes) rebuild exactly when
-    * the fixture regenerates. Shared by every build-once cache so the
-    * stamping rule can't silently diverge between them.
+    * every part file) — what `stampGate` compares, so a persisted
+    * layout investment (bucketed tables, disk indexes) rebuilds exactly
+    * when the fixture regenerates. Shared by every build-once cache so
+    * the stamping rule can't silently diverge between them.
     */
   private def sourceStamp(paths: String*): String = paths.map { p =>
     val f = new java.io.File(p)
@@ -92,6 +92,44 @@ object Catalog {
       .map(x => s"${x.getName}:${x.length}:${x.lastModified}")
       .mkString(",")
   }.mkString(";")
+
+  private val stampLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** THE build-once gate of every persisted artifact (bucketed tables,
+    * disk indexes, skip-index sidecars, the purchase graph, trained
+    * model sidecars): runs `build` unless the file at `stampPath`
+    * holds `stamp` and `present` holds. The check runs under a lock
+    * per stamp path, held until the stamp is written — a
+    * check-then-act outside it let two callers both rebuild, or read
+    * an artifact another thread was overwriting. Each path has one
+    * builder, and a nested gate (an index build that trains
+    * centroids) always locks in dependency order. The stamp is
+    * deleted before `build` and written only after it, so a build
+    * that throws or dies leaves no stamp and the next call rebuilds.
+    * `layoutRoot` names a manifest index root whose pinned layout
+    * must match the session's (`IndexManifest.freshForLayout`, which
+    * wipes a mismatched root).
+    */
+  private[queries] def stampGate(stampPath: String, stamp: String,
+      layoutRoot: Option[String] = None, present: => Boolean = true)(
+      build: => Unit): Unit =
+    stampLocks.computeIfAbsent(stampPath, _ => new Object).synchronized {
+      // layout gate FIRST and unconditional: a stale stamp must not
+      // short-circuit past the mismatched-layout wipe (the rebuild
+      // would stage onto the old-layout root and fake certification)
+      val layoutOk = layoutRoot.forall(graft.llm.IndexManifest.freshForLayout)
+      val stampFile = new java.io.File(stampPath)
+      val fresh = layoutOk && stampFile.exists() &&
+        scala.util.Try(java.nio.file.Files.readString(stampFile.toPath))
+          .toOption.contains(stamp) && present
+      if (!fresh) {
+        stampFile.delete(): Unit
+        build
+        stampFile.getAbsoluteFile.getParentFile.mkdirs()
+        java.nio.file.Files.writeString(stampFile.toPath, stamp): Unit
+      }
+    }
 
   // ---------------------------------------------------------------- agg
 
@@ -2791,7 +2829,6 @@ object Catalog {
     * subsequent join is shuffle-free. Oracle = the same join from the
     * unbucketed originals.
     */
-  private val joinBucketedLock = new Object
   val joinBucketed = RegisteredQuery(
     "join_bucketed",
     (s, d) => {
@@ -2822,36 +2859,23 @@ object Catalog {
       // join output either way, and a missing/corrupt table simply
       // fails the read loudly.
       val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-      val stampFile = new java.io.File(wh, s"graft_bucketed_stamp_$tag.txt")
       val stamp = sourceStamp(s"$d/orders.parquet", s"$d/lineitem.parquet")
-      // the freshness check runs INSIDE the lock (and the lock is held
-      // until the stamp is written): a check-then-act outside it let two
-      // concurrent invocations both see !fresh and rebuild twice, and a
-      // caller that judged the tables fresh could read them while
-      // another thread was mid drop/overwrite
-      joinBucketedLock.synchronized {
-        val fresh = stampFile.exists() &&
-          scala.util.Try(java.nio.file.Files.readString(stampFile.toPath))
-            .toOption.contains(stamp) &&
-          s.catalog.tableExists(s"graft_orders_b_$tag") &&
-          s.catalog.tableExists(s"graft_lineitem_b_$tag")
-        if (!fresh) {
-          resetTable(s"graft_orders_b_$tag")
-          resetTable(s"graft_lineitem_b_$tag")
-          // bucket only the columns the join consumes — the layout
-          // investment is priced by bytes written, and a bucketed copy is
-          // a materialized view, not a backup
-          Tables.orders(s, d)
-            .select(col("o_orderkey"), col("o_orderpriority"))
-            .write.mode("overwrite").bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-            .saveAsTable(s"graft_orders_b_$tag")
-          Tables.lineitem(s, d)
-            .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
-            .write.mode("overwrite").bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-            .saveAsTable(s"graft_lineitem_b_$tag")
-          stampFile.getParentFile.mkdirs()
-          java.nio.file.Files.writeString(stampFile.toPath, stamp): Unit
-        }
+      stampGate(s"$wh/graft_bucketed_stamp_$tag.txt", stamp,
+          present = s.catalog.tableExists(s"graft_orders_b_$tag") &&
+            s.catalog.tableExists(s"graft_lineitem_b_$tag")) {
+        resetTable(s"graft_orders_b_$tag")
+        resetTable(s"graft_lineitem_b_$tag")
+        // bucket only the columns the join consumes — the layout
+        // investment is priced by bytes written, and a bucketed copy is
+        // a materialized view, not a backup
+        Tables.orders(s, d)
+          .select(col("o_orderkey"), col("o_orderpriority"))
+          .write.mode("overwrite").bucketBy(8, "o_orderkey").sortBy("o_orderkey")
+          .saveAsTable(s"graft_orders_b_$tag")
+        Tables.lineitem(s, d)
+          .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
+          .write.mode("overwrite").bucketBy(8, "l_orderkey").sortBy("l_orderkey")
+          .saveAsTable(s"graft_lineitem_b_$tag")
       }
       s.table(s"graft_lineitem_b_$tag").hint("merge")
         .join(s.table(s"graft_orders_b_$tag"),
@@ -4544,28 +4568,19 @@ object Catalog {
     * a hash-partitioned layout isn't SQL-replayable, but the returned
     * ROWS are layout-independent, so the oracle checks them exactly.
     */
-  private val bloomSkipLock = new Object
   val lookupBloomSkip = RegisteredQuery(
     "lookup_bloom_skip",
     (s, d) => {
       import graft.relational.BloomSkipIndex
       val tbl = s"/tmp/graft_bloom_tbl_${dirTag(d)}"
       val idx = s"/tmp/graft_bloom_idx_${dirTag(d)}"
-      val stampFile = new java.io.File(s"$idx.stamp")
       val stamp = sourceStamp(s"$d/lineitem.parquet")
-      bloomSkipLock.synchronized {
-        val fresh = stampFile.exists() &&
-          scala.util.Try(java.nio.file.Files.readString(stampFile.toPath))
-            .toOption.contains(stamp)
-        if (!fresh) {
-          stampFile.delete(): Unit
-          val li = Tables.lineitem(s, d)
-          li.repartition(16, col("l_suppkey"))
-            .write.mode("overwrite").parquet(tbl)
-          BloomSkipIndex.build(s, tbl, "l_orderkey", idx,
-            expectedPerFile = math.max(li.count() / 8, 64L))
-          java.nio.file.Files.writeString(stampFile.toPath, stamp): Unit
-        }
+      stampGate(s"$idx.stamp", stamp) {
+        val li = Tables.lineitem(s, d)
+        li.repartition(16, col("l_suppkey"))
+          .write.mode("overwrite").parquet(tbl)
+        BloomSkipIndex.build(s, tbl, "l_orderkey", idx,
+          expectedPerFile = math.max(li.count() / 8, 64L))
       }
       val key = Tables.lineitem(s, d)
         .agg(max(col("l_orderkey"))).collect().head.getLong(0)
@@ -4597,28 +4612,19 @@ object Catalog {
     * random layout are pinned in MinMaxSkipIndexSpec; the returned
     * ROWS are layout-independent, so the oracle checks them exactly.
     */
-  private val minmaxSkipLock = new Object
   val lookupMinmaxSkip = RegisteredQuery(
     "lookup_minmax_skip",
     (s, d) => {
       import graft.relational.MinMaxSkipIndex
       val tbl = s"/tmp/graft_minmax_tbl_${dirTag(d)}"
       val idx = s"/tmp/graft_minmax_idx_${dirTag(d)}"
-      val stampFile = new java.io.File(s"$idx.stamp")
       val stamp = sourceStamp(s"$d/lineitem.parquet")
-      minmaxSkipLock.synchronized {
-        val fresh = stampFile.exists() &&
-          scala.util.Try(java.nio.file.Files.readString(stampFile.toPath))
-            .toOption.contains(stamp)
-        if (!fresh) {
-          stampFile.delete(): Unit
-          Tables.lineitem(s, d)
-            .repartitionByRange(16, col("l_orderkey"))
-            .sortWithinPartitions(col("l_orderkey"))
-            .write.mode("overwrite").parquet(tbl)
-          MinMaxSkipIndex.build(s, tbl, "l_orderkey", idx)
-          java.nio.file.Files.writeString(stampFile.toPath, stamp): Unit
-        }
+      stampGate(s"$idx.stamp", stamp) {
+        Tables.lineitem(s, d)
+          .repartitionByRange(16, col("l_orderkey"))
+          .sortWithinPartitions(col("l_orderkey"))
+          .write.mode("overwrite").parquet(tbl)
+        MinMaxSkipIndex.build(s, tbl, "l_orderkey", idx)
       }
       val maxOk = Tables.lineitem(s, d)
         .agg(max(col("l_orderkey"))).collect().head.getLong(0)
@@ -5735,6 +5741,41 @@ object Catalog {
       SELECT doc_id, rn, term, tf, df FROM r WHERE rn <= 3
       ORDER BY doc_id, rn"""))
 
+  /** The BM25 oracle's scoring CTEs (`t` through `sc`, k1=1.5, b=0.75,
+    * query terms dup/spark/join) over `documents` plus `where`, the
+    * clause of the queries that score a surviving corpus. The hybrid
+    * retrieval oracles extend these CTEs.
+    */
+  private def bm25OracleCtes(where: String = ""): String =
+    raw"""WITH t AS (
+        SELECT doc_id,
+          regexp_split_to_array(trim(regexp_replace(lower(text),
+            '[^\p{L}\p{Nd}]+', ' ', 'g')), ' ') AS toks
+        FROM documents$where),
+      d AS (SELECT doc_id, toks, len(toks) AS dl FROM t),
+      stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM d),
+      hit AS (SELECT doc_id, dl, unnest(toks) AS term FROM d),
+      tf AS (
+        SELECT doc_id, dl, term, count(*) AS tf FROM hit
+        WHERE term IN ('dup', 'spark', 'join') GROUP BY doc_id, dl, term),
+      df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
+      sc AS (
+        SELECT tf.doc_id,
+          round(sum(ln(1.0 + (stats.n_docs - df.df + 0.5) / (df.df + 0.5)) *
+            (tf.tf * 2.5) /
+            (tf.tf + 1.5 * (0.25 + 0.75 * tf.dl / stats.avgdl))), 4)
+            AS score
+        FROM tf JOIN df USING (term) CROSS JOIN stats
+        GROUP BY tf.doc_id)"""
+
+  /** The BM25 top-20 oracle shared by every BM25 query, in memory or
+    * on disk (see `bm25OracleCtes` for `where`).
+    */
+  private def bm25OracleSql(where: String = ""): String =
+    bm25OracleCtes(where) + """
+      SELECT doc_id, score FROM sc
+      ORDER BY score DESC, doc_id LIMIT 20"""
+
   /** BM25 retrieval over the corpus for a 3-term query mixing one rare
     * term (`dup`, df≈25 — high idf) with two common ones — the scorer
     * a training-data pipeline uses for targeted corpus search and
@@ -5752,28 +5793,7 @@ object Catalog {
         Tables.documents(s, d), "doc_id", "text",
         queryTerms = Seq("dup", "spark", "join"), topK = 20)
         .withColumnRenamed("id", "doc_id"),
-    Some("""WITH t AS (
-        SELECT doc_id,
-          regexp_split_to_array(trim(regexp_replace(lower(text),
-            '[^\p{L}\p{Nd}]+', ' ', 'g')), ' ') AS toks
-        FROM documents),
-      d AS (SELECT doc_id, toks, len(toks) AS dl FROM t),
-      stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM d),
-      hit AS (SELECT doc_id, dl, unnest(toks) AS term FROM d),
-      tf AS (
-        SELECT doc_id, dl, term, count(*) AS tf FROM hit
-        WHERE term IN ('dup', 'spark', 'join') GROUP BY doc_id, dl, term),
-      df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-      sc AS (
-        SELECT tf.doc_id,
-          round(sum(ln(1.0 + (stats.n_docs - df.df + 0.5) / (df.df + 0.5)) *
-            (tf.tf * 2.5) /
-            (tf.tf + 1.5 * (0.25 + 0.75 * tf.dl / stats.avgdl))), 4)
-            AS score
-        FROM tf JOIN df USING (term) CROSS JOIN stats
-        GROUP BY tf.doc_id)
-      SELECT doc_id, score FROM sc
-      ORDER BY score DESC, doc_id LIMIT 20"""))
+    Some(bm25OracleSql()))
 
   /** BM25 served from the DISK inverted index ([[graft.llm.Vocabulary
     * .writeBm25Index]]/[[graft.llm.Vocabulary.bm25Disk]]): postings
@@ -5784,56 +5804,22 @@ object Catalog {
     * or re-tokenization at serve time. Identical scoring arithmetic to
     * `doc_bm25` ⇒ shares its oracle.
     */
-  private val bm25DiskLock = new Object
   val docBm25Disk = RegisteredQuery(
     "doc_bm25_disk",
     (s, d) => {
       import graft.llm.Vocabulary
       val path = s"/tmp/graft_bm25_${dirTag(d)}"
-      val stampFile = new java.io.File(s"$path.stamp")
       val stamp = sourceStamp(s"$d/documents.parquet")
-      bm25DiskLock.synchronized {
-        // layout gate FIRST and unconditional: a stale stamp must not
-        // short-circuit past the mismatched-layout wipe (the rebuild
-        // would stage onto the old-layout root and fake certification)
-        val layoutOk = graft.llm.IndexManifest.freshForLayout(path)
-        val fresh = layoutOk && stampFile.exists() &&
-          scala.util.Try(java.nio.file.Files.readString(stampFile.toPath))
-            .toOption.contains(stamp)
-        if (!fresh) {
-          stampFile.delete(): Unit
-          Vocabulary.writeBm25Index(Tables.documents(s, d), "doc_id",
-            "text", path, buckets = 16)
-          java.nio.file.Files.writeString(stampFile.toPath, stamp): Unit
-        }
+      stampGate(s"$path.stamp", stamp, layoutRoot = Some(path)) {
+        Vocabulary.writeBm25Index(Tables.documents(s, d), "doc_id",
+          "text", path, buckets = 16)
       }
       Vocabulary.bm25Disk(s, path,
           queryTerms = Seq("dup", "spark", "join"), topK = 20,
           buckets = 16)
         .withColumnRenamed("id", "doc_id")
     },
-    Some("""WITH t AS (
-        SELECT doc_id,
-          regexp_split_to_array(trim(regexp_replace(lower(text),
-            '[^\p{L}\p{Nd}]+', ' ', 'g')), ' ') AS toks
-        FROM documents),
-      d AS (SELECT doc_id, toks, len(toks) AS dl FROM t),
-      stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM d),
-      hit AS (SELECT doc_id, dl, unnest(toks) AS term FROM d),
-      tf AS (
-        SELECT doc_id, dl, term, count(*) AS tf FROM hit
-        WHERE term IN ('dup', 'spark', 'join') GROUP BY doc_id, dl, term),
-      df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-      sc AS (
-        SELECT tf.doc_id,
-          round(sum(ln(1.0 + (stats.n_docs - df.df + 0.5) / (df.df + 0.5)) *
-            (tf.tf * 2.5) /
-            (tf.tf + 1.5 * (0.25 + 0.75 * tf.dl / stats.avgdl))), 4)
-            AS score
-        FROM tf JOIN df USING (term) CROSS JOIN stats
-        GROUP BY tf.doc_id)
-      SELECT doc_id, score FROM sc
-      ORDER BY score DESC, doc_id LIMIT 20"""))
+    Some(bm25OracleSql()))
 
   /** INCREMENTAL BM25 index maintenance ([[graft.llm.Vocabulary
     * .appendBm25Index]]): the base inverted index builds from the
@@ -5858,116 +5844,48 @@ object Catalog {
     * rebuild over the survivors would. The oracle IS that rebuild:
     * the full BM25 replay over `documents` minus the deleted tenth.
     */
-  private val bm25DeleteLock = new Object
   val docBm25Delete = RegisteredQuery(
     "doc_bm25_delete",
     (s, d) => {
       import graft.llm.{Similarity, Vocabulary}
       val path = s"/tmp/graft_bm25_del_${dirTag(d)}"
-      val stampFile = new java.io.File(s"$path.stamp")
       val stamp = sourceStamp(s"$d/documents.parquet")
-      bm25DeleteLock.synchronized {
-        // layout gate FIRST and unconditional: a stale stamp must not
-        // short-circuit past the mismatched-layout wipe (the rebuild
-        // would stage onto the old-layout root and fake certification)
-        val layoutOk = graft.llm.IndexManifest.freshForLayout(path)
-        val fresh = layoutOk && stampFile.exists() &&
-          scala.util.Try(java.nio.file.Files.readString(stampFile.toPath))
-            .toOption.contains(stamp)
-        if (!fresh) {
-          stampFile.delete(): Unit
-          // a rebuild starts a fresh manifest version with no
-          // tombstones — nothing to clear explicitly
-          val docs = Tables.documents(s, d)
-          Vocabulary.writeBm25Index(docs, "doc_id", "text", path,
-            buckets = 16)
-          val doomed = docs.filter(col("doc_id") % 10 === 3)
-            .select(col("doc_id")).collect().map(_.getLong(0)).toSeq
-          Vocabulary.deleteBm25Index(s, path, doomed)
-          java.nio.file.Files.writeString(stampFile.toPath, stamp): Unit
-        }
+      stampGate(s"$path.stamp", stamp, layoutRoot = Some(path)) {
+        // a rebuild starts a fresh manifest version with no
+        // tombstones — nothing to clear explicitly
+        val docs = Tables.documents(s, d)
+        Vocabulary.writeBm25Index(docs, "doc_id", "text", path,
+          buckets = 16)
+        val doomed = docs.filter(col("doc_id") % 10 === 3)
+          .select(col("doc_id")).collect().map(_.getLong(0)).toSeq
+        Vocabulary.deleteBm25Index(s, path, doomed)
       }
       Vocabulary.bm25Disk(s, path,
           queryTerms = Seq("dup", "spark", "join"), topK = 20,
           buckets = 16)
         .withColumnRenamed("id", "doc_id")
     },
-    Some("""WITH t AS (
-        SELECT doc_id,
-          regexp_split_to_array(trim(regexp_replace(lower(text),
-            '[^\p{L}\p{Nd}]+', ' ', 'g')), ' ') AS toks
-        FROM documents WHERE doc_id % 10 <> 3),
-      d AS (SELECT doc_id, toks, len(toks) AS dl FROM t),
-      stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM d),
-      hit AS (SELECT doc_id, dl, unnest(toks) AS term FROM d),
-      tf AS (
-        SELECT doc_id, dl, term, count(*) AS tf FROM hit
-        WHERE term IN ('dup', 'spark', 'join') GROUP BY doc_id, dl, term),
-      df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-      sc AS (
-        SELECT tf.doc_id,
-          round(sum(ln(1.0 + (stats.n_docs - df.df + 0.5) / (df.df + 0.5)) *
-            (tf.tf * 2.5) /
-            (tf.tf + 1.5 * (0.25 + 0.75 * tf.dl / stats.avgdl))), 4)
-            AS score
-        FROM tf JOIN df USING (term) CROSS JOIN stats
-        GROUP BY tf.doc_id)
-      SELECT doc_id, score FROM sc
-      ORDER BY score DESC, doc_id LIMIT 20"""))
+    Some(bm25OracleSql(" WHERE doc_id % 10 <> 3")))
 
-  private val bm25AppendLock = new Object
   val docBm25Append = RegisteredQuery(
     "doc_bm25_append",
     (s, d) => {
       import graft.llm.Vocabulary
       val path = s"/tmp/graft_bm25_app_${dirTag(d)}"
-      val stampFile = new java.io.File(s"$path.stamp")
       val stamp = sourceStamp(s"$d/documents.parquet")
-      bm25AppendLock.synchronized {
-        // layout gate FIRST and unconditional: a stale stamp must not
-        // short-circuit past the mismatched-layout wipe (the rebuild
-        // would stage onto the old-layout root and fake certification)
-        val layoutOk = graft.llm.IndexManifest.freshForLayout(path)
-        val fresh = layoutOk && stampFile.exists() &&
-          scala.util.Try(java.nio.file.Files.readString(stampFile.toPath))
-            .toOption.contains(stamp)
-        if (!fresh) {
-          stampFile.delete(): Unit
-          val docs = Tables.documents(s, d)
-          Vocabulary.writeBm25Index(docs.filter(col("doc_id") % 3 =!= 0),
-            "doc_id", "text", path, buckets = 16)
-          Vocabulary.appendBm25Index(docs.filter(col("doc_id") % 3 === 0),
-            "doc_id", "text", path, buckets = 16)
-          java.nio.file.Files.writeString(stampFile.toPath, stamp): Unit
-        }
+      stampGate(s"$path.stamp", stamp, layoutRoot = Some(path)) {
+        val docs = Tables.documents(s, d)
+        Vocabulary.writeBm25Index(docs.filter(col("doc_id") % 3 =!= 0),
+          "doc_id", "text", path, buckets = 16)
+        Vocabulary.appendBm25Index(docs.filter(col("doc_id") % 3 === 0),
+          "doc_id", "text", path, buckets = 16)
       }
       Vocabulary.bm25Disk(s, path,
           queryTerms = Seq("dup", "spark", "join"), topK = 20,
           buckets = 16)
         .withColumnRenamed("id", "doc_id")
     },
-    Some("""WITH t AS (
-        SELECT doc_id,
-          regexp_split_to_array(trim(regexp_replace(lower(text),
-            '[^\p{L}\p{Nd}]+', ' ', 'g')), ' ') AS toks
-        FROM documents),
-      d AS (SELECT doc_id, toks, len(toks) AS dl FROM t),
-      stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM d),
-      hit AS (SELECT doc_id, dl, unnest(toks) AS term FROM d),
-      tf AS (
-        SELECT doc_id, dl, term, count(*) AS tf FROM hit
-        WHERE term IN ('dup', 'spark', 'join') GROUP BY doc_id, dl, term),
-      df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-      sc AS (
-        SELECT tf.doc_id,
-          round(sum(ln(1.0 + (stats.n_docs - df.df + 0.5) / (df.df + 0.5)) *
-            (tf.tf * 2.5) /
-            (tf.tf + 1.5 * (0.25 + 0.75 * tf.dl / stats.avgdl))), 4)
-            AS score
-        FROM tf JOIN df USING (term) CROSS JOIN stats
-        GROUP BY tf.doc_id)
-      SELECT doc_id, score FROM sc
-      ORDER BY score DESC, doc_id LIMIT 20"""))
+    Some(bm25OracleSql()))
 
   /** HYBRID sparse+dense retrieval with Reciprocal Rank Fusion
     * ([[graft.llm.Retrieval.hybridRrf]]) — the RAG serving shape: a
@@ -5993,26 +5911,7 @@ object Catalog {
         queryTerms = Seq("dup", "spark", "join"), queryVec = queryVec,
         nPerList = 50, k = 10)
     },
-    Some("""WITH t AS (
-        SELECT doc_id,
-          regexp_split_to_array(trim(regexp_replace(lower(text),
-            '[^\p{L}\p{Nd}]+', ' ', 'g')), ' ') AS toks
-        FROM documents),
-      d AS (SELECT doc_id, toks, len(toks) AS dl FROM t),
-      stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM d),
-      hit AS (SELECT doc_id, dl, unnest(toks) AS term FROM d),
-      tf AS (
-        SELECT doc_id, dl, term, count(*) AS tf FROM hit
-        WHERE term IN ('dup', 'spark', 'join') GROUP BY doc_id, dl, term),
-      df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-      sc AS (
-        SELECT tf.doc_id,
-          round(sum(ln(1.0 + (stats.n_docs - df.df + 0.5) / (df.df + 0.5)) *
-            (tf.tf * 2.5) /
-            (tf.tf + 1.5 * (0.25 + 0.75 * tf.dl / stats.avgdl))), 4)
-            AS score
-        FROM tf JOIN df USING (term) CROSS JOIN stats
-        GROUP BY tf.doc_id),
+    Some(bm25OracleCtes() + """,
       sparse AS (
         SELECT doc_id,
           CAST(row_number() OVER (ORDER BY score DESC, doc_id)
@@ -6092,26 +5991,7 @@ object Catalog {
           col("cum_tok"), col("rrf"))
         .orderBy(col("rrf_rank"))
     },
-    Some("""WITH t AS (
-        SELECT doc_id,
-          regexp_split_to_array(trim(regexp_replace(lower(text),
-            '[^\p{L}\p{Nd}]+', ' ', 'g')), ' ') AS toks
-        FROM documents),
-      d AS (SELECT doc_id, toks, len(toks) AS dl FROM t),
-      stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM d),
-      hit AS (SELECT doc_id, dl, unnest(toks) AS term FROM d),
-      tf AS (
-        SELECT doc_id, dl, term, count(*) AS tf FROM hit
-        WHERE term IN ('dup', 'spark', 'join') GROUP BY doc_id, dl, term),
-      df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-      sc AS (
-        SELECT tf.doc_id,
-          round(sum(ln(1.0 + (stats.n_docs - df.df + 0.5) / (df.df + 0.5)) *
-            (tf.tf * 2.5) /
-            (tf.tf + 1.5 * (0.25 + 0.75 * tf.dl / stats.avgdl))), 4)
-            AS score
-        FROM tf JOIN df USING (term) CROSS JOIN stats
-        GROUP BY tf.doc_id),
+    Some(bm25OracleCtes() + """,
       sparse AS (
         SELECT doc_id,
           CAST(row_number() OVER (ORDER BY score DESC, doc_id)
@@ -6542,33 +6422,21 @@ object Catalog {
   // rebuild; otherwise the graph reads back as a plain parquet scan.
   // Correctness never depends on the stamp — all three graph oracles
   // recompute the relation from the raw tables in SQL.
-  private val purchaseGraphLock = new Object
   private def purchaseGraphFor(s: SparkSession, d: String): DataFrame = {
     val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     val tag = dirTag(d)
     val dataDir = new java.io.File(wh, s"graft_purchase_graph_$tag")
-    val stampFile = new java.io.File(wh,
-      s"graft_purchase_graph_stamp_$tag.txt")
     val stamp = sourceStamp(s"$d/orders.parquet", s"$d/lineitem.parquet")
-    // freshness check inside the lock, lock held through the stamp
-    // write — same races as the bucketed-table gate
-    purchaseGraphLock.synchronized {
-      val fresh = stampFile.exists() &&
-        scala.util.Try(java.nio.file.Files.readString(stampFile.toPath))
-          .toOption.contains(stamp) &&
-        new java.io.File(dataDir, "_SUCCESS").exists()
-      if (!fresh) {
-        Tables.orders(s, d)
-          .select(col("o_orderkey"), col("o_custkey"))
-          .join(Tables.lineitem(s, d)
-            .select(col("l_orderkey"), col("l_suppkey")),
-            col("o_orderkey") === col("l_orderkey"))
-          .select(col("o_custkey").as("c"), col("l_suppkey").as("sup"))
-          .distinct()
-          .write.mode("overwrite").parquet(dataDir.getPath)
-        stampFile.getParentFile.mkdirs()
-        java.nio.file.Files.writeString(stampFile.toPath, stamp): Unit
-      }
+    stampGate(s"$wh/graft_purchase_graph_stamp_$tag.txt", stamp,
+        present = new java.io.File(dataDir, "_SUCCESS").exists()) {
+      Tables.orders(s, d)
+        .select(col("o_orderkey"), col("o_custkey"))
+        .join(Tables.lineitem(s, d)
+          .select(col("l_orderkey"), col("l_suppkey")),
+          col("o_orderkey") === col("l_orderkey"))
+        .select(col("o_custkey").as("c"), col("l_suppkey").as("sup"))
+        .distinct()
+        .write.mode("overwrite").parquet(dataDir.getPath)
     }
     s.read.parquet(dataDir.getPath)
   }
@@ -7396,6 +7264,26 @@ $union
         unnest(generate_series(1, len(embedding))) AS t(i)
       GROUP BY 1, 2 ORDER BY 1, 2"""))
 
+  /** The exact cosine top-10 oracle against the vec_id=0 embedding,
+    * shared by every top-10 vector query (brute force, LSH, IVF,
+    * IVF×PQ, in memory or on disk). `where` follows
+    * `FROM embeddings, q` and restricts the corpus to the survivors
+    * of a delete.
+    */
+  private def cosineTop10OracleSql(where: String = ""): String =
+    s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
+      SELECT vec_id,
+        round(list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]), 6)
+          AS score
+      FROM embeddings, q$where
+      ORDER BY list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]) DESC,
+        vec_id LIMIT 10"""
+
+  /** `cosineTop10OracleSql`'s clause for the `*_delete` queries,
+    * which take down every `vec_id % 50 == 7`.
+    */
+  private final val DeleteSurvivorsWhere = "\n      WHERE vec_id % 50 <> 7"
+
   /** Brute-force cosine top-10 against the vec_id=0 embedding — exact,
     * oracle-checked against DuckDB's list_cosine_similarity. Spark plans
     * TakeOrderedAndProject (per-partition heaps, no global sort).
@@ -7411,13 +7299,7 @@ $union
       Similarity.topKBrute(emb, "embedding", "vec_id", query, 10)
         .select(col("vec_id"), round(col("score"), 6).as("score"))
     },
-    Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-      SELECT vec_id,
-        round(list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]), 6)
-          AS score
-      FROM embeddings, q
-      ORDER BY list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]) DESC,
-        vec_id LIMIT 10"""))
+    Some(cosineTop10OracleSql()))
 
   /** Multi-table LSH ANN top-10: candidates from 8 bitsFor-scaled
     * tables, exact cosine on the candidate union. Approximate by
@@ -7443,13 +7325,7 @@ $union
           dim = query.length, bits = bits, tables = 8, k = 10)
         .select(col("id").as("vec_id"), round(col("score"), 6).as("score"))
     },
-    Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-      SELECT vec_id,
-        round(list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]), 6)
-          AS score
-      FROM embeddings, q
-      ORDER BY list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]) DESC,
-        vec_id LIMIT 10"""))
+    Some(cosineTop10OracleSql()))
 
   // Trained centroid sets / PQ codebooks are INDEX artifacts: a pure,
   // deterministic function of (corpus, fixed params), built once and
@@ -7462,33 +7338,23 @@ $union
   // over the corpus. The stamp gates freshness; a stale or corrupt
   // sidecar rebuilds loudly-deterministically (goldens in PqSpec pin
   // train ≡ reload).
-  private val modelDiskLock = new Object
 
-  /** Stamp-gated build-once of a driver-sized trained artifact with
-    * parquet sidecar persistence. `load` must throw on a missing or
-    * torn sidecar — the gate then falls back to `build` + `save` under
-    * the same lock (check-then-act races rebuild twice or read a
-    * mid-overwrite sidecar otherwise).
+  /** Load-or-rebuild of a driver-sized trained artifact with parquet
+    * sidecar persistence, through `stampGate` on `path.stamp`.
+    * `load` must throw on a missing or torn sidecar — a failed load
+    * counts as absent, and the gate then runs `build` + `save`.
     */
   private def stampedModel[T](path: String, stamp: String)(load: => T)(
-      build: => T)(save: T => Unit): T =
-    modelDiskLock.synchronized {
-      val stampFile = new java.io.File(s"$path.stamp")
-      val fresh = stampFile.exists() &&
-        scala.util.Try(java.nio.file.Files.readString(stampFile.toPath))
-          .toOption.contains(stamp)
-      if (fresh) {
-        scala.util.Try(load) match {
-          case scala.util.Success(t) => return t
-          case scala.util.Failure(_) => () // torn sidecar: rebuild below
-        }
-      }
-      stampFile.delete(): Unit
+      build: => T)(save: T => Unit): T = {
+    var model: Option[T] = None
+    stampGate(s"$path.stamp", stamp,
+        present = { model = scala.util.Try(load).toOption; model.isDefined }) {
       val t = build
       save(t)
-      java.nio.file.Files.writeString(stampFile.toPath, stamp): Unit
-      t
+      model = Some(t)
     }
+    model.get
+  }
 
   private val centroidCache = new java.util.concurrent.ConcurrentHashMap[
     String, (Array[Array[Double]], Array[Double])]()
@@ -7542,9 +7408,9 @@ $union
     * centroids, PQ codebooks) so a re-timing pass pays the same jobs a
     * cold process would — Bench's second pass calls this to keep
     * min-of-2 numbers honest. Checkpointed frames are released to the
-    * ContextCleaner by dropping the reference. STAMP-GATED DISK
-    * artifacts (bucketed tables, disk indexes, the purchase graph, and
-    * since r13 the trained centroid/codebook sidecars) are
+    * ContextCleaner by dropping the reference. The DISK artifacts
+    * behind `stampGate` (bucketed tables, disk indexes, the purchase
+    * graph, and since r13 the trained centroid/codebook sidecars) are
     * deliberately NOT reset: they model warehouse state a daily job
     * would find already built, and their build cost is priced
     * separately by their stamps' cold path — a cold process re-LOADS
@@ -7633,13 +7499,7 @@ $union
           nprobe = math.max(2, cells / 4))
         .select(col("id").as("vec_id"), round(col("score"), 6).as("score"))
     },
-    Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-      SELECT vec_id,
-        round(list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]), 6)
-          AS score
-      FROM embeddings, q
-      ORDER BY list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]) DESC,
-        vec_id LIMIT 10"""))
+    Some(cosineTop10OracleSql()))
 
   /** The disk-serving path of the IVF index: the index is WRITTEN
     * partitioned by cell and the probe runs against the read-back
@@ -7649,7 +7509,6 @@ $union
     * same write-time-investment contract as `join_bucketed`. Exact by
     * construction, so it shares the brute-force oracle.
     */
-  private val ivfDiskLock = new Object
   val simTopkIvfDisk = RegisteredQuery(
     "sim_topk_ivf_disk",
     (s, d) => {
@@ -7663,35 +7522,17 @@ $union
       val path = s"/tmp/graft_ivf_${dirTag(d)}"
       // build-once/serve-many for real: the write is stamp-gated like
       // every other disk index (it was an every-run rewrite until r13)
-      val stampFile = new java.io.File(s"$path.stamp")
       val stamp = sourceStamp(s"$d/embeddings.parquet")
-      ivfDiskLock.synchronized {
-        // layout gate FIRST and unconditional: a stale stamp must not
-        // short-circuit past the mismatched-layout wipe (the rebuild
-        // would stage onto the old-layout root and fake certification)
-        val layoutOk = graft.llm.IndexManifest.freshForLayout(path)
-        val fresh = layoutOk && stampFile.exists() &&
-          scala.util.Try(java.nio.file.Files.readString(stampFile.toPath))
-            .toOption.contains(stamp)
-        if (!fresh) {
-          stampFile.delete(): Unit
-          Similarity.writeIvfIndex(
-            Similarity.ivfIndex(emb, "embedding", "vec_id", cents), path)
-          java.nio.file.Files.writeString(stampFile.toPath, stamp): Unit
-        }
+      stampGate(s"$path.stamp", stamp, layoutRoot = Some(path)) {
+        Similarity.writeIvfIndex(
+          Similarity.ivfIndex(emb, "embedding", "vec_id", cents), path)
       }
       val disk = Similarity.readIvfIndex(s, path)
       Similarity.topKIvfExact(disk, query, cents, radii, k = 10,
           nprobe = math.max(2, cells / 4))
         .select(col("id").as("vec_id"), round(col("score"), 6).as("score"))
     },
-    Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-      SELECT vec_id,
-        round(list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]), 6)
-          AS score
-      FROM embeddings, q
-      ORDER BY list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]) DESC,
-        vec_id LIMIT 10"""))
+    Some(cosineTop10OracleSql()))
 
   /** END-TO-END LLM DATA-PREP PIPELINE — the five stages a training
     * corpus actually passes through, COMPOSED in one dataflow: exact
@@ -7826,7 +7667,6 @@ $union
     * or breaks the layout fails hash equality. The fragmentation and
     * file-count collapse themselves are pinned in LshDiskSpec.
     */
-  private val lshCompactLock = new Object
   val simTopkAnnCompact = RegisteredQuery(
     "sim_topk_ann_compact",
     (s, d) => {
@@ -7837,44 +7677,26 @@ $union
         .collect().head.getSeq[Double](0).toArray
       val bits = Similarity.bitsFor(emb.count())
       val path = s"/tmp/graft_lsh_cpt_${dirTag(d)}"
-      val stampFile = new java.io.File(s"$path.stamp")
       val stamp = sourceStamp(s"$d/embeddings.parquet")
-      lshCompactLock.synchronized {
-        // layout gate FIRST and unconditional: a stale stamp must not
-        // short-circuit past the mismatched-layout wipe (the rebuild
-        // would stage onto the old-layout root and fake certification)
-        val layoutOk = graft.llm.IndexManifest.freshForLayout(path)
-        val fresh = layoutOk && stampFile.exists() &&
-          scala.util.Try(java.nio.file.Files.readString(stampFile.toPath))
-            .toOption.contains(stamp)
-        if (!fresh) {
-          stampFile.delete(): Unit
-          Similarity.writeLshIndex(
-            Similarity.multiTableIndex(
-              emb.filter(col("vec_id") % 3 === 0), "embedding", "vec_id",
-              dim = query.length, bits = bits, tables = 8),
-            path, groups = 16)
-          (1 until 3).foreach { r =>
-            Similarity.appendLshIndex(
-              emb.filter(col("vec_id") % 3 === r), "embedding", "vec_id",
-              path, dim = query.length, bits = bits, tables = 8,
-              groups = 16)
-          }
-          Similarity.compactLshIndex(s, path)
-          java.nio.file.Files.writeString(stampFile.toPath, stamp): Unit
+      stampGate(s"$path.stamp", stamp, layoutRoot = Some(path)) {
+        Similarity.writeLshIndex(
+          Similarity.multiTableIndex(
+            emb.filter(col("vec_id") % 3 === 0), "embedding", "vec_id",
+            dim = query.length, bits = bits, tables = 8),
+          path, groups = 16)
+        (1 until 3).foreach { r =>
+          Similarity.appendLshIndex(
+            emb.filter(col("vec_id") % 3 === r), "embedding", "vec_id",
+            path, dim = query.length, bits = bits, tables = 8,
+            groups = 16)
         }
+        Similarity.compactLshIndex(s, path)
       }
       Similarity.topKAnnDisk(s, path, query, dim = query.length,
           bits = bits, tables = 8, k = 10, groups = 16)
         .select(col("id").as("vec_id"), round(col("score"), 6).as("score"))
     },
-    Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-      SELECT vec_id,
-        round(list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]), 6)
-          AS score
-      FROM embeddings, q
-      ORDER BY list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]) DESC,
-        vec_id LIMIT 10"""))
+    Some(cosineTop10OracleSql()))
 
   /** Index DELETION ([[graft.llm.Similarity.deleteFromLshIndex]]) —
     * the removal verb completing the lifecycle (build → append →
@@ -7888,7 +7710,6 @@ $union
     * breaks hash equality. Physical folding at compaction is pinned
     * in LshDiskSpec.
     */
-  private val lshDeleteLock = new Object
   val simTopkAnnDelete = RegisteredQuery(
     "sim_topk_ann_delete",
     (s, d) => {
@@ -7899,40 +7720,21 @@ $union
         .collect().head.getSeq[Double](0).toArray
       val bits = Similarity.bitsFor(emb.count())
       val path = s"/tmp/graft_lsh_del_${dirTag(d)}"
-      val stampFile = new java.io.File(s"$path.stamp")
       val stamp = sourceStamp(s"$d/embeddings.parquet")
-      lshDeleteLock.synchronized {
-        // layout gate FIRST and unconditional: a stale stamp must not
-        // short-circuit past the mismatched-layout wipe (the rebuild
-        // would stage onto the old-layout root and fake certification)
-        val layoutOk = graft.llm.IndexManifest.freshForLayout(path)
-        val fresh = layoutOk && stampFile.exists() &&
-          scala.util.Try(java.nio.file.Files.readString(stampFile.toPath))
-            .toOption.contains(stamp)
-        if (!fresh) {
-          stampFile.delete(): Unit
-          Similarity.clearTombstones(path)
-          Similarity.writeLshIndex(
-            Similarity.multiTableIndex(emb, "embedding", "vec_id",
-              dim = query.length, bits = bits, tables = 8),
-            path, groups = 16)
-          Similarity.deleteFromLshIndex(
-            emb.filter(col("vec_id") % 50 === 7), "vec_id", path)
-          java.nio.file.Files.writeString(stampFile.toPath, stamp): Unit
-        }
+      stampGate(s"$path.stamp", stamp, layoutRoot = Some(path)) {
+        Similarity.clearTombstones(path)
+        Similarity.writeLshIndex(
+          Similarity.multiTableIndex(emb, "embedding", "vec_id",
+            dim = query.length, bits = bits, tables = 8),
+          path, groups = 16)
+        Similarity.deleteFromLshIndex(
+          emb.filter(col("vec_id") % 50 === 7), "vec_id", path)
       }
       Similarity.topKAnnDisk(s, path, query, dim = query.length,
           bits = bits, tables = 8, k = 10, groups = 16)
         .select(col("id").as("vec_id"), round(col("score"), 6).as("score"))
     },
-    Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-      SELECT vec_id,
-        round(list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]), 6)
-          AS score
-      FROM embeddings, q
-      WHERE vec_id % 50 <> 7
-      ORDER BY list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]) DESC,
-        vec_id LIMIT 10"""))
+    Some(cosineTop10OracleSql(DeleteSurvivorsWhere)))
 
   /** INCREMENTAL IVF index maintenance ([[graft.llm.Similarity
     * .appendIvfIndex]]): centroids train on the HISTORY slice only —
@@ -7947,7 +7749,6 @@ $union
     */
   private val histCentroidCache =
     new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Double]]]()
-  private val ivfAppendLock = new Object
   val simTopkIvfAppend = RegisteredQuery(
     "sim_topk_ivf_append",
     (s, d) => {
@@ -7961,25 +7762,13 @@ $union
         Similarity.kmeansCentroids(hist, "embedding", "vec_id",
           k = Similarity.cellsFor(hist.count()), iters = 2))
       val path = s"/tmp/graft_ivf_app_${dirTag(d)}"
-      val stampFile = new java.io.File(s"$path.stamp")
       val stamp = sourceStamp(s"$d/embeddings.parquet")
-      ivfAppendLock.synchronized {
-        // layout gate FIRST and unconditional: a stale stamp must not
-        // short-circuit past the mismatched-layout wipe (the rebuild
-        // would stage onto the old-layout root and fake certification)
-        val layoutOk = graft.llm.IndexManifest.freshForLayout(path)
-        val fresh = layoutOk && stampFile.exists() &&
-          scala.util.Try(java.nio.file.Files.readString(stampFile.toPath))
-            .toOption.contains(stamp)
-        if (!fresh) {
-          stampFile.delete(): Unit
-          Similarity.writeIvfIndex(
-            Similarity.ivfIndex(hist, "embedding", "vec_id", cents), path)
-          Similarity.appendIvfIndex(
-            emb.filter(col("vec_id") % 10 === 0), "embedding", "vec_id",
-            path, cents)
-          java.nio.file.Files.writeString(stampFile.toPath, stamp): Unit
-        }
+      stampGate(s"$path.stamp", stamp, layoutRoot = Some(path)) {
+        Similarity.writeIvfIndex(
+          Similarity.ivfIndex(hist, "embedding", "vec_id", cents), path)
+        Similarity.appendIvfIndex(
+          emb.filter(col("vec_id") % 10 === 0), "embedding", "vec_id",
+          path, cents)
       }
       val disk = Similarity.readIvfIndex(s, path)
       val radii = Similarity.cellRadii(disk, cents)
@@ -7987,13 +7776,7 @@ $union
           nprobe = math.max(2, cents.length / 4))
         .select(col("id").as("vec_id"), round(col("score"), 6).as("score"))
     },
-    Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-      SELECT vec_id,
-        round(list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]), 6)
-          AS score
-      FROM embeddings, q
-      ORDER BY list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]) DESC,
-        vec_id LIMIT 10"""))
+    Some(cosineTop10OracleSql()))
 
   /** DELETE on the disk IVF index
     * ([[graft.llm.Similarity.deleteFromIvfIndex]]) — removal symmetry
@@ -8005,7 +7788,6 @@ $union
     * the folded frame only tighten — so the oracle is brute force
     * over the surviving corpus, same contract as the other deletes.
     */
-  private val ivfDeleteLock = new Object
   val simTopkIvfDelete = RegisteredQuery(
     "sim_topk_ivf_delete",
     (s, d) => {
@@ -8016,25 +7798,13 @@ $union
         .collect().head.getSeq[Double](0).toArray
       val cents = centroidsFor(s, d)
       val path = s"/tmp/graft_ivf_del_${dirTag(d)}"
-      val stampFile = new java.io.File(s"$path.stamp")
       val stamp = sourceStamp(s"$d/embeddings.parquet")
-      ivfDeleteLock.synchronized {
-        // layout gate FIRST and unconditional: a stale stamp must not
-        // short-circuit past the mismatched-layout wipe (the rebuild
-        // would stage onto the old-layout root and fake certification)
-        val layoutOk = graft.llm.IndexManifest.freshForLayout(path)
-        val fresh = layoutOk && stampFile.exists() &&
-          scala.util.Try(java.nio.file.Files.readString(stampFile.toPath))
-            .toOption.contains(stamp)
-        if (!fresh) {
-          stampFile.delete(): Unit
-          Similarity.clearTombstones(path)
-          Similarity.writeIvfIndex(
-            Similarity.ivfIndex(emb, "embedding", "vec_id", cents), path)
-          Similarity.deleteFromIvfIndex(
-            emb.filter(col("vec_id") % 50 === 7), "vec_id", path)
-          java.nio.file.Files.writeString(stampFile.toPath, stamp): Unit
-        }
+      stampGate(s"$path.stamp", stamp, layoutRoot = Some(path)) {
+        Similarity.clearTombstones(path)
+        Similarity.writeIvfIndex(
+          Similarity.ivfIndex(emb, "embedding", "vec_id", cents), path)
+        Similarity.deleteFromIvfIndex(
+          emb.filter(col("vec_id") % 50 === 7), "vec_id", path)
       }
       val disk = Similarity.readIvfIndex(s, path)
       val radii = Similarity.cellRadii(disk, cents)
@@ -8042,14 +7812,7 @@ $union
           nprobe = math.max(2, cents.length / 4))
         .select(col("id").as("vec_id"), round(col("score"), 6).as("score"))
     },
-    Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-      SELECT vec_id,
-        round(list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]), 6)
-          AS score
-      FROM embeddings, q
-      WHERE vec_id % 50 <> 7
-      ORDER BY list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]) DESC,
-        vec_id LIMIT 10"""))
+    Some(cosineTop10OracleSql(DeleteSurvivorsWhere)))
 
   /** Product-quantization ANN: byte-packed PQ codes (16 B/row vs
     * 256 B raw — the representation that serves a 100 TB embedding
@@ -8076,13 +7839,7 @@ $union
           k = 10, shortlist = 100)
         .select(col("vec_id"), round(col("score"), 6).as("score"))
     },
-    Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-      SELECT vec_id,
-        round(list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]), 6)
-          AS score
-      FROM embeddings, q
-      ORDER BY list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]) DESC,
-        vec_id LIMIT 10"""))
+    Some(cosineTop10OracleSql()))
 
   /** IVF×PQ composed (the two scale levers at once): angular cell
     * bounds prune which rows the query READS — exactly, via the
@@ -8111,13 +7868,26 @@ $union
           shortlist = 100)
         .select(col("vec_id"), round(col("score"), 6).as("score"))
     },
-    Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-      SELECT vec_id,
-        round(list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]), 6)
-          AS score
-      FROM embeddings, q
-      ORDER BY list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]) DESC,
-        vec_id LIMIT 10"""))
+    Some(cosineTop10OracleSql()))
+
+  /** Stamp-gated build-once of the shared disk LSH index over the full
+    * embeddings fixture (tables=8, groups=16) — serves every
+    * disk-LSH-reading query (`sim_topk_ann_disk`,
+    * `sim_knn_join_ann_disk`). Returns the index path.
+    */
+  private def ensureLshDiskIndex(s: SparkSession, d: String, dim: Int,
+      bits: Int): String = {
+    import graft.llm.Similarity
+    val path = s"/tmp/graft_lsh_${dirTag(d)}"
+    val stamp = sourceStamp(s"$d/embeddings.parquet")
+    stampGate(s"$path.stamp", stamp, layoutRoot = Some(path)) {
+      Similarity.writeLshIndex(
+        Similarity.multiTableIndex(Tables.embeddings(s, d), "embedding",
+          "vec_id", dim = dim, bits = bits, tables = 8),
+        path, groups = 16)
+    }
+    path
+  }
 
   /** The disk-SERVING path of multi-table LSH ANN — build-once/
     * serve-many for the hyperplane family, completing the lifecycle
@@ -8129,39 +7899,6 @@ $union
     * row-group stats. Same probe math as `sim_topk_ann` ⇒ same exact
     * top-10 oracle.
     */
-  private val lshDiskLock = new Object
-
-  /** Stamp-gated build-once of the shared disk LSH index over the full
-    * embeddings fixture (tables=8, groups=16) — serves every
-    * disk-LSH-reading query (`sim_topk_ann_disk`,
-    * `sim_knn_join_ann_disk`). Returns the index path.
-    */
-  private def ensureLshDiskIndex(s: SparkSession, d: String, dim: Int,
-      bits: Int): String = {
-    import graft.llm.Similarity
-    val path = s"/tmp/graft_lsh_${dirTag(d)}"
-    val stampFile = new java.io.File(s"$path.stamp")
-    val stamp = sourceStamp(s"$d/embeddings.parquet")
-    lshDiskLock.synchronized {
-      // layout gate FIRST and unconditional: a stale stamp must not
-      // short-circuit past the mismatched-layout wipe (the rebuild
-      // would stage onto the old-layout root and fake certification)
-      val layoutOk = graft.llm.IndexManifest.freshForLayout(path)
-      val fresh = layoutOk && stampFile.exists() &&
-        scala.util.Try(java.nio.file.Files.readString(stampFile.toPath))
-          .toOption.contains(stamp)
-      if (!fresh) {
-        stampFile.delete(): Unit
-        Similarity.writeLshIndex(
-          Similarity.multiTableIndex(Tables.embeddings(s, d), "embedding",
-            "vec_id", dim = dim, bits = bits, tables = 8),
-          path, groups = 16)
-        java.nio.file.Files.writeString(stampFile.toPath, stamp): Unit
-      }
-    }
-    path
-  }
-
   val simTopkAnnDisk = RegisteredQuery(
     "sim_topk_ann_disk",
     (s, d) => {
@@ -8176,13 +7913,7 @@ $union
           bits = bits, tables = 8, k = 10, groups = 16)
         .select(col("id").as("vec_id"), round(col("score"), 6).as("score"))
     },
-    Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-      SELECT vec_id,
-        round(list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]), 6)
-          AS score
-      FROM embeddings, q
-      ORDER BY list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]) DESC,
-        vec_id LIMIT 10"""))
+    Some(cosineTop10OracleSql()))
 
   /** INCREMENTAL index maintenance ([[graft.llm.Similarity
     * .appendLshIndex]]): the nightly-ingest ANN lifecycle — build the
@@ -8195,7 +7926,6 @@ $union
     * lives in the DELTA, so a lost or mis-bucketed append can't score
     * its guaranteed top-1 self-match and breaks the hash instantly.
     */
-  private val lshAppendLock = new Object
   val simTopkAnnAppend = RegisteredQuery(
     "sim_topk_ann_append",
     (s, d) => {
@@ -8206,40 +7936,22 @@ $union
         .collect().head.getSeq[Double](0).toArray
       val bits = Similarity.bitsFor(emb.count())
       val path = s"/tmp/graft_lsh_app_${dirTag(d)}"
-      val stampFile = new java.io.File(s"$path.stamp")
       val stamp = sourceStamp(s"$d/embeddings.parquet")
-      lshAppendLock.synchronized {
-        // layout gate FIRST and unconditional: a stale stamp must not
-        // short-circuit past the mismatched-layout wipe (the rebuild
-        // would stage onto the old-layout root and fake certification)
-        val layoutOk = graft.llm.IndexManifest.freshForLayout(path)
-        val fresh = layoutOk && stampFile.exists() &&
-          scala.util.Try(java.nio.file.Files.readString(stampFile.toPath))
-            .toOption.contains(stamp)
-        if (!fresh) {
-          stampFile.delete(): Unit // base overwrite + append are 2 steps
-          Similarity.writeLshIndex(
-            Similarity.multiTableIndex(
-              emb.filter(col("vec_id") % 10 =!= 0), "embedding", "vec_id",
-              dim = query.length, bits = bits, tables = 8),
-            path, groups = 16)
-          Similarity.appendLshIndex(
-            emb.filter(col("vec_id") % 10 === 0), "embedding", "vec_id",
-            path, dim = query.length, bits = bits, tables = 8, groups = 16)
-          java.nio.file.Files.writeString(stampFile.toPath, stamp): Unit
-        }
+      stampGate(s"$path.stamp", stamp, layoutRoot = Some(path)) {
+        Similarity.writeLshIndex(
+          Similarity.multiTableIndex(
+            emb.filter(col("vec_id") % 10 =!= 0), "embedding", "vec_id",
+            dim = query.length, bits = bits, tables = 8),
+          path, groups = 16)
+        Similarity.appendLshIndex(
+          emb.filter(col("vec_id") % 10 === 0), "embedding", "vec_id",
+          path, dim = query.length, bits = bits, tables = 8, groups = 16)
       }
       Similarity.topKAnnDisk(s, path, query, dim = query.length,
           bits = bits, tables = 8, k = 10, groups = 16)
         .select(col("id").as("vec_id"), round(col("score"), 6).as("score"))
     },
-    Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-      SELECT vec_id,
-        round(list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]), 6)
-          AS score
-      FROM embeddings, q
-      ORDER BY list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]) DESC,
-        vec_id LIMIT 10"""))
+    Some(cosineTop10OracleSql()))
 
   /** STREAMING index maintenance ([[graft.streaming.Streams
     * .appendIndexAvailableNow]]): the embeddings corpus arrives as a
@@ -8298,13 +8010,7 @@ $union
       s.createDataFrame(
         s.sparkContext.parallelize(rows, 1), served.schema)
     },
-    Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-      SELECT vec_id,
-        round(list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]), 6)
-          AS score
-      FROM embeddings, q
-      ORDER BY list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]) DESC,
-        vec_id LIMIT 10"""))
+    Some(cosineTop10OracleSql()))
 
   /** STREAMING BM25 index maintenance ([[graft.streaming.Streams
     * .appendBm25AvailableNow]]) — the sparse twin of
@@ -8346,28 +8052,7 @@ $union
       s.createDataFrame(
         s.sparkContext.parallelize(rows, 1), served.schema)
     },
-    Some("""WITH t AS (
-        SELECT doc_id,
-          regexp_split_to_array(trim(regexp_replace(lower(text),
-            '[^\p{L}\p{Nd}]+', ' ', 'g')), ' ') AS toks
-        FROM documents),
-      d AS (SELECT doc_id, toks, len(toks) AS dl FROM t),
-      stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM d),
-      hit AS (SELECT doc_id, dl, unnest(toks) AS term FROM d),
-      tf AS (
-        SELECT doc_id, dl, term, count(*) AS tf FROM hit
-        WHERE term IN ('dup', 'spark', 'join') GROUP BY doc_id, dl, term),
-      df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-      sc AS (
-        SELECT tf.doc_id,
-          round(sum(ln(1.0 + (stats.n_docs - df.df + 0.5) / (df.df + 0.5)) *
-            (tf.tf * 2.5) /
-            (tf.tf + 1.5 * (0.25 + 0.75 * tf.dl / stats.avgdl))), 4)
-            AS score
-        FROM tf JOIN df USING (term) CROSS JOIN stats
-        GROUP BY tf.doc_id)
-      SELECT doc_id, score FROM sc
-      ORDER BY score DESC, doc_id LIMIT 20"""))
+    Some(bm25OracleSql()))
 
   /** STREAMING QUALITY ROUTER with a dead-letter side output
     * ([[graft.streaming.Streams.routeAvailableNow]]) — the DLQ shape
@@ -8520,7 +8205,6 @@ $union
     * math as `sim_topk_ivfpq`, so the brute-force oracle applies on the
     * same recall-1.0-with-margin grounds.
     */
-  private val ivfPqDiskLock = new Object
   val simTopkIvfPqDisk = RegisteredQuery(
     "sim_topk_ivfpq_disk",
     (s, d) => {
@@ -8530,28 +8214,14 @@ $union
         .select(col("embedding").cast("array<double>"))
         .collect().head.getSeq[Double](0).toArray
       val path = s"/tmp/graft_ivfpq_${dirTag(d)}"
-      val stampFile = new java.io.File(s"$path.stamp")
       val stamp = sourceStamp(s"$d/embeddings.parquet")
-      // build-once: freshness check AND build both inside the lock
-      // (the join_bucketed lesson — no check-then-act race, no reader
-      // of a half-built index)
-      ivfPqDiskLock.synchronized {
-        // layout gate FIRST and unconditional: a stale stamp must not
-        // short-circuit past the mismatched-layout wipe (the rebuild
-        // would stage onto the old-layout root and fake certification)
-        val layoutOk = graft.llm.IndexManifest.freshForLayout(path)
-        val fresh = layoutOk && stampFile.exists() &&
-          scala.util.Try(java.nio.file.Files.readString(stampFile.toPath))
-            .toOption.contains(stamp)
-        if (!fresh) {
-          val model = pqModelFor(s, d, query.length)
-          val (cents, radii) = centroidRadiiFor(s, d)
-          val index = Pq.ivfPqIndex(emb, "embedding", "vec_id", cents, model)
-            .persist()
-          Pq.writeIvfPqIndex(index, path, model, cents, radii)
-          index.unpersist(blocking = false)
-          java.nio.file.Files.writeString(stampFile.toPath, stamp): Unit
-        }
+      stampGate(s"$path.stamp", stamp, layoutRoot = Some(path)) {
+        val model = pqModelFor(s, d, query.length)
+        val (cents, radii) = centroidRadiiFor(s, d)
+        val index = Pq.ivfPqIndex(emb, "embedding", "vec_id", cents, model)
+          .persist()
+        Pq.writeIvfPqIndex(index, path, model, cents, radii)
+        index.unpersist(blocking = false)
       }
       val idx = Pq.readIvfPqIndex(s, path)
       Pq.topKIvfPq(idx.codes, emb, "embedding", "vec_id", query, idx.model,
@@ -8559,13 +8229,7 @@ $union
           nprobe = math.max(2, idx.centroids.length / 4), shortlist = 100)
         .select(col("vec_id"), round(col("score"), 6).as("score"))
     },
-    Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-      SELECT vec_id,
-        round(list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]), 6)
-          AS score
-      FROM embeddings, q
-      ORDER BY list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]) DESC,
-        vec_id LIMIT 10"""))
+    Some(cosineTop10OracleSql()))
 
   /** INCREMENTAL IVF×PQ index maintenance ([[graft.llm.Pq
     * .appendIvfPqIndex]]) — the last index family to gain the append
@@ -8582,7 +8246,6 @@ $union
     * shortlist + exact rerank ⇒ the brute oracle applies on the same
     * recall-1.0-with-margin grounds as the disk variant.
     */
-  private val ivfPqAppendLock = new Object
   val simTopkIvfPqAppend = RegisteredQuery(
     "sim_topk_ivfpq_append",
     (s, d) => {
@@ -8592,35 +8255,23 @@ $union
         .select(col("embedding").cast("array<double>"))
         .collect().head.getSeq[Double](0).toArray
       val path = s"/tmp/graft_ivfpq_app_${dirTag(d)}"
-      val stampFile = new java.io.File(s"$path.stamp")
       val stamp = sourceStamp(s"$d/embeddings.parquet")
-      ivfPqAppendLock.synchronized {
-        // layout gate FIRST and unconditional: a stale stamp must not
-        // short-circuit past the mismatched-layout wipe (the rebuild
-        // would stage onto the old-layout root and fake certification)
-        val layoutOk = graft.llm.IndexManifest.freshForLayout(path)
-        val fresh = layoutOk && stampFile.exists() &&
-          scala.util.Try(java.nio.file.Files.readString(stampFile.toPath))
-            .toOption.contains(stamp)
-        if (!fresh) {
-          stampFile.delete(): Unit
-          val hist = emb.filter(col("vec_id") % 10 =!= 0)
-          val model = Pq.trainCodebooks(hist, "embedding", "vec_id",
-            dim = query.length, m = 16, k = 64, iters = 2)
-          val cents = Similarity.kmeansCentroids(hist, "embedding",
-            "vec_id", k = Similarity.cellsFor(hist.count()), iters = 2)
-          val index = Pq.ivfPqIndex(hist, "embedding", "vec_id", cents,
-            model).persist()
-          val radii = Similarity.cellRadii(
-            index.join(hist.select(col("vec_id").as("id"),
-              col("embedding").cast("array<double>").as("vec")), "id"),
-            cents)
-          Pq.writeIvfPqIndex(index, path, model, cents, radii)
-          index.unpersist(blocking = false)
-          Pq.appendIvfPqIndex(s, emb.filter(col("vec_id") % 10 === 0),
-            "embedding", "vec_id", path)
-          java.nio.file.Files.writeString(stampFile.toPath, stamp): Unit
-        }
+      stampGate(s"$path.stamp", stamp, layoutRoot = Some(path)) {
+        val hist = emb.filter(col("vec_id") % 10 =!= 0)
+        val model = Pq.trainCodebooks(hist, "embedding", "vec_id",
+          dim = query.length, m = 16, k = 64, iters = 2)
+        val cents = Similarity.kmeansCentroids(hist, "embedding",
+          "vec_id", k = Similarity.cellsFor(hist.count()), iters = 2)
+        val index = Pq.ivfPqIndex(hist, "embedding", "vec_id", cents,
+          model).persist()
+        val radii = Similarity.cellRadii(
+          index.join(hist.select(col("vec_id").as("id"),
+            col("embedding").cast("array<double>").as("vec")), "id"),
+          cents)
+        Pq.writeIvfPqIndex(index, path, model, cents, radii)
+        index.unpersist(blocking = false)
+        Pq.appendIvfPqIndex(s, emb.filter(col("vec_id") % 10 === 0),
+          "embedding", "vec_id", path)
       }
       val idx = Pq.readIvfPqIndex(s, path)
       Pq.topKIvfPq(idx.codes, emb, "embedding", "vec_id", query, idx.model,
@@ -8628,13 +8279,7 @@ $union
           nprobe = math.max(2, idx.centroids.length / 4), shortlist = 100)
         .select(col("vec_id"), round(col("score"), 6).as("score"))
     },
-    Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-      SELECT vec_id,
-        round(list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]), 6)
-          AS score
-      FROM embeddings, q
-      ORDER BY list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]) DESC,
-        vec_id LIMIT 10"""))
+    Some(cosineTop10OracleSql()))
 
   /** DELETE on the disk IVF×PQ index ([[graft.llm.Pq
     * .deleteFromIvfPqIndex]]) — the LAST index-lifecycle verb, closing
@@ -8649,7 +8294,6 @@ $union
     * recall-1.0-with-margin grounds. Compaction's physical fold is
     * pinned bit-equal in IvfPqDiskSpec.
     */
-  private val ivfPqDeleteLock = new Object
   val simTopkIvfPqDelete = RegisteredQuery(
     "sim_topk_ivfpq_delete",
     (s, d) => {
@@ -8659,28 +8303,16 @@ $union
         .select(col("embedding").cast("array<double>"))
         .collect().head.getSeq[Double](0).toArray
       val path = s"/tmp/graft_ivfpq_del_${dirTag(d)}"
-      val stampFile = new java.io.File(s"$path.stamp")
       val stamp = sourceStamp(s"$d/embeddings.parquet")
-      ivfPqDeleteLock.synchronized {
-        // layout gate FIRST and unconditional: a stale stamp must not
-        // short-circuit past the mismatched-layout wipe (the rebuild
-        // would stage onto the old-layout root and fake certification)
-        val layoutOk = graft.llm.IndexManifest.freshForLayout(path)
-        val fresh = layoutOk && stampFile.exists() &&
-          scala.util.Try(java.nio.file.Files.readString(stampFile.toPath))
-            .toOption.contains(stamp)
-        if (!fresh) {
-          stampFile.delete(): Unit
-          val model = pqModelFor(s, d, query.length)
-          val (cents, radii) = centroidRadiiFor(s, d)
-          val index = Pq.ivfPqIndex(emb, "embedding", "vec_id", cents,
-            model).persist()
-          Pq.writeIvfPqIndex(index, path, model, cents, radii)
-          index.unpersist(blocking = false)
-          Pq.deleteFromIvfPqIndex(
-            emb.filter(col("vec_id") % 50 === 7), "vec_id", path)
-          java.nio.file.Files.writeString(stampFile.toPath, stamp): Unit
-        }
+      stampGate(s"$path.stamp", stamp, layoutRoot = Some(path)) {
+        val model = pqModelFor(s, d, query.length)
+        val (cents, radii) = centroidRadiiFor(s, d)
+        val index = Pq.ivfPqIndex(emb, "embedding", "vec_id", cents,
+          model).persist()
+        Pq.writeIvfPqIndex(index, path, model, cents, radii)
+        index.unpersist(blocking = false)
+        Pq.deleteFromIvfPqIndex(
+          emb.filter(col("vec_id") % 50 === 7), "vec_id", path)
       }
       val idx = Pq.readIvfPqIndex(s, path)
       Pq.topKIvfPq(idx.codes, emb, "embedding", "vec_id", query, idx.model,
@@ -8688,14 +8320,7 @@ $union
           nprobe = math.max(2, idx.centroids.length / 4), shortlist = 100)
         .select(col("vec_id"), round(col("score"), 6).as("score"))
     },
-    Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-      SELECT vec_id,
-        round(list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]), 6)
-          AS score
-      FROM embeddings, q
-      WHERE vec_id % 50 <> 7
-      ORDER BY list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]) DESC,
-        vec_id LIMIT 10"""))
+    Some(cosineTop10OracleSql(DeleteSurvivorsWhere)))
 
   /** Batch k-NN JOIN (the retrieval-serving shape: top-k corpus
     * neighbors PER ROW of a query table, not per single vector): 8
@@ -10417,7 +10042,6 @@ $union
     * lives in the delta), a lost delete resurrects a tombstoned id,
     * and the compact rewrites what the listing carried by reference.
     */
-  private val lshListingLock = new Object
   val simTopkAnnDiskListing = RegisteredQuery(
     "sim_topk_ann_disk_listing",
     (s, d) => {
@@ -10428,47 +10052,29 @@ $union
         .collect().head.getSeq[Double](0).toArray
       val bits = Similarity.bitsFor(emb.count())
       val path = s"/tmp/graft_lsh_lst_${dirTag(d)}"
-      val stampFile = new java.io.File(s"$path.stamp")
       val stamp = sourceStamp(s"$d/embeddings.parquet")
-      lshListingLock.synchronized {
-        IndexManifest.withLayout(IndexManifest.ListingLayout) {
-          // layout gate FIRST and unconditional: a stale stamp must not
-          // short-circuit past the mismatched-layout wipe (the rebuild
-          // would stage onto the old-layout root and fake certification)
-          val layoutOk = IndexManifest.freshForLayout(path)
-          val fresh = layoutOk && stampFile.exists() &&
-            scala.util.Try(java.nio.file.Files.readString(stampFile.toPath))
-              .toOption.contains(stamp)
-          if (!fresh) {
-            stampFile.delete(): Unit
-            Similarity.writeLshIndex(
-              Similarity.multiTableIndex(
-                emb.filter(col("vec_id") % 10 =!= 0), "embedding",
-                "vec_id", dim = query.length, bits = bits, tables = 8),
-              path, groups = 16)
-            Similarity.appendLshIndex(
-              emb.filter(col("vec_id") % 10 === 0), "embedding", "vec_id",
-              path, dim = query.length, bits = bits, tables = 8,
-              groups = 16)
-            import s.implicits._
-            Similarity.deleteFromLshIndex(
-              Seq(3L, 7L).toDF("vec_id"), "vec_id", path)
-            Similarity.compactLshIndex(s, path)
-            java.nio.file.Files.writeString(stampFile.toPath, stamp): Unit
-          }
+      IndexManifest.withLayout(IndexManifest.ListingLayout) {
+        stampGate(s"$path.stamp", stamp, layoutRoot = Some(path)) {
+          Similarity.writeLshIndex(
+            Similarity.multiTableIndex(
+              emb.filter(col("vec_id") % 10 =!= 0), "embedding",
+              "vec_id", dim = query.length, bits = bits, tables = 8),
+            path, groups = 16)
+          Similarity.appendLshIndex(
+            emb.filter(col("vec_id") % 10 === 0), "embedding", "vec_id",
+            path, dim = query.length, bits = bits, tables = 8,
+            groups = 16)
+          import s.implicits._
+          Similarity.deleteFromLshIndex(
+            Seq(3L, 7L).toDF("vec_id"), "vec_id", path)
+          Similarity.compactLshIndex(s, path)
         }
       }
       Similarity.topKAnnDisk(s, path, query, dim = query.length,
           bits = bits, tables = 8, k = 10, groups = 16)
         .select(col("id").as("vec_id"), round(col("score"), 6).as("score"))
     },
-    Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-      SELECT vec_id,
-        round(list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]), 6)
-          AS score
-      FROM embeddings, q WHERE vec_id NOT IN (3, 7)
-      ORDER BY list_cosine_similarity(embedding::DOUBLE[], qv::DOUBLE[]) DESC,
-        vec_id LIMIT 10"""))
+    Some(cosineTop10OracleSql(" WHERE vec_id NOT IN (3, 7)")))
 
   /** BM25 twin of `sim_topk_ann_disk_listing`: the sparse-retrieval
     * disk lifecycle — build(history) → append(delta) → delete → compact
@@ -10477,34 +10083,21 @@ $union
     * the integer-exact stats recombination must match a from-scratch
     * rebuild, which is what the oracle computes).
     */
-  private val bm25ListingLock = new Object
   val docBm25DiskListing = RegisteredQuery(
     "doc_bm25_disk_listing",
     (s, d) => {
       import graft.llm.{IndexManifest, Vocabulary}
       val path = s"/tmp/graft_bm25_lst_${dirTag(d)}"
-      val stampFile = new java.io.File(s"$path.stamp")
       val stamp = sourceStamp(s"$d/documents.parquet")
-      bm25ListingLock.synchronized {
-        IndexManifest.withLayout(IndexManifest.ListingLayout) {
-          // layout gate FIRST and unconditional: a stale stamp must not
-          // short-circuit past the mismatched-layout wipe (the rebuild
-          // would stage onto the old-layout root and fake certification)
-          val layoutOk = IndexManifest.freshForLayout(path)
-          val fresh = layoutOk && stampFile.exists() &&
-            scala.util.Try(java.nio.file.Files.readString(stampFile.toPath))
-              .toOption.contains(stamp)
-          if (!fresh) {
-            stampFile.delete(): Unit
-            val docs = Tables.documents(s, d)
-            Vocabulary.writeBm25Index(docs.filter(col("doc_id") % 3 =!= 0),
-              "doc_id", "text", path, buckets = 16)
-            Vocabulary.appendBm25Index(docs.filter(col("doc_id") % 3 === 0),
-              "doc_id", "text", path, buckets = 16)
-            Vocabulary.deleteBm25Index(s, path, Seq(1L, 5L))
-            Vocabulary.compactBm25Index(s, path, buckets = 16)
-            java.nio.file.Files.writeString(stampFile.toPath, stamp): Unit
-          }
+      IndexManifest.withLayout(IndexManifest.ListingLayout) {
+        stampGate(s"$path.stamp", stamp, layoutRoot = Some(path)) {
+          val docs = Tables.documents(s, d)
+          Vocabulary.writeBm25Index(docs.filter(col("doc_id") % 3 =!= 0),
+            "doc_id", "text", path, buckets = 16)
+          Vocabulary.appendBm25Index(docs.filter(col("doc_id") % 3 === 0),
+            "doc_id", "text", path, buckets = 16)
+          Vocabulary.deleteBm25Index(s, path, Seq(1L, 5L))
+          Vocabulary.compactBm25Index(s, path, buckets = 16)
         }
       }
       Vocabulary.bm25Disk(s, path,
@@ -10512,34 +10105,13 @@ $union
           buckets = 16)
         .withColumnRenamed("id", "doc_id")
     },
-    Some("""WITH t AS (
-        SELECT doc_id,
-          regexp_split_to_array(trim(regexp_replace(lower(text),
-            '[^\p{L}\p{Nd}]+', ' ', 'g')), ' ') AS toks
-        FROM documents WHERE doc_id NOT IN (1, 5)),
-      d AS (SELECT doc_id, toks, len(toks) AS dl FROM t),
-      stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM d),
-      hit AS (SELECT doc_id, dl, unnest(toks) AS term FROM d),
-      tf AS (
-        SELECT doc_id, dl, term, count(*) AS tf FROM hit
-        WHERE term IN ('dup', 'spark', 'join') GROUP BY doc_id, dl, term),
-      df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-      sc AS (
-        SELECT tf.doc_id,
-          round(sum(ln(1.0 + (stats.n_docs - df.df + 0.5) / (df.df + 0.5)) *
-            (tf.tf * 2.5) /
-            (tf.tf + 1.5 * (0.25 + 0.75 * tf.dl / stats.avgdl))), 4)
-            AS score
-        FROM tf JOIN df USING (term) CROSS JOIN stats
-        GROUP BY tf.doc_id)
-      SELECT doc_id, score FROM sc
-      ORDER BY score DESC, doc_id LIMIT 20"""))
+    Some(bm25OracleSql(" WHERE doc_id NOT IN (1, 5)")))
 
   /** Object-store BACKEND twin of `doc_bm25_disk_listing`: the same
     * build → append → delete → compact → serve lifecycle, but the
     * root is addressed by SCHEME (`file://`), which routes every
     * manifest metadata operation through
-    * [[graft.llm.HadoopManifestIo]] — sequenced immutable
+    * `graft.llm.HadoopManifestIo` — sequenced immutable
     * `MANIFEST-<seq>` commit files (conditional create as the CAS),
     * stage-into-final-dir claims with no directory rename, TTL-lease
     * commit lock, listing layout auto-pinned. Keeping this in the
@@ -10548,63 +10120,31 @@ $union
     * Shares `doc_bm25_disk_listing`'s oracle (identical surviving
     * corpus and scoring).
     */
-  private val bm25ObjectStoreLock = new Object
   val docBm25DiskObjectStore = RegisteredQuery(
     "doc_bm25_disk_object_store",
     (s, d) => {
-      import graft.llm.{IndexManifest, Vocabulary}
+      import graft.llm.Vocabulary
       val local = s"/tmp/graft_bm25_objstore_${dirTag(d)}"
       val path = s"file://$local"
-      val stampFile = new java.io.File(s"$local.stamp")
       val stamp = sourceStamp(s"$d/documents.parquet")
-      bm25ObjectStoreLock.synchronized {
-        // layout gate FIRST and unconditional (schemed roots pin
-        // listing regardless of the session default, so a link-default
-        // session must not wipe-loop here — freshForLayout compares
-        // against the layout a NEW root at this path would pin)
-        val layoutOk = IndexManifest.freshForLayout(path)
-        val fresh = layoutOk && stampFile.exists() &&
-          scala.util.Try(java.nio.file.Files.readString(stampFile.toPath))
-            .toOption.contains(stamp)
-        if (!fresh) {
-          stampFile.delete(): Unit
-          val docs = Tables.documents(s, d)
-          Vocabulary.writeBm25Index(docs.filter(col("doc_id") % 3 =!= 0),
-            "doc_id", "text", path, buckets = 16)
-          Vocabulary.appendBm25Index(docs.filter(col("doc_id") % 3 === 0),
-            "doc_id", "text", path, buckets = 16)
-          Vocabulary.deleteBm25Index(s, path, Seq(1L, 5L))
-          Vocabulary.compactBm25Index(s, path, buckets = 16)
-          java.nio.file.Files.writeString(stampFile.toPath, stamp): Unit
-        }
+      // schemed roots pin listing whatever the session default, and
+      // freshForLayout compares against the layout a NEW root at this
+      // path would pin, so a link-default session never wipe-loops here
+      stampGate(s"$local.stamp", stamp, layoutRoot = Some(path)) {
+        val docs = Tables.documents(s, d)
+        Vocabulary.writeBm25Index(docs.filter(col("doc_id") % 3 =!= 0),
+          "doc_id", "text", path, buckets = 16)
+        Vocabulary.appendBm25Index(docs.filter(col("doc_id") % 3 === 0),
+          "doc_id", "text", path, buckets = 16)
+        Vocabulary.deleteBm25Index(s, path, Seq(1L, 5L))
+        Vocabulary.compactBm25Index(s, path, buckets = 16)
       }
       Vocabulary.bm25Disk(s, path,
           queryTerms = Seq("dup", "spark", "join"), topK = 20,
           buckets = 16)
         .withColumnRenamed("id", "doc_id")
     },
-    Some("""WITH t AS (
-        SELECT doc_id,
-          regexp_split_to_array(trim(regexp_replace(lower(text),
-            '[^\p{L}\p{Nd}]+', ' ', 'g')), ' ') AS toks
-        FROM documents WHERE doc_id NOT IN (1, 5)),
-      d AS (SELECT doc_id, toks, len(toks) AS dl FROM t),
-      stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM d),
-      hit AS (SELECT doc_id, dl, unnest(toks) AS term FROM d),
-      tf AS (
-        SELECT doc_id, dl, term, count(*) AS tf FROM hit
-        WHERE term IN ('dup', 'spark', 'join') GROUP BY doc_id, dl, term),
-      df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-      sc AS (
-        SELECT tf.doc_id,
-          round(sum(ln(1.0 + (stats.n_docs - df.df + 0.5) / (df.df + 0.5)) *
-            (tf.tf * 2.5) /
-            (tf.tf + 1.5 * (0.25 + 0.75 * tf.dl / stats.avgdl))), 4)
-            AS score
-        FROM tf JOIN df USING (term) CROSS JOIN stats
-        GROUP BY tf.doc_id)
-      SELECT doc_id, score FROM sc
-      ORDER BY score DESC, doc_id LIMIT 20"""))
+    Some(bm25OracleSql(" WHERE doc_id NOT IN (1, 5)")))
 
   /** L-2/L-3/L-4/L-5 CONTRACT query — the seeded-sampling cluster's
     * registry entry (previously spec-only): randomSplit partitions the

@@ -1036,10 +1036,10 @@ object Streams {
     * one scale is wrong at the next). Each partition instantiates
     * four state stores for an interval join, so too many partitions
     * drown small inputs in store setup/commit, and too few serialize
-    * state updates on big ones. Calibrated with ProbeStreamFloor's
-    * semi-join shape (warm end-to-end): at sf0.1 (2 MB source)
-    * 2 partitions beat 8 (2.9 s vs 3.5 s); at sf1 (20 MB) 8 beat 2
-    * (3.9 s vs 5.8 s) and 32 was 2.7× worse than 8 — i.e. one
+    * state updates on big ones. Calibrated on the
+    * `streaming_join_semi` shape (warm end-to-end): at sf0.1 (2 MB
+    * source) 2 partitions beat 8 (2.9 s vs 3.5 s); at sf1 (20 MB) 8
+    * beat 2 (3.9 s vs 5.8 s) and 32 was 2.7× worse than 8 — i.e. one
     * partition per ~2.5 MB of source, clamped to [2, session shuffle
     * parallelism]. At warehouse scale the cap rules: the ops knob
     * stays `spark.sql.shuffle.partitions`, sized to the cluster.

@@ -316,7 +316,8 @@ class ConcurrentIndexWriterSpec extends SparkSpec {
     tAppend.join(120000); tDelete.join(120000)
     assert(errors.isEmpty, s"racing mutation threw: ${errors.peek()}")
     // served state = base + append delta − deleted, whatever the order
-    val served = Similarity.readLshIndex(spark, dir)
+    val served = Similarity.readLshIndex(spark, dir,
+      Some(IndexManifest.resolve(dir)))
     val dead = deadIds.toDF("graft_dead_id")
     val folded = served.join(broadcast(dead),
         served("id") === dead("graft_dead_id"), "left_anti")
@@ -326,9 +327,11 @@ class ConcurrentIndexWriterSpec extends SparkSpec {
     // delta rows survived AND the tombstone artifact is present)
     assert((200L until 240L).forall(folded.contains),
       "the append's delta was dropped by the racing delete")
-    assert(IndexManifest.artifactNonEmpty(dir, "tombstones"),
+    assert(IndexManifest.artifactNonEmpty(dir, "tombstones",
+        Some(IndexManifest.resolve(dir))),
       "the delete's tombstones were dropped by the racing append")
-    val tombIds = IndexManifest.readArtifact(spark, dir, "tombstones")
+    val tombIds = IndexManifest.readArtifact(spark, dir, "tombstones",
+        Some(IndexManifest.resolve(dir)))
       .collect().map(_.getLong(0)).toSet
     assert(tombIds == deadIds.toSet)
   }

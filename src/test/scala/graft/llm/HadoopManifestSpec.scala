@@ -1187,7 +1187,8 @@ class HadoopManifestSpec extends SparkSpec {
       assert(errs.isEmpty, s"racing mutations failed: ${errs.peek()}")
       val served = annServe(root).map(_._1).toSet
       assert(Set(0L, 1L, 2L).subsetOf(
-        Similarity.readLshIndex(spark, root).select("id")
+        Similarity.readLshIndex(spark, root,
+            Some(IndexManifest.resolve(root))).select("id")
           .collect().map(_.getLong(0)).toSet),
         "the racing append's delta was dropped")
       assert(!served.contains(33L) && !served.contains(42L),

@@ -92,7 +92,8 @@ class IndexListingSpec extends SparkSpec {
     // version dir (that is the carry the link layout does with inodes)
     // ... compact folds it back to one
     assert(IndexManifest
-      .artifactPaths(listDir, "data").size == 1) // post-compact
+      .artifactPaths(listDir, "data",
+        Some(IndexManifest.resolve(listDir))).size == 1) // post-compact
   }
 
   test("appended listing artifact spans physical version dirs, " +
@@ -117,12 +118,14 @@ class IndexListingSpec extends SparkSpec {
       assert(!IndexManifest.history(dir).contains(v1))
       assert(new java.io.File(s"$dir/$v1").isDirectory,
         "GC reaped a version still referenced by a retained listing")
-      val paths = IndexManifest.artifactPaths(dir, "data")
+      val paths = IndexManifest.artifactPaths(dir, "data",
+        Some(IndexManifest.resolve(dir)))
       assert(paths.size == 3, s"expected 3 physical dirs, got $paths")
 
       // the multi-dir read still discovers (table, grp) as partition
       // columns and the probe's closed list still PRUNES partitions
-      val idx = Similarity.readLshIndex(spark, dir)
+      val idx = Similarity.readLshIndex(spark, dir,
+        Some(IndexManifest.resolve(dir)))
       assert(Seq("table", "grp").forall(idx.columns.contains))
       val query = Array.tabulate(dim)(j => if (j == 0) 1.0 else 0.05)
       val served = Similarity.topKAnnDiskPlan(spark, dir,
@@ -143,7 +146,8 @@ class IndexListingSpec extends SparkSpec {
 
       // compaction rewrites data physically (refs dropped) ...
       Similarity.compactLshIndex(spark, dir) // v4
-      assert(IndexManifest.artifactPaths(dir, "data").size == 1)
+      assert(IndexManifest.artifactPaths(dir, "data",
+        Some(IndexManifest.resolve(dir))).size == 1)
       // ... and expiry now actually reclaims v1/v2/v3
       IndexManifest.expireVersions(dir, keep = 1)
       assert(!new java.io.File(s"$dir/$v1").exists(),

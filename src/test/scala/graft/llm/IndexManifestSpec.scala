@@ -295,7 +295,8 @@ class IndexManifestSpec extends SparkSpec {
     val expect = annServe(path)
     // the reader resolves the pointer NOW (readLshIndex is lazy — no
     // file is opened until the collect below) …
-    val inFlight = Similarity.readLshIndex(spark, path)
+    val inFlight = Similarity.readLshIndex(spark, path,
+      Some(IndexManifest.resolve(path)))
     val resolvedAt = IndexManifest.current(path).get
     // … then a writer commits a new version underneath it
     Similarity.deleteFromLshIndex(df.filter(col("id") < 100), "id", path)

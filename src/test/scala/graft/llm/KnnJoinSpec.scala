@@ -119,6 +119,38 @@ class KnnJoinSpec extends SparkSpec {
       scans.map(_.partitionFilters.mkString(", ")).mkString("\n"))
   }
 
+  test("disk ANN knn join never serves deleted ids and equals brute " +
+      "over the survivors") {
+    val df = corpus
+    val dim = 6; val bits = 4; val tables = 4; val groups = 8
+    val dir = java.nio.file.Files.createTempDirectory("lshdel").toString +
+      "/idx"
+    Similarity.writeLshIndex(
+      Similarity.multiTableIndex(df, "vec", "id", dim = dim, bits = bits,
+        tables = tables), dir, groups = groups)
+    // delete a third of every family, the query ids' own rows included,
+    // and serve with the tombstones still pending (no compaction)
+    val dead = (0L until 120L).filter(_ % 3 == 1).toSet ++ Set(0L, 2L)
+    Similarity.deleteFromLshIndex(dead.toSeq.toDF("id"), "id", dir)
+    val qDir = java.nio.file.Files.createTempDirectory("knnqdel").toString
+    df.write.mode("overwrite").parquet(qDir)
+    val queries = spark.read.parquet(qDir).filter(col("id") < 6)
+    def key(rows: Array[org.apache.spark.sql.Row]) = rows
+      .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e9)))
+      .toSet
+    val got = key(Similarity.knnJoinAnnDisk(spark, dir, queries, "vec",
+      "id", k = 4, dim = dim, bits = bits, tables = tables,
+      probeHamming = 2, groups = groups).collect())
+    val served = got.map(_._2)
+    assert((served & dead).isEmpty,
+      s"deleted ids served: ${(served & dead).toSeq.sorted}")
+    val survivors = df.filter(!col("id").isin(dead.toSeq: _*))
+    val brute = key(Similarity.knnJoinBrute(queries, survivors, "vec", "id",
+      k = 4).collect())
+    assert(got == brute,
+      s"brute-only=${brute -- got}, served-only=${got -- brute}")
+  }
+
   test("aggregator buffer stays bounded at k and orders deterministically") {
     val agg = new graft.functions.TopKMaxByScore(3)
     var buf = agg.zero

@@ -82,7 +82,8 @@ class LshDiskSpec extends SparkSpec {
       bits = bits, tables = tables, k = 5, groups = groups))
     assert(appended == rebuilt, s"appended=$appended rebuilt=$rebuilt")
     // the delta is genuinely served: delta ids appear in the index read
-    val served = Similarity.readLshIndex(spark, dir)
+    val served = Similarity.readLshIndex(spark, dir,
+      Some(IndexManifest.resolve(dir)))
       .filter(col("id") % 10 === 0).count()
     assert(served > 0, "no delta rows served from the appended index")
   }
@@ -165,7 +166,8 @@ class LshDiskSpec extends SparkSpec {
     assert(!new java.io.File(
         s"${IndexManifest.currentDir(dir)}/tombstones").exists(),
       "compaction left the tombstone set behind")
-    assert(Similarity.readLshIndex(spark, dir)
+    assert(Similarity.readLshIndex(spark, dir,
+      Some(IndexManifest.resolve(dir)))
       .filter(col("id").isin(dead.toSeq: _*)).count() == 0,
       "compaction kept tombstoned rows")
     val afterCompact = key(Similarity.topKAnnDisk(spark, dir, query,
