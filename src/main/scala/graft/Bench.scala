@@ -37,9 +37,6 @@ object Bench {
     }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // conf-gated disk-index carry layout (see Verify)
-    graft.llm.IndexManifest.DefaultLayout = spark.conf.get(
-      "spark.graft.indexLayout", graft.llm.IndexManifest.DefaultLayout)
 
     def esc(s: String): String = s.flatMap {
       case '"'  => "\\\""

@@ -88,11 +88,6 @@ object Verify {
     }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // conf-gated disk-index carry layout (link = posix hard links,
-    // listing = object-store per-version file listing): new index
-    // roots built by this run pin whatever the session chose
-    graft.llm.IndexManifest.DefaultLayout = spark.conf.get(
-      "spark.graft.indexLayout", graft.llm.IndexManifest.DefaultLayout)
     new java.io.File(outDir).mkdirs()
 
     // SPARK_GRAFT_SPILL_REPORT=1: sum task spill metrics across the

@@ -41,11 +41,6 @@ object GraftSession {
   def get(): SparkSession = {
     val s = builder().getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    // conf-gated disk-index carry layout (link|listing; see
-    // IndexManifest scaladoc) — picked up here so user sessions gate
-    // it with one spark conf
-    graft.llm.IndexManifest.DefaultLayout = s.conf.get(
-      "spark.graft.indexLayout", graft.llm.IndexManifest.DefaultLayout)
     val tz = s.conf.get("spark.sql.session.timeZone", "")
     if (tz != "UTC")
       System.err.println(s"[graft] WARN: pre-existing SparkSession has " +

@@ -63,12 +63,6 @@ import graft.functions.CosineKernel
   */
 private[graft] object IndexBuffer {
 
-  /** Test hook, fired by a decode with `(root, version)` once the
-    * version is pinned and before any of its artifacts is read.
-    */
-  @volatile private[graft] var decodeHook: (String, String) => Unit =
-    (_, _) => ()
-
   /** Largest decoded version, in bytes. */
   def versionBudgetBytes: Long = Runtime.getRuntime.maxMemory / 32
 
@@ -269,7 +263,7 @@ private[graft] object IndexBuffer {
       : Option[D] =
     decodeLock.synchronized {
       IndexManifest.withVersionPin(root, version) { _ =>
-        decodeHook(root, version)
+        IndexManifest.failpoint(s"decode:$root")
         body
       }
     }

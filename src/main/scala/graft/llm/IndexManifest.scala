@@ -61,22 +61,24 @@ package graft.llm
   * ==Carry-forward: two layouts==
   *
   * How a staged version inherits the artifacts it does NOT rewrite is
-  * chosen per ROOT at creation time (pinned in the root's `LAYOUT`
-  * file, set from [[effectiveLayout]] — conf
-  * `spark.graft.indexLayout` — by the first [[stage]]; a root never
-  * changes layout mid-life):
+  * chosen by the root's storage backend when the first [[stage]]
+  * creates it, and pinned in the root's `LAYOUT` file; a root never
+  * changes layout mid-life, and a root without the marker (built
+  * before it existed) carries as `link`:
   *
-  *   - `link` (default on posix roots): unchanged artifacts carry as
+  *   - `link` (every new posix root): unchanged artifacts carry as
   *     HARD LINKS (O(file-count) metadata ops, zero bytes copied).
-  *     Requires `Files.createLink` — local disk, NFS. Roots on a
-  *     link-less store never get this layout: [[stage]] pins
-  *     `listing` regardless of the session default there.
-  *   - `listing` (object stores — the 100 TB deployment): the staged
-  *     version records a per-version file LISTING (`FILES`: one
-  *     root-relative path per carried artifact location) instead of
-  *     linking bytes; the read path ([[artifactPaths]]) resolves an
-  *     artifact to its real dir (if the version rewrote it) plus every
-  *     listed location. No links, no renames of data files, no
+  *     Requires `Files.createLink` — local disk, NFS. It is the
+  *     faster carry on posix: in the `ann_serve_ingest` benchmark
+  *     workload (4-vCPU VM), `listing` roots wrote ~8 % slower.
+  *   - `listing` (every new schemed root — object stores, the 100 TB
+  *     deployment): the staged version records a per-version file
+  *     LISTING (`FILES`: one root-relative path per carried artifact
+  *     location) instead of linking bytes; the read path
+  *     ([[artifactPaths]]) resolves an artifact to its real dir (if
+  *     the version rewrote it) plus every listed location. A posix
+  *     root carries this way only if `pinLayout` pinned it before
+  *     its first build. No links, no renames of data files, no
   *     directory mutation of committed versions — exactly the
   *     Iceberg/Delta manifest design, so the whole lifecycle runs on
   *     stores with no hard links. GC keeps any version dir that a
@@ -198,66 +200,37 @@ object IndexManifest {
   private[llm] def ioFor(path: String): ManifestIo =
     if (SchemeRe.matches(path)) HadoopManifestIo else PosixManifestIo
 
-  /** Layout for NEW roots (existing roots keep their `LAYOUT` file).
-    * Set from conf `spark.graft.indexLayout` by the session entry
-    * points (Verify / Bench / GraftSession) or the system property of
-    * the same name; [[withLayout]] scopes an override.
+  /** The carry layout a NEW root on `root`'s backend pins: `link` on
+    * posix, `listing` on stores without hard links.
     */
-  @volatile var DefaultLayout: String =
-    sys.props.getOrElse("spark.graft.indexLayout", LinkLayout)
+  private def backendLayout(root: String): String =
+    if (ioFor(root).supportsLinks) LinkLayout else ListingLayout
 
-  // Scoped overrides are THREAD-LOCAL (DynamicVariable), so a
-  // withLayout(listing) window on one thread can never make a
-  // concurrent thread's stage() pin the wrong layout or its
-  // freshForLayout wipe an unrelated fresh root.
-  private val layoutOverride =
-    new scala.util.DynamicVariable[Option[String]](None)
+  // a root is new until it holds a LAYOUT marker, a committed pointer
+  // or a version dir; older roots without the marker carry as `link`
+  private def isNewRoot(io: ManifestIo, root: String): Boolean =
+    !io.exists(s"$root/$LayoutFile") && io.readPointer(root).isEmpty &&
+      io.listVersionDirNames(root).isEmpty
 
-  /** The layout new roots adopt right now: the innermost
-    * [[withLayout]] override on THIS thread, else [[DefaultLayout]].
+  /** Pin `root`'s carry layout: a new root gets `layout` in its
+    * `LAYOUT` marker (a racing pinner may write it first), and a root
+    * already pinned to the other layout fails. [[stage]] pins each new
+    * root to its backend's layout; specs and tools that need a posix
+    * root to carry as `listing` pin it before the first build.
     */
-  def effectiveLayout: String =
-    layoutOverride.value.getOrElse(DefaultLayout)
-
-  /** Scope a layout override for the duration of `body` on the
-    * current thread only (a DynamicVariable, not a global swap —
-    * concurrent threads keep seeing [[DefaultLayout]] or their own
-    * override).
-    */
-  def withLayout[T](layout: String)(body: => T): T = {
+  private[graft] def pinLayout(root: String, layout: String): Unit = {
     require(layout == LinkLayout || layout == ListingLayout,
       s"unknown index layout '$layout' (want link|listing)")
-    layoutOverride.withValue(Some(layout))(body)
-  }
-
-  // the layout a NEW root at `root` would pin right now: link-less
-  // stores always pin listing regardless of the session default
-  private def layoutForNewRoot(root: String): String =
-    if (ioFor(root).supportsLinks) effectiveLayout else ListingLayout
-
-  /** Stamp-gate freshness helper for build-once CACHE roots (the
-    * query registry's stamp-gated indexes — derived data a gate
-    * rebuilds from the fixture whenever stale): an existing root only
-    * counts as reusable when its pinned layout matches the session
-    * default, and a mismatched root is WIPED here so the gate's
-    * rebuild adopts the session layout (a root's layout is immutable
-    * in place — rebuilding versions onto it would keep the old
-    * mechanism and silently fake a listing certification). The wipe
-    * keys on the ROOT DIRECTORY, not the committed pointer: a crashed
-    * first build that left `LAYOUT` + stage dirs but never committed
-    * must not leak its stale layout into the rebuild. Callers must
-    * evaluate this gate UNCONDITIONALLY (first conjunct, or a
-    * standalone val) — short-circuiting it behind a stamp check skips
-    * the wipe exactly when the rebuild is about to run. Cache roots
-    * only; never point this at an index whose history you keep.
-    * Callers hold their gate's lock.
-    */
-  def freshForLayout(root: String): Boolean = {
     val io = ioFor(root)
-    if (io.exists(root) && layoutOf(root) != layoutForNewRoot(root)) {
-      io.rmTree(root)
-      false
-    } else exists(root)
+    require(layout == ListingLayout || io.supportsLinks,
+      s"$root is on a store without hard links: it carries as " +
+        s"'$ListingLayout'")
+    io.mkdirs(root)
+    if (isNewRoot(io, root))
+      io.writeExclusive(s"$root/$LayoutFile", layout): Unit
+    val pinned = layoutOf(root)
+    require(pinned == layout,
+      s"index root $root carries as '$pinned', not '$layout'")
   }
 
   /** The root's pinned layout; roots created before the `LAYOUT`
@@ -315,11 +288,16 @@ object IndexManifest {
     */
   val PinAcquireAttempts = 5
 
-  /** Test hook, fired twice per commit: `commit:<root>` on entry
-    * (before the lock — crash-injection specs throw here to simulate
-    * dying between staging and commit) and `publish:<root>` inside
-    * the critical section immediately before the atomic pointer
-    * publish (zombie-lease specs stall here past the lease TTL).
+  /** Test hook, fired with a named point. Per commit: `commit:<root>`
+    * on entry (before the lock — crash-injection specs throw here to
+    * simulate dying between staging and commit) and `publish:<root>`
+    * inside the critical section immediately before the atomic
+    * pointer publish (zombie-lease specs stall here past the lease
+    * TTL). Per read: `resolve:<root>` right after [[resolve]] read the
+    * pointer (specs commit from here to land a writer between a
+    * read's resolution and its artifact reads), and `decode:<root>`
+    * once the driver buffer's decode has pinned its version and
+    * before it reads an artifact.
     */
   @volatile private[graft] var failpoint: String => Unit = _ => ()
 
@@ -347,13 +325,6 @@ object IndexManifest {
     */
   val RetainVersions = 2
 
-  /** Test hook, fired by [[resolve]] with `(root, version)` right after
-    * a read resolved the pointer. Specs commit from here to land a
-    * writer between a read's resolution and its artifact reads.
-    */
-  @volatile private[graft] var resolveHook: (String, String) => Unit =
-    (_, _) => ()
-
   /** The committed version name, if any. */
   def current(root: String): Option[String] =
     history(root).headOption
@@ -368,7 +339,7 @@ object IndexManifest {
   def resolve(root: String): String = {
     val v = current(root)
     require(v.isDefined, s"no committed index at $root")
-    resolveHook(root, v.get)
+    failpoint(s"resolve:$root")
     v.get
   }
 
@@ -430,10 +401,9 @@ object IndexManifest {
     * (`Tables.table`'s r20 pinning) and the staged-stream schemas —
     * every serve previously re-ran driver-side footer inference per
     * artifact location. Keyed by (path, dir mtime): a wiped-and-
-    * rebuilt root (stamp mismatch, layout flip) changes the mtime and
-    * re-infers. Scheme'd roots (object-store backends) skip the cache
-    * — their read path stays byte-identical and java.io mtimes don't
-    * apply.
+    * rebuilt root changes the mtime and re-infers. Scheme'd roots
+    * (object-store backends) skip the cache — their read path stays
+    * byte-identical and java.io mtimes don't apply.
     */
   private val artifactSchemaCache = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.StructType]()
@@ -506,19 +476,14 @@ object IndexManifest {
     * stagedDirPath); [[commit]] finalizes the stage under its
     * committed `v<N>` name (a rename on posix; marker removal on
     * object stores, where data files never move). Never touches the
-    * pointer. A brand-new root gets its `LAYOUT` pinned here to
-    * [[effectiveLayout]] — forced to `listing` on link-less stores —
-    * (existing roots keep theirs — a root never changes layout
-    * mid-life).
+    * pointer. A brand-new root gets its backend's layout pinned here
+    * (`pinLayout`); existing roots keep theirs — a root never
+    * changes layout mid-life.
     */
   def stage(root: String): (String, String) = {
     val io = ioFor(root)
     io.mkdirs(root)
-    val layoutPath = s"$root/$LayoutFile"
-    if (!io.exists(layoutPath) && io.readPointer(root).isEmpty &&
-        io.listVersionDirNames(root).isEmpty)
-      // a racing stager may pin it first — theirs stands
-      io.writeExclusive(layoutPath, layoutForNewRoot(root)): Unit
+    if (isNewRoot(io, root)) pinLayout(root, backendLayout(root))
     val (versionDirs, stageDirs, _) = io.classifiedRootListing(root)
     var next = (versionDirs ++ stageDirs.map(io.stageNameToVersion))
       .map(_.dropWhile(!_.isDigit).toInt)
@@ -900,7 +865,7 @@ object IndexManifest {
   /** Versions protected by live reader pins; stale pin files (leaked
     * readers) are reaped here as a side effect.
     */
-  private def pinnedVersions(root: String): Seq[String] = {
+  private[llm] def pinnedVersions(root: String): Seq[String] = {
     val io = ioFor(root)
     val dir = s"$root/$PinsDir"
     val cutoff = System.currentTimeMillis() - ReaderPinTtlMs

@@ -822,9 +822,8 @@ private[graft] object HadoopManifestIo extends ManifestIo {
   def createLink(to: String, from: String): Unit =
     throw new UnsupportedOperationException(
       "hard links do not exist on object stores: index roots on a " +
-        "schemed filesystem use the 'listing' carry layout " +
-        "(spark.graft.indexLayout=listing — pinned automatically for " +
-        s"new roots); this root's LAYOUT says 'link'. Path: $to")
+        "schemed filesystem use the 'listing' carry layout (pinned " +
+        s"for every new root); this root's LAYOUT says 'link'. Path: $to")
 
   private val rootLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.llm.IndexManifest
 import graft.sources.Tables
 import graft.relational.Staging
 import graft.relational.Staging.StagingSpec
@@ -107,20 +108,12 @@ object Catalog {
     * centroids) always locks in dependency order. The stamp is
     * deleted before `build` and written only after it, so a build
     * that throws or dies leaves no stamp and the next call rebuilds.
-    * `layoutRoot` names a manifest index root whose pinned layout
-    * must match the session's (`IndexManifest.freshForLayout`, which
-    * wipes a mismatched root).
     */
   private[queries] def stampGate(stampPath: String, stamp: String,
-      layoutRoot: Option[String] = None, present: => Boolean = true)(
-      build: => Unit): Unit =
+      present: => Boolean = true)(build: => Unit): Unit =
     stampLocks.computeIfAbsent(stampPath, _ => new Object).synchronized {
-      // layout gate FIRST and unconditional: a stale stamp must not
-      // short-circuit past the mismatched-layout wipe (the rebuild
-      // would stage onto the old-layout root and fake certification)
-      val layoutOk = layoutRoot.forall(graft.llm.IndexManifest.freshForLayout)
       val stampFile = new java.io.File(stampPath)
-      val fresh = layoutOk && stampFile.exists() &&
+      val fresh = stampFile.exists() &&
         scala.util.Try(java.nio.file.Files.readString(stampFile.toPath))
           .toOption.contains(stamp) && present
       if (!fresh) {
@@ -5810,7 +5803,8 @@ object Catalog {
       import graft.llm.Vocabulary
       val path = s"/tmp/graft_bm25_${dirTag(d)}"
       val stamp = sourceStamp(s"$d/documents.parquet")
-      stampGate(s"$path.stamp", stamp, layoutRoot = Some(path)) {
+      stampGate(s"$path.stamp", stamp,
+          present = IndexManifest.exists(path)) {
         Vocabulary.writeBm25Index(Tables.documents(s, d), "doc_id",
           "text", path, buckets = 16)
       }
@@ -5850,7 +5844,8 @@ object Catalog {
       import graft.llm.{Similarity, Vocabulary}
       val path = s"/tmp/graft_bm25_del_${dirTag(d)}"
       val stamp = sourceStamp(s"$d/documents.parquet")
-      stampGate(s"$path.stamp", stamp, layoutRoot = Some(path)) {
+      stampGate(s"$path.stamp", stamp,
+          present = IndexManifest.exists(path)) {
         // a rebuild starts a fresh manifest version with no
         // tombstones — nothing to clear explicitly
         val docs = Tables.documents(s, d)
@@ -5873,7 +5868,8 @@ object Catalog {
       import graft.llm.Vocabulary
       val path = s"/tmp/graft_bm25_app_${dirTag(d)}"
       val stamp = sourceStamp(s"$d/documents.parquet")
-      stampGate(s"$path.stamp", stamp, layoutRoot = Some(path)) {
+      stampGate(s"$path.stamp", stamp,
+          present = IndexManifest.exists(path)) {
         val docs = Tables.documents(s, d)
         Vocabulary.writeBm25Index(docs.filter(col("doc_id") % 3 =!= 0),
           "doc_id", "text", path, buckets = 16)
@@ -7523,7 +7519,8 @@ $union
       // build-once/serve-many for real: the write is stamp-gated like
       // every other disk index (it was an every-run rewrite until r13)
       val stamp = sourceStamp(s"$d/embeddings.parquet")
-      stampGate(s"$path.stamp", stamp, layoutRoot = Some(path)) {
+      stampGate(s"$path.stamp", stamp,
+          present = IndexManifest.exists(path)) {
         Similarity.writeIvfIndex(
           Similarity.ivfIndex(emb, "embedding", "vec_id", cents), path)
       }
@@ -7678,7 +7675,8 @@ $union
       val bits = Similarity.bitsFor(emb.count())
       val path = s"/tmp/graft_lsh_cpt_${dirTag(d)}"
       val stamp = sourceStamp(s"$d/embeddings.parquet")
-      stampGate(s"$path.stamp", stamp, layoutRoot = Some(path)) {
+      stampGate(s"$path.stamp", stamp,
+          present = IndexManifest.exists(path)) {
         Similarity.writeLshIndex(
           Similarity.multiTableIndex(
             emb.filter(col("vec_id") % 3 === 0), "embedding", "vec_id",
@@ -7721,7 +7719,8 @@ $union
       val bits = Similarity.bitsFor(emb.count())
       val path = s"/tmp/graft_lsh_del_${dirTag(d)}"
       val stamp = sourceStamp(s"$d/embeddings.parquet")
-      stampGate(s"$path.stamp", stamp, layoutRoot = Some(path)) {
+      stampGate(s"$path.stamp", stamp,
+          present = IndexManifest.exists(path)) {
         Similarity.clearTombstones(path)
         Similarity.writeLshIndex(
           Similarity.multiTableIndex(emb, "embedding", "vec_id",
@@ -7763,7 +7762,8 @@ $union
           k = Similarity.cellsFor(hist.count()), iters = 2))
       val path = s"/tmp/graft_ivf_app_${dirTag(d)}"
       val stamp = sourceStamp(s"$d/embeddings.parquet")
-      stampGate(s"$path.stamp", stamp, layoutRoot = Some(path)) {
+      stampGate(s"$path.stamp", stamp,
+          present = IndexManifest.exists(path)) {
         Similarity.writeIvfIndex(
           Similarity.ivfIndex(hist, "embedding", "vec_id", cents), path)
         Similarity.appendIvfIndex(
@@ -7799,7 +7799,8 @@ $union
       val cents = centroidsFor(s, d)
       val path = s"/tmp/graft_ivf_del_${dirTag(d)}"
       val stamp = sourceStamp(s"$d/embeddings.parquet")
-      stampGate(s"$path.stamp", stamp, layoutRoot = Some(path)) {
+      stampGate(s"$path.stamp", stamp,
+          present = IndexManifest.exists(path)) {
         Similarity.clearTombstones(path)
         Similarity.writeIvfIndex(
           Similarity.ivfIndex(emb, "embedding", "vec_id", cents), path)
@@ -7880,7 +7881,8 @@ $union
     import graft.llm.Similarity
     val path = s"/tmp/graft_lsh_${dirTag(d)}"
     val stamp = sourceStamp(s"$d/embeddings.parquet")
-    stampGate(s"$path.stamp", stamp, layoutRoot = Some(path)) {
+    stampGate(s"$path.stamp", stamp,
+        present = IndexManifest.exists(path)) {
       Similarity.writeLshIndex(
         Similarity.multiTableIndex(Tables.embeddings(s, d), "embedding",
           "vec_id", dim = dim, bits = bits, tables = 8),
@@ -7937,7 +7939,8 @@ $union
       val bits = Similarity.bitsFor(emb.count())
       val path = s"/tmp/graft_lsh_app_${dirTag(d)}"
       val stamp = sourceStamp(s"$d/embeddings.parquet")
-      stampGate(s"$path.stamp", stamp, layoutRoot = Some(path)) {
+      stampGate(s"$path.stamp", stamp,
+          present = IndexManifest.exists(path)) {
         Similarity.writeLshIndex(
           Similarity.multiTableIndex(
             emb.filter(col("vec_id") % 10 =!= 0), "embedding", "vec_id",
@@ -8215,7 +8218,8 @@ $union
         .collect().head.getSeq[Double](0).toArray
       val path = s"/tmp/graft_ivfpq_${dirTag(d)}"
       val stamp = sourceStamp(s"$d/embeddings.parquet")
-      stampGate(s"$path.stamp", stamp, layoutRoot = Some(path)) {
+      stampGate(s"$path.stamp", stamp,
+          present = IndexManifest.exists(path)) {
         val model = pqModelFor(s, d, query.length)
         val (cents, radii) = centroidRadiiFor(s, d)
         val index = Pq.ivfPqIndex(emb, "embedding", "vec_id", cents, model)
@@ -8256,7 +8260,8 @@ $union
         .collect().head.getSeq[Double](0).toArray
       val path = s"/tmp/graft_ivfpq_app_${dirTag(d)}"
       val stamp = sourceStamp(s"$d/embeddings.parquet")
-      stampGate(s"$path.stamp", stamp, layoutRoot = Some(path)) {
+      stampGate(s"$path.stamp", stamp,
+          present = IndexManifest.exists(path)) {
         val hist = emb.filter(col("vec_id") % 10 =!= 0)
         val model = Pq.trainCodebooks(hist, "embedding", "vec_id",
           dim = query.length, m = 16, k = 64, iters = 2)
@@ -8304,7 +8309,8 @@ $union
         .collect().head.getSeq[Double](0).toArray
       val path = s"/tmp/graft_ivfpq_del_${dirTag(d)}"
       val stamp = sourceStamp(s"$d/embeddings.parquet")
-      stampGate(s"$path.stamp", stamp, layoutRoot = Some(path)) {
+      stampGate(s"$path.stamp", stamp,
+          present = IndexManifest.exists(path)) {
         val model = pqModelFor(s, d, query.length)
         val (cents, radii) = centroidRadiiFor(s, d)
         val index = Pq.ivfPqIndex(emb, "embedding", "vec_id", cents,
@@ -10033,8 +10039,8 @@ $union
 
   /** The OBJECT-STORE index layout, certified inside the oracle gate:
     * the full disk-LSH lifecycle — build(history) → append(delta) →
-    * delete(takedowns) → compact → serve — runs with
-    * `spark.graft.indexLayout=listing` (carry-forward by per-version
+    * delete(takedowns) → compact → serve — runs on a posix root
+    * pinned to the `listing` layout (carry-forward by per-version
     * file LISTING, [[graft.llm.IndexManifest]]; zero hard links, the
     * S3/GCS deployment shape) and must serve the exact brute-force
     * top-10 over the SURVIVING corpus. Every verb participates: a
@@ -10045,7 +10051,7 @@ $union
   val simTopkAnnDiskListing = RegisteredQuery(
     "sim_topk_ann_disk_listing",
     (s, d) => {
-      import graft.llm.{IndexManifest, Similarity}
+      import graft.llm.Similarity
       val emb = Tables.embeddings(s, d)
       val query = emb.filter(col("vec_id") === 0)
         .select(col("embedding").cast("array<double>"))
@@ -10053,22 +10059,22 @@ $union
       val bits = Similarity.bitsFor(emb.count())
       val path = s"/tmp/graft_lsh_lst_${dirTag(d)}"
       val stamp = sourceStamp(s"$d/embeddings.parquet")
-      IndexManifest.withLayout(IndexManifest.ListingLayout) {
-        stampGate(s"$path.stamp", stamp, layoutRoot = Some(path)) {
-          Similarity.writeLshIndex(
-            Similarity.multiTableIndex(
-              emb.filter(col("vec_id") % 10 =!= 0), "embedding",
-              "vec_id", dim = query.length, bits = bits, tables = 8),
-            path, groups = 16)
-          Similarity.appendLshIndex(
-            emb.filter(col("vec_id") % 10 === 0), "embedding", "vec_id",
-            path, dim = query.length, bits = bits, tables = 8,
-            groups = 16)
-          import s.implicits._
-          Similarity.deleteFromLshIndex(
-            Seq(3L, 7L).toDF("vec_id"), "vec_id", path)
-          Similarity.compactLshIndex(s, path)
-        }
+      stampGate(s"$path.stamp", stamp,
+          present = IndexManifest.exists(path)) {
+        IndexManifest.pinLayout(path, IndexManifest.ListingLayout)
+        Similarity.writeLshIndex(
+          Similarity.multiTableIndex(
+            emb.filter(col("vec_id") % 10 =!= 0), "embedding",
+            "vec_id", dim = query.length, bits = bits, tables = 8),
+          path, groups = 16)
+        Similarity.appendLshIndex(
+          emb.filter(col("vec_id") % 10 === 0), "embedding", "vec_id",
+          path, dim = query.length, bits = bits, tables = 8,
+          groups = 16)
+        import s.implicits._
+        Similarity.deleteFromLshIndex(
+          Seq(3L, 7L).toDF("vec_id"), "vec_id", path)
+        Similarity.compactLshIndex(s, path)
       }
       Similarity.topKAnnDisk(s, path, query, dim = query.length,
           bits = bits, tables = 8, k = 10, groups = 16)
@@ -10078,27 +10084,27 @@ $union
 
   /** BM25 twin of `sim_topk_ann_disk_listing`: the sparse-retrieval
     * disk lifecycle — build(history) → append(delta) → delete → compact
-    * → serve — under the listing layout, against the exact BM25 oracle
-    * over the surviving corpus (idf/avgdl shift with the deletions;
-    * the integer-exact stats recombination must match a from-scratch
-    * rebuild, which is what the oracle computes).
+    * → serve — on a posix root pinned to the listing layout, against
+    * the exact BM25 oracle over the surviving corpus (idf/avgdl shift
+    * with the deletions; the integer-exact stats recombination must
+    * match a from-scratch rebuild, which is what the oracle computes).
     */
   val docBm25DiskListing = RegisteredQuery(
     "doc_bm25_disk_listing",
     (s, d) => {
-      import graft.llm.{IndexManifest, Vocabulary}
+      import graft.llm.Vocabulary
       val path = s"/tmp/graft_bm25_lst_${dirTag(d)}"
       val stamp = sourceStamp(s"$d/documents.parquet")
-      IndexManifest.withLayout(IndexManifest.ListingLayout) {
-        stampGate(s"$path.stamp", stamp, layoutRoot = Some(path)) {
-          val docs = Tables.documents(s, d)
-          Vocabulary.writeBm25Index(docs.filter(col("doc_id") % 3 =!= 0),
-            "doc_id", "text", path, buckets = 16)
-          Vocabulary.appendBm25Index(docs.filter(col("doc_id") % 3 === 0),
-            "doc_id", "text", path, buckets = 16)
-          Vocabulary.deleteBm25Index(s, path, Seq(1L, 5L))
-          Vocabulary.compactBm25Index(s, path, buckets = 16)
-        }
+      stampGate(s"$path.stamp", stamp,
+          present = IndexManifest.exists(path)) {
+        IndexManifest.pinLayout(path, IndexManifest.ListingLayout)
+        val docs = Tables.documents(s, d)
+        Vocabulary.writeBm25Index(docs.filter(col("doc_id") % 3 =!= 0),
+          "doc_id", "text", path, buckets = 16)
+        Vocabulary.appendBm25Index(docs.filter(col("doc_id") % 3 === 0),
+          "doc_id", "text", path, buckets = 16)
+        Vocabulary.deleteBm25Index(s, path, Seq(1L, 5L))
+        Vocabulary.compactBm25Index(s, path, buckets = 16)
       }
       Vocabulary.bm25Disk(s, path,
           queryTerms = Seq("dup", "spark", "join"), topK = 20,
@@ -10127,10 +10133,9 @@ $union
       val local = s"/tmp/graft_bm25_objstore_${dirTag(d)}"
       val path = s"file://$local"
       val stamp = sourceStamp(s"$d/documents.parquet")
-      // schemed roots pin listing whatever the session default, and
-      // freshForLayout compares against the layout a NEW root at this
-      // path would pin, so a link-default session never wipe-loops here
-      stampGate(s"$local.stamp", stamp, layoutRoot = Some(path)) {
+      // a schemed root pins the listing layout on its first stage
+      stampGate(s"$local.stamp", stamp,
+          present = IndexManifest.exists(path)) {
         val docs = Tables.documents(s, d)
         Vocabulary.writeBm25Index(docs.filter(col("doc_id") % 3 =!= 0),
           "doc_id", "text", path, buckets = 16)

@@ -33,7 +33,10 @@ object GraftFunctions {
   private def gcdOf(a: Long, b: Long): Long =
     if (b == 0L) math.abs(a) else gcdOf(b, a % b)
 
-  private object GcdBound extends ScalarFunction[java.lang.Long] {
+  // package-private, not private: the generated code calls `invoke` on
+  // this object's class, which a private object hides from it (Janino
+  // then finds no applicable method and the call runs interpreted)
+  private[catalog] object GcdBound extends ScalarFunction[java.lang.Long] {
     override def inputTypes(): Array[DataType] = Array(LongType, LongType)
     override def resultType(): DataType = LongType
     override def name(): String = "gcd"

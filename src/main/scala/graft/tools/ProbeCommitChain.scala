@@ -74,7 +74,8 @@ object ProbeCommitChain {
     }
 
     def drive(root: String, layout: String, append: Boolean)
-        : (Double, Double) = IndexManifest.withLayout(layout) {
+        : (Double, Double) = {
+      IndexManifest.pinLayout(root, layout)
       val decile = math.max(1, n / 10)
       var firstNs = 0L
       var lastNs = 0L

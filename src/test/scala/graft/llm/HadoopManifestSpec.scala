@@ -77,8 +77,8 @@ class HadoopManifestSpec extends SparkSpec {
       .createTempDirectory("hfs_bm25_twin").toString + "/idx"
     val docs = corpus
     poisonLinks {
-      // link default in force: the schemed root must IGNORE it and
-      // pin listing (links don't exist on object stores)
+      // the schemed root pins listing on its first stage (links don't
+      // exist on object stores)
       Vocabulary.writeBm25Index(docs.filter(col("doc_id") < 40),
         "doc_id", "text", root, buckets = 4)
       Vocabulary.appendBm25Index(docs.filter(col("doc_id") >= 40),
@@ -87,15 +87,14 @@ class HadoopManifestSpec extends SparkSpec {
         (0 until 60 by 4).map(_.toLong))
       Vocabulary.compactBm25Index(spark, root, buckets = 4)
     }
-    IndexManifest.withLayout(IndexManifest.ListingLayout) {
-      Vocabulary.writeBm25Index(docs.filter(col("doc_id") < 40),
-        "doc_id", "text", twin, buckets = 4)
-      Vocabulary.appendBm25Index(docs.filter(col("doc_id") >= 40),
-        "doc_id", "text", twin, buckets = 4)
-      Vocabulary.deleteBm25Index(spark, twin,
-        (0 until 60 by 4).map(_.toLong))
-      Vocabulary.compactBm25Index(spark, twin, buckets = 4)
-    }
+    IndexManifest.pinLayout(twin, IndexManifest.ListingLayout)
+    Vocabulary.writeBm25Index(docs.filter(col("doc_id") < 40),
+      "doc_id", "text", twin, buckets = 4)
+    Vocabulary.appendBm25Index(docs.filter(col("doc_id") >= 40),
+      "doc_id", "text", twin, buckets = 4)
+    Vocabulary.deleteBm25Index(spark, twin,
+      (0 until 60 by 4).map(_.toLong))
+    Vocabulary.compactBm25Index(spark, twin, buckets = 4)
     assert(bm25Serve(root) == bm25Serve(twin),
       "schemed-root BM25 lifecycle diverged from the posix twin")
     assertObjectStoreShape(local)
@@ -130,7 +129,8 @@ class HadoopManifestSpec extends SparkSpec {
       Similarity.compactLshIndex(spark, path)
     }
     poisonLinks { lifecycle(root) }
-    IndexManifest.withLayout(IndexManifest.ListingLayout)(lifecycle(twin))
+    IndexManifest.pinLayout(twin, IndexManifest.ListingLayout)
+    lifecycle(twin)
     assert(annServe(root) == annServe(twin),
       "schemed-root LSH lifecycle diverged from the posix twin")
     assertObjectStoreShape(local)

@@ -28,8 +28,8 @@ import graft.SparkSpec
   *   - budget: counted in decoded bytes, checked against the measured
   *     object graph, and a version near it decodes in a small heap.
   *
-  * Interleavings come from the manifest's and the buffer's test hooks,
-  * never from sleeps.
+  * Interleavings come from the manifest's `failpoint` (its `resolve:`
+  * and `decode:` points), never from sleeps.
   */
 class IndexBufferSpec extends SparkSpec {
   import spark.implicits._
@@ -42,9 +42,13 @@ class IndexBufferSpec extends SparkSpec {
   private def tmpRoot(tag: String): String =
     Files.createTempDirectory(tag).toString + "/idx"
 
-  private def layouts[T](body: => T): Unit =
-    Seq(IndexManifest.LinkLayout, IndexManifest.ListingLayout)
-      .foreach(l => IndexManifest.withLayout(l)(body))
+  /** Runs `body` once per carry layout, on a fresh root pinned to it. */
+  private def layouts[T](tag: String)(body: String => T): Unit =
+    Seq(IndexManifest.LinkLayout, IndexManifest.ListingLayout).foreach { l =>
+      val dir = tmpRoot(tag)
+      IndexManifest.pinLayout(dir, l)
+      body(dir)
+    }
 
   /** Clustered random vectors; the first id gets the zero vector. */
   private def vectors(seed: Long, ids: Range): DataFrame = {
@@ -58,12 +62,11 @@ class IndexBufferSpec extends SparkSpec {
     }.toDF("id", "vec")
   }
 
-  private def withHooks[T](body: => T): T =
+  private def withFailpoint[T](hook: String => Unit)(body: => T): T = {
+    IndexManifest.failpoint = hook
     try body
-    finally {
-      IndexManifest.resolveHook = (_, _) => ()
-      IndexBuffer.decodeHook = (_, _) => ()
-    }
+    finally IndexManifest.failpoint = _ => ()
+  }
 
   private def ann(dir: String, q: Array[Double], probe: Int = 1,
       groups: Int = buildGroups, k: Int = 10): DataFrame =
@@ -103,9 +106,8 @@ class IndexBufferSpec extends SparkSpec {
 
   test("differential: buffered ANN reads equal the Spark plan through " +
       "build, append, delete and compact, on both layouts") {
-    layouts {
-      Seq(11L, 12L).foreach { seed =>
-        val dir = tmpRoot("buf_lsh")
+    Seq(11L, 12L).foreach { seed =>
+      layouts("buf_lsh") { dir =>
         val r = new scala.util.Random(seed)
         val base = vectors(seed, 0 until 160)
         Similarity.writeLshIndex(Similarity.multiTableIndex(base, "vec",
@@ -159,8 +161,7 @@ class IndexBufferSpec extends SparkSpec {
   test("differential: buffered BM25 reads equal the Spark plan through " +
       "build, append, delete (down to every doc) and compact, on both " +
       "layouts") {
-    layouts {
-      val dir = tmpRoot("buf_bm25")
+    layouts("buf_bm25") { dir =>
       val r = new scala.util.Random(5)
       val termSets = Seq(Seq("w0", "w3", "w17"), Seq("w1", "missing"),
         Seq.fill(3)(words(r.nextInt(30))), Seq("w2", "w2", "w9"))
@@ -194,12 +195,12 @@ class IndexBufferSpec extends SparkSpec {
       Similarity.deleteFromLshIndex(dead.toDF("id"), "id", dir)
       val resolved = IndexManifest.current(dir).get
       var fired = false
-      val served = withHooks {
-        IndexManifest.resolveHook = (root, _) =>
-          if (root == dir && !fired) {
-            fired = true
-            Similarity.compactLshIndex(spark, dir)
-          }
+      val served = withFailpoint { point =>
+        if (point == s"resolve:$dir" && !fired) {
+          fired = true
+          Similarity.compactLshIndex(spark, dir)
+        }
+      } {
         // the plan builder reads the version this resolution returns,
         // as topKAnnDisk does when the version is over the budget
         if (planned) annPlan(dir, IndexManifest.resolve(dir), q)
@@ -247,18 +248,18 @@ class IndexBufferSpec extends SparkSpec {
     val q = base.filter($"id" === 3).head().getSeq[Double](1).toArray
     val expected = annKey(annPlan(dir, v1, q))
     var fired = false
-    val served = withHooks {
-      IndexBuffer.decodeHook = (root, v) =>
-        if (root == dir && !fired) {
-          assert(v == v1)
-          fired = true
-          Similarity.appendLshIndex(vectors(42, 160 until 200), "vec", "id",
-            dir, dim, bits, tables, buildGroups)
-          Similarity.deleteFromLshIndex(expected.take(3).map(_._1).toDF("id"),
-            "id", dir)
-          IndexManifest.expireVersions(dir, keep = 1) // trims and runs gc
-          assert(!IndexManifest.history(dir).contains(v1))
-        }
+    val served = withFailpoint { point =>
+      if (point == s"decode:$dir" && !fired) {
+        assert(IndexManifest.pinnedVersions(dir) == Seq(v1))
+        fired = true
+        Similarity.appendLshIndex(vectors(42, 160 until 200), "vec", "id",
+          dir, dim, bits, tables, buildGroups)
+        Similarity.deleteFromLshIndex(expected.take(3).map(_._1).toDF("id"),
+          "id", dir)
+        IndexManifest.expireVersions(dir, keep = 1) // trims and runs gc
+        assert(!IndexManifest.history(dir).contains(v1))
+      }
+    } {
       annKey(ann(dir, q))
     }
     assert(fired)

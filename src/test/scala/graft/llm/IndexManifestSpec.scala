@@ -233,59 +233,6 @@ class IndexManifestSpec extends SparkSpec {
       s"fully-idle stage $stageName survived GC past its TTL")
   }
 
-  test("freshForLayout wipes a mismatched root even when no commit " +
-      "ever landed (crashed first build leaves LAYOUT + stage dirs)") {
-    val root = Files.createTempDirectory("orphan").toString + "/idx"
-    // simulate a crashed first build under layout=listing: LAYOUT
-    // pinned, a stage dir with bytes, but NO committed pointer
-    IndexManifest.withLayout(IndexManifest.ListingLayout) {
-      val (_, staged) = IndexManifest.stage(root)
-      Files.writeString(java.nio.file.Paths.get(staged, "data"),
-        "half-built"): Unit
-    }
-    assert(IndexManifest.layoutOf(root) == IndexManifest.ListingLayout)
-    assert(!IndexManifest.exists(root))
-    // a later session under the link default must NOT rebuild onto the
-    // root and silently inherit the stale listing LAYOUT
-    assert(!IndexManifest.freshForLayout(root))
-    assert(!new java.io.File(root).exists(),
-      "orphaned mismatched-layout root was not wiped")
-    // the rebuild then pins the session layout
-    val (v, d) = IndexManifest.stage(root)
-    Files.writeString(java.nio.file.Paths.get(d, "data"), "rebuilt"): Unit
-    IndexManifest.commit(root, v): Unit
-    assert(IndexManifest.layoutOf(root) == IndexManifest.LinkLayout)
-    assert(IndexManifest.freshForLayout(root))
-  }
-
-  test("withLayout is thread-scoped: a concurrent thread's stage() " +
-      "inside another thread's listing window still pins the default") {
-    val inWindow = new java.util.concurrent.CountDownLatch(1)
-    val mainDone = new java.util.concurrent.CountDownLatch(1)
-    val rootA = Files.createTempDirectory("tlayA").toString + "/idx"
-    val rootB = Files.createTempDirectory("tlayB").toString + "/idx"
-    @volatile var err: Throwable = null
-    val t = new Thread(() => {
-      try IndexManifest.withLayout(IndexManifest.ListingLayout) {
-        IndexManifest.stage(rootA): Unit // pins listing for THIS thread
-        inWindow.countDown()
-        // hold the window open while the main thread stages rootB
-        assert(mainDone.await(30, java.util.concurrent.TimeUnit.SECONDS))
-      } catch { case x: Throwable => err = x }
-    })
-    t.start()
-    assert(inWindow.await(30, java.util.concurrent.TimeUnit.SECONDS))
-    try {
-      // a global-mutable override would leak `listing` in here
-      IndexManifest.stage(rootB): Unit
-      assert(IndexManifest.layoutOf(rootB) == IndexManifest.LinkLayout,
-        "another thread's withLayout window leaked into this thread")
-      assert(IndexManifest.layoutOf(rootA) == IndexManifest.ListingLayout)
-    } finally mainDone.countDown()
-    t.join(30000)
-    assert(err == null, s"listing-window thread failed: $err")
-  }
-
   test("a reader resolved against the previous version completes " +
       "correctly after a concurrent commit") {
     val df = vecs

@@ -271,15 +271,14 @@ class MockS3ManifestSpec extends SparkSpec {
         (0 until 60 by 4).map(_.toLong))
       Vocabulary.compactBm25Index(spark, root, buckets = 4)
     } finally MockS3FileSystem.allowCopyRename = false
-    IndexManifest.withLayout(IndexManifest.ListingLayout) {
-      Vocabulary.writeBm25Index(docs.filter(col("doc_id") < 40),
-        "doc_id", "text", twin, buckets = 4)
-      Vocabulary.appendBm25Index(docs.filter(col("doc_id") >= 40),
-        "doc_id", "text", twin, buckets = 4)
-      Vocabulary.deleteBm25Index(spark, twin,
-        (0 until 60 by 4).map(_.toLong))
-      Vocabulary.compactBm25Index(spark, twin, buckets = 4)
-    }
+    IndexManifest.pinLayout(twin, IndexManifest.ListingLayout)
+    Vocabulary.writeBm25Index(docs.filter(col("doc_id") < 40),
+      "doc_id", "text", twin, buckets = 4)
+    Vocabulary.appendBm25Index(docs.filter(col("doc_id") >= 40),
+      "doc_id", "text", twin, buckets = 4)
+    Vocabulary.deleteBm25Index(spark, twin,
+      (0 until 60 by 4).map(_.toLong))
+    Vocabulary.compactBm25Index(spark, twin, buckets = 4)
     assert(serve(root) == serve(twin),
       "mocks3 BM25 lifecycle diverged from the posix twin")
     assertMockShape(root, local)

@@ -6,13 +6,11 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.llm.IndexManifest
-
 /** Pins `Catalog.stampGate`, the one build-once gate of every
   * persisted artifact in the query registry: one build per stamp under
   * concurrent callers, reuse on a matching stamp, rebuild on a stale
-  * stamp or a mismatched index layout, and no stamp left behind by a
-  * build that throws. Counters only, no sleeps.
+  * stamp or a missing artifact, and no stamp left behind by a build
+  * that throws. Counters only, no sleeps.
   */
 class CatalogStampGateSpec extends AnyFunSuite {
 
@@ -71,38 +69,6 @@ class CatalogStampGateSpec extends AnyFunSuite {
       present = true
     }
     assert(builds.get == 3, "a stamp without its artifact was reused")
-  }
-
-  test("a layout mismatch wipes and rebuilds even when the stamp matches") {
-    val root = s"${tmp("gate_layout")}/idx"
-    val stampPath = s"$root.stamp"
-    val (first, second) =
-      if (IndexManifest.effectiveLayout == IndexManifest.LinkLayout)
-        (IndexManifest.LinkLayout, IndexManifest.ListingLayout)
-      else (IndexManifest.ListingLayout, IndexManifest.LinkLayout)
-    val builds = new AtomicInteger()
-    def gate(stamp: String): Unit = Catalog.stampGate(stampPath, stamp,
-        layoutRoot = Some(root)) {
-      builds.incrementAndGet()
-      val (v, _) = IndexManifest.stage(root)
-      IndexManifest.commit(root, v): Unit
-    }
-    IndexManifest.withLayout(first)(gate("s1"))
-    IndexManifest.withLayout(first)(gate("s1"))
-    assert(builds.get == 1, "a fresh root of the session's layout rebuilt")
-    val v1 = IndexManifest.resolve(root)
-    IndexManifest.withLayout(second)(gate("s1"))
-    assert(builds.get == 2, "a root of the other layout was reused")
-    assert(IndexManifest.layoutOf(root) == second)
-    assert(IndexManifest.history(root) == Seq(v1),
-      "the mismatched root was not wiped before the rebuild")
-    // a stale stamp must not short-circuit past the wipe either: the
-    // rebuild would stage onto the old-layout root
-    IndexManifest.withLayout(first)(gate("s2"))
-    assert(builds.get == 3)
-    assert(IndexManifest.layoutOf(root) == first,
-      "a stale stamp rebuilt onto the mismatched root")
-    assert(IndexManifest.history(root) == Seq(v1))
   }
 
   test("a build that throws leaves no stamp, so the next call rebuilds") {

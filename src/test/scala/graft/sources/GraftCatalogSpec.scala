@@ -454,6 +454,21 @@ class GraftCatalogSpec extends SparkSpec {
       .queryExecution.analyzed.toString.toLowerCase
     assert(plan.contains("invoke") &&
       !plan.contains("applyfunctionexpression"), plan)
+    // over a non-foldable input the call is compiled: with the
+    // interpreted fallback off, a magic method the generated code
+    // cannot call fails the query instead of logging and falling back
+    val fallback = "spark.sql.codegen.fallback"
+    val prevFallback = spark.conf.getOption(fallback)
+    spark.conf.set(fallback, "false")
+    try {
+      val computed = spark.range(1, 4).selectExpr("id * 6 AS a", "id * 9 AS b")
+        .selectExpr("graft_cat.ns.gcd(a, b) AS g")
+        .collect().map(_.getLong(0)).toSeq
+      assert(computed == Seq(3L, 6L, 9L), computed.toString)
+    } finally prevFallback match {
+      case Some(v) => spark.conf.set(fallback, v)
+      case None => spark.conf.unset(fallback)
+    }
     // SHOW FUNCTIONS surfaces the catalog's set
     val shown = spark.sql("SHOW FUNCTIONS IN graft_cat.ns")
       .collect().map(_.getString(0)).toSet
