@@ -262,22 +262,19 @@ object IndexManifest {
     * into the heartbeat) against the GC HOST's wall clock. Skew
     * between the two eats directly into the TTL: a builder whose
     * clock runs `s` ms behind the GC host looks `s` ms staler than it
-    * is. The 24 h default tolerates any realistic NTP drift; when
-    * tuning this knob DOWN, keep it well above (max cross-host clock
-    * skew + the builder's heartbeat interval), or a live builder's
-    * fresh stamps read as stale and its stage is reapable. Relatedly,
-    * a live builder whose [[touchStage]] writes persistently FAIL
-    * (swallowed, liveness is best-effort — but warned on repetition)
-    * loses the stamped-heartbeat protection and survives only via
-    * tree mtimes where the store exposes them.
+    * is. 24 h covers any realistic NTP drift plus a heartbeat
+    * interval. Relatedly, a live build whose [[touchStage]] writes
+    * persistently FAIL (swallowed, liveness is best-effort — but
+    * warned on repetition) loses the stamped-heartbeat protection and
+    * survives only via tree mtimes where the store exposes them.
     */
-  @volatile var StageTtlMs: Long = 24L * 3600 * 1000
+  val StageTtlMs: Long = 24L * 3600 * 1000
 
   /** Age past which a reader pin with no heartbeat refresh is
     * considered leaked (reader died without `ReaderPin.release`)
     * and stops protecting its version from GC.
     */
-  @volatile var ReaderPinTtlMs: Long = 24L * 3600 * 1000
+  val ReaderPinTtlMs: Long = 24L * 3600 * 1000
 
   /** [[pinCurrent]] acquisition attempts before giving up with
     * [[ConcurrentCommitException]]. Each retry means the pinner's OWN
@@ -292,10 +289,13 @@ object IndexManifest {
     * on entry (before the lock — crash-injection specs throw here to
     * simulate dying between staging and commit) and `publish:<root>`
     * inside the critical section immediately before the atomic
-    * pointer publish (zombie-lease specs stall here past the lease
-    * TTL). Per read: `resolve:<root>` right after [[resolve]] read the
-    * pointer (specs commit from here to land a writer between a
-    * read's resolution and its artifact reads), and `decode:<root>`
+    * pointer publish (zombie-lease specs stall here while the lease
+    * lapses). Per lock wait: `lock-wait:<root>` each time a
+    * contender's `withLock` loop finds the lock held and waits (specs
+    * wait for it to prove a contender is blocked). Per read:
+    * `resolve:<root>` right after [[resolve]] read the pointer (specs
+    * commit from here to land a writer between a read's resolution
+    * and its artifact reads), and `decode:<root>`
     * once the driver buffer's decode has pinned its version and
     * before it reads an artifact.
     */
@@ -519,7 +519,7 @@ object IndexManifest {
   def touchStage(stagedDir: String): Unit =
     try {
       ioFor(stagedDir).writeString(s"$stagedDir/$ActivityFile",
-        System.currentTimeMillis().toString)
+        ManifestClock.now().toString)
       touchFailures.remove(stagedDir): Unit
     } catch {
       case e: java.io.IOException =>
@@ -788,6 +788,9 @@ object IndexManifest {
         failpoint(s"pin-pre-write:$root")
         val f = s"$dir/pin-${java.util.UUID.randomUUID()}.pin"
         io.writeString(f, v)
+        // the pin's liveness is its mtime, compared against the
+        // manifest clock: stamp it from that clock, not the store's
+        io.setMtime(f, ManifestClock.now())
         if (io.lockStillHeld(root)) Some(new ReaderPin(root, v, f))
         else {
           io.deleteIfExists(f)
@@ -853,7 +856,7 @@ object IndexManifest {
           s"reaped — version $version is no longer protected; " +
           "release the scan and re-pin")
       if (!io.exists(file)) lapsed()
-      io.setMtime(file, System.currentTimeMillis())
+      io.setMtime(file, ManifestClock.now())
       // re-check: a GC reap interleaved between the exists probe and
       // the mtime bump leaves the bump a silent no-op on stores that
       // swallow the miss — protection already ended, so say so loudly
@@ -868,7 +871,7 @@ object IndexManifest {
   private[llm] def pinnedVersions(root: String): Seq[String] = {
     val io = ioFor(root)
     val dir = s"$root/$PinsDir"
-    val cutoff = System.currentTimeMillis() - ReaderPinTtlMs
+    val cutoff = ManifestClock.now() - ReaderPinTtlMs
     io.listNames(dir).filter(_.endsWith(".pin"))
       .flatMap { n =>
         val f = s"$dir/$n"
@@ -914,7 +917,7 @@ object IndexManifest {
     * ([[stage]] calls [[touchStage]]), so anything still signal-less
     * after days is crash garbage, not a build.
     */
-  @volatile var UnknownMtimeGraceMs: Long = 7L * 24 * 3600 * 1000
+  val UnknownMtimeGraceMs: Long = 7L * 24 * 3600 * 1000
 
   // per-dir first-observation time + survival count for stages alive
   // SOLELY via the no-readable-signal rule: the count makes the
@@ -978,7 +981,7 @@ object IndexManifest {
 
   def gc(root: String): Unit = {
     val io = ioFor(root)
-    val now = System.currentTimeMillis()
+    val now = ManifestClock.now()
     val cutoff = now - StageTtlMs
     // ONE root scan feeds the stage partition, the version reap list
     // and the temp sweep — a root holds hundreds of dirs at two
@@ -1082,10 +1085,6 @@ object IndexManifest {
     // not AFTER its publish already landed
     def reap(n: String): Unit =
       if (io.lockStillHeld(root)) {
-        if (sys.props.contains("graft.debug.gc"))
-          System.err.println(s"[gc-reap] $root/$n keep=$keep " +
-            s"live=$liveStages dead=$deadStages " +
-            s"versions=$versionDirs t=${System.currentTimeMillis()}")
         try io.rmTree(s"$root/$n")
         catch {
           case _: java.io.IOException =>

@@ -60,8 +60,6 @@ private[graft] sealed trait ManifestIo {
   /** Epoch-millis mtime; 0 for a missing path (posix convention). */
   def mtime(path: String): Long
   def setMtime(path: String, t: Long): Unit
-  /** Create empty or bump mtime to now — the liveness heartbeat. */
-  def touch(path: String): Unit
   /** Newest mtime anywhere under `path` (the slow liveness confirm). */
   def newestMtime(path: String): Long
   /** Any `*.parquet` file anywhere under `path`? */
@@ -216,15 +214,6 @@ private[graft] object PosixManifestIo extends ManifestIo {
   def mtime(path: String): Long = new java.io.File(path).lastModified()
   def setMtime(path: String, t: Long): Unit =
     new java.io.File(path).setLastModified(t): Unit
-  def touch(path: String): Unit =
-    try {
-      val p = Paths.get(path)
-      if (Files.exists(p))
-        Files.setLastModifiedTime(p,
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis())): Unit
-      else Files.createFile(p): Unit
-    } catch { case _: java.io.IOException => () } // liveness is best-effort
   def newestMtime(path: String): Long = {
     def walk(f: java.io.File): Long = {
       val own = f.lastModified()
@@ -293,6 +282,7 @@ private[graft] object PosixManifestIo extends ManifestIo {
           try fl = ch.lock()
           catch {
             case _: java.nio.channels.OverlappingFileLockException =>
+              IndexManifest.failpoint(s"lock-wait:$root")
               Thread.sleep(20)
           }
         heldRoots.set(heldRoots.get + key)
@@ -481,23 +471,28 @@ private[graft] object HadoopManifestIo extends ManifestIo {
     * TTL/4) EARLY, while takeover still waits for the full deadline,
     * leaving a guaranteed no-destructor gap of that width between
     * "holder stops trusting its lease" and "a successor may act".
-    * Deployments must keep |δ| across committers under that gap —
-    * trivially true for NTP-disciplined clusters (ms–s of skew vs a
-    * 75 s gap at the 5-minute default TTL); unsynchronized clocks
-    * need the allowance (or the TTL) raised to cover their skew.
+    * Deployments must keep |δ| across committers under that gap: a
+    * fixed 5 s, which NTP-disciplined clusters (ms–s of skew) clear.
+    * Every committer of a root must agree on the TTL and the
+    * allowance, so both are protocol constants, not per-caller
+    * settings. The one writer of this `var` is `CommitStorm.main`,
+    * whose storm JVMs cannot share an in-process clock and need a
+    * real sub-second lease.
     */
-  @volatile var LeaseTtlMs: Long = 5L * 60 * 1000
+  @volatile private[graft] var LeaseTtlMs: Long = 5L * 60 * 1000
 
   /** Cross-process clock-skew budget: the holder's own liveness fence
     * treats its lease as lost this long BEFORE the stamped deadline
-    * (capped at TTL/4 so short spec TTLs keep a usable window), while
-    * contenders honor the full deadline — see [[LeaseTtlMs]]'s margin
-    * arithmetic.
+    * (capped at TTL/4 so a short storm TTL keeps a usable window),
+    * while contenders honor the full deadline — see [[LeaseTtlMs]]'s
+    * margin arithmetic.
     */
-  @volatile var LeaseSkewAllowanceMs: Long = 5000L
+  val LeaseSkewAllowanceMs: Long = 5000L
 
-  private[llm] def fenceMarginMs: Long =
-    math.min(LeaseSkewAllowanceMs, LeaseTtlMs / 4)
+  private[llm] def fenceMarginMs: Long = fenceMarginFor(LeaseTtlMs)
+
+  private[llm] def fenceMarginFor(ttlMs: Long): Long =
+    math.min(LeaseSkewAllowanceMs, ttlMs / 4)
 
   /** How long a contender keeps re-polling an UNREADABLE head lease
     * before declaring it dead: a full [[LeaseTtlMs]] from the FIRST
@@ -767,13 +762,6 @@ private[graft] object HadoopManifestIo extends ManifestIo {
   }
   def setMtime(path: String, t: Long): Unit =
     fs(path).setTimes(new Path(path), t, -1)
-  def touch(path: String): Unit =
-    try {
-      val f = fs(path)
-      val p = new Path(path)
-      if (f.exists(p)) f.setTimes(p, System.currentTimeMillis(), -1)
-      else f.create(p, false).close()
-    } catch { case _: java.io.IOException => () } // liveness is best-effort
   def newestMtime(path: String): Long = {
     val f = fs(path)
     // children may VANISH mid-walk (a lock-free stager's writeExclusive
@@ -852,7 +840,7 @@ private[graft] object HadoopManifestIo extends ManifestIo {
     // no-destructor window that absorbs cross-process clock skew
     // (see LeaseTtlMs's margin arithmetic)
     heldLeases.get.get(root)
-      .forall(_ - fenceMarginMs > System.currentTimeMillis())
+      .forall(_ - fenceMarginMs > ManifestClock.now())
 
   /** Release marker written over a holder's own lease file. The file
     * SURVIVES release (overwrite, never delete): its generation number
@@ -907,22 +895,24 @@ private[graft] object HadoopManifestIo extends ManifestIo {
               failName = null
               val live = content.split("\t", 2).lift(1)
                 .flatMap(d => scala.util.Try(d.trim.toLong).toOption)
-                .exists(_ >= System.currentTimeMillis())
+                .exists(_ >= ManifestClock.now())
               if (live) 1 else 0
             } catch {
               case _: java.io.FileNotFoundException => 0 // pruned
               case _: java.io.IOException =>
                 if (n != failName) {
                   failName = n
-                  firstFailAt = System.currentTimeMillis()
+                  firstFailAt = ManifestClock.now()
                 }
-                if (System.currentTimeMillis() - firstFailAt >=
+                if (ManifestClock.now() - firstFailAt >=
                   headReadPatienceMs) 0
                 else -1
             }
         }
-        if (state != 0) Thread.sleep(50)
-        else {
+        if (state != 0) {
+          IndexManifest.failpoint(s"lock-wait:$root")
+          Thread.sleep(50)
+        } else {
           // lapsed or absent: take over by conditional-creating the
           // NEXT generation. Never delete-then-recreate the current
           // name: between a contender's delete and create, another
@@ -934,7 +924,7 @@ private[graft] object HadoopManifestIo extends ManifestIo {
           // is never a lease again.
           val next = leases.headOption.map(_._1).getOrElse(0L) + 1
           val name = f"${IndexManifest.LockFile}-$next%09d"
-          val deadline = System.currentTimeMillis() + LeaseTtlMs
+          val deadline = ManifestClock.now() + LeaseTtlMs
           if (writeExclusive(s"$root/$name", s"$token\t$deadline")) {
             // CLAIM VERIFY — the create alone is not proof of
             // headship: the gap between the LISTING that chose this
@@ -955,7 +945,7 @@ private[graft] object HadoopManifestIo extends ManifestIo {
             // instant zombie.
             val fresh = leaseGens(root)
             if (fresh.headOption.exists(_._1 > next) ||
-                System.currentTimeMillis() >= deadline - fenceMarginMs) {
+                ManifestClock.now() >= deadline - fenceMarginMs) {
               // stale claim: disown it (RELEASED keeps monotonicity)
               // and re-evaluate the real head
               try writeString(s"$root/$name", s"$ReleasedMarker\t$token")
@@ -963,10 +953,6 @@ private[graft] object HadoopManifestIo extends ManifestIo {
             } else {
               mine = name
               myDeadline = deadline
-              if (sys.props.contains("graft.debug.gc"))
-                System.err.println(s"[lease] ACQ $name " +
-                  s"tok=${token.take(8)} dl=$deadline " +
-                  s"t=${System.currentTimeMillis()}")
               // prune superseded generations (all strictly below
               // ours, from the FRESH listing): released markers,
               // expired zombies, the legacy plain lock. Re-claims of
@@ -1000,9 +986,6 @@ private[graft] object HadoopManifestIo extends ManifestIo {
         // RELEASED stub below the current head, harmless and pruned
         // by the next takeover. Best-effort: an unreleased lease just
         // waits out its TTL.
-        if (sys.props.contains("graft.debug.gc"))
-          System.err.println(s"[lease] REL $mine tok=${token.take(8)} " +
-            s"t=${System.currentTimeMillis()}")
         try writeString(s"$root/$mine", s"$ReleasedMarker\t$token")
         catch { case _: java.io.IOException => () }
       }
@@ -1073,9 +1056,6 @@ private[graft] object HadoopManifestIo extends ManifestIo {
     // committed after the token was read, token+1 is taken and the
     // conditional create loses loudly.
     val name = f"MANIFEST-${token + 1}%09d"
-    if (sys.props.contains("graft.debug.gc"))
-      System.err.println(s"[publish] $name head=${lineage.headOption} " +
-        s"t=${System.currentTimeMillis()}")
     // failpoint: a TTL-scale stall between the deadline fence above
     // and the conditional create below (the first leg of the
     // documented ambiguity window) — spec-injected only
@@ -1187,7 +1167,7 @@ private[graft] object HadoopManifestIo extends ManifestIo {
     // re-claimed (the create fails and the stager takes the next
     // number)
     writeExclusive(s"$root/$version/$StageMarkerFile",
-      System.currentTimeMillis().toString)
+      ManifestClock.now().toString)
   }
 
   def finalizeVersion(root: String, version: String): String = {
@@ -1198,6 +1178,10 @@ private[graft] object HadoopManifestIo extends ManifestIo {
     // materializing an empty dir here would defeat commitImpl's
     // dangling-pointer replay guard (a crash between finalize and
     // publish leaves STAGE+COMMITTED, an unreferenced version — GC'd).
+    // The sentinel's content is the wall clock, not the manifest
+    // clock: it is no TTL input but the version's identity stamp
+    // (versionStamp, `IndexBuffer`'s key), which must differ
+    // between a version and a wiped-and-rebuilt root's same name.
     if (isDirectory(s"$root/$version"))
       writeExclusive(s"$root/$version/$CommittedMarkerFile",
         System.currentTimeMillis().toString): Unit
@@ -1230,7 +1214,7 @@ private[graft] object HadoopManifestIo extends ManifestIo {
     val f = fs(root)
     val p = new Path(root)
     val stageGraceCutoff =
-      System.currentTimeMillis() - IndexManifest.StageTtlMs
+      ManifestClock.now() - IndexManifest.StageTtlMs
     if (!f.exists(p)) (Seq.empty, Seq.empty)
     else {
       val (dirs, files) = f.listStatus(p).toSeq.partition(_.isDirectory)

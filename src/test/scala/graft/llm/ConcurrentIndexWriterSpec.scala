@@ -213,7 +213,7 @@ class ConcurrentIndexWriterSpec extends SparkSpec {
         !java.nio.file.Files.readString(victimLog.toPath)
           .contains("committed") &&
         System.currentTimeMillis() < deadline)
-      Thread.sleep(25)
+      Thread.sleep(25) // poll the log while the storm JVM starts up
     victim.destroyForcibly(): Unit
     victim.waitFor(): Unit
     val logs = procs.map { case (p, logFile) =>

@@ -4,6 +4,8 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
+import ManifestHooks.{LockWaits, stagedArtifacts, withClock, withFailpoint}
+
 /** Object-store certification of the manifest: index roots addressed
   * by SCHEME (`file://…` here, the same code path as `hdfs://`/
   * `s3a://`) run the REAL verbs end-to-end through
@@ -149,15 +151,23 @@ class HadoopManifestSpec extends SparkSpec {
       val preContent = preManifest
         .map(n => java.nio.file.Files.readString(
           java.nio.file.Paths.get(local, n)))
-      IndexManifest.failpoint = msg =>
-        if (msg.contains(root)) throw new RuntimeException(
-          s"injected crash before commit-file create: $msg")
-      try {
+      // crash as the commit enters: the append has staged everything
+      @volatile var staged = Map.empty[String, Set[String]]
+      withFailpoint { msg =>
+        if (msg == s"commit:$root") {
+          staged = stagedArtifacts(root, Seq("postings", "stats",
+            "tombstones"))
+          throw new RuntimeException(
+            s"injected crash before commit-file create: $msg")
+        }
+      } {
         intercept[RuntimeException] {
           Vocabulary.appendBm25Index(docs.limit(0), "doc_id", "text",
             root, buckets = 4)
         }
-      } finally IndexManifest.failpoint = _ => ()
+      }
+      assert(staged.values.toSeq == Seq(Set("postings", "stats")),
+        s"the crash did not land between staging and commit: $staged")
       assert(bm25Serve(root) == pre,
         "a crashed append changed the served index on a schemed root")
       // already-published commit files are IMMUTABLE: the crash must
@@ -172,6 +182,59 @@ class HadoopManifestSpec extends SparkSpec {
         "doc_id", "text", root, buckets = 4)
       assert(IndexManifest.history(root).size == 2)
       assertObjectStoreShape(local)
+    }
+  }
+
+  test("a crash at publish: or at publish-pre-create: (the version " +
+      "finalized, its commit file not yet created) leaves the old " +
+      "version serving; a fresh writer's retry lands and its gc reaps " +
+      "the crashed version") {
+    Seq("publish", "publish-pre-create").foreach { point =>
+      val (root, local) = schemedTemp("hfs_pubcrash")
+      val docs = corpus
+      poisonLinks {
+        Vocabulary.writeBm25Index(docs.filter(col("doc_id") < 40),
+          "doc_id", "text", root, buckets = 4)
+        val pre = bm25Serve(root)
+        val v1 = IndexManifest.current(root).get
+        @volatile var crashed: Option[String] = None
+        withFailpoint { msg =>
+          if (msg == s"$point:$root") {
+            // the crashing commit's version is finalized: it carries
+            // the COMMITTED sentinel but no commit file names it
+            crashed = HadoopManifestIo.listVersionDirNames(root)
+              .filterNot(IndexManifest.history(root).contains).headOption
+            throw new RuntimeException(s"injected crash at $msg")
+          }
+        } {
+          intercept[RuntimeException] {
+            Vocabulary.appendBm25Index(docs.filter(col("doc_id") >= 40),
+              "doc_id", "text", root, buckets = 4)
+          }
+        }
+        assert(crashed.isDefined,
+          s"$point: the crashed version was not finalized")
+        assert(IndexManifest.history(root) == Seq(v1),
+          s"$point: the crash moved the pointer")
+        assert(bm25Serve(root) == pre, s"$point: the crash changed the serve")
+        assert(new java.io.File(s"$local/${crashed.get}").isDirectory)
+        assertLeasesReleased(local)
+        // a fresh writer: the retry takes the lease at once, lands on
+        // top of v1, and its gc reaps the unreferenced crashed version
+        Vocabulary.appendBm25Index(docs.filter(col("doc_id") >= 40),
+          "doc_id", "text", root, buckets = 4)
+        val h = IndexManifest.history(root)
+        assert(h.size == 2 && h(1) == v1 && !h.contains(crashed.get),
+          s"$point: the retry did not land on v1: $h")
+        assert(!new java.io.File(s"$local/${crashed.get}").exists(),
+          s"$point: the crashed version survived the next commit's gc")
+        val full = java.nio.file.Files
+          .createTempDirectory("hfs_pubcrash_full").toString + "/idx"
+        Vocabulary.writeBm25Index(docs, "doc_id", "text", full, buckets = 4)
+        assert(bm25Serve(root) == bm25Serve(full),
+          s"$point: the recovered index diverged from a full build")
+        assertObjectStoreShape(local)
+      }
     }
   }
 
@@ -203,18 +266,21 @@ class HadoopManifestSpec extends SparkSpec {
       // a LIVE foreign lease (deadline in the future) at the HEAD
       // generation blocks commit
       val lease = seedForeignLease(local,
-        s"foreign-holder\t${System.currentTimeMillis() + 60000}")
+        s"foreign-holder\t${ManifestClock.now() + 60000}")
       val (v2, d2) = IndexManifest.stage(root)
       spark.range(1).write.parquet(s"$d2/data")
       val done = new java.util.concurrent.CountDownLatch(1)
       @volatile var err: Throwable = null
-      val t = new Thread(() => {
-        try IndexManifest.commit(root, v2): Unit
-        catch { case x: Throwable => err = x }
-        finally done.countDown()
-      })
-      t.start()
-      Thread.sleep(400)
+      val waits = new LockWaits(root)
+      withFailpoint(waits.hook) {
+        val t = new Thread(() => {
+          try IndexManifest.commit(root, v2): Unit
+          catch { case x: Throwable => err = x }
+          finally done.countDown()
+        })
+        t.start()
+        assert(waits.await(), "the racing commit never waited on the lease")
+      }
       assert(done.getCount == 1,
         "commit proceeded while a live foreign lease was held")
       assert(err == null, s"commit threw instead of waiting: $err")
@@ -226,7 +292,7 @@ class HadoopManifestSpec extends SparkSpec {
 
       // an EXPIRED lease (crashed holder) is taken over without help
       val dead = seedForeignLease(local,
-        s"dead-holder\t${System.currentTimeMillis() - 1000}")
+        s"dead-holder\t${ManifestClock.now() - 1000}")
       val (v3, d3) = IndexManifest.stage(root)
       spark.range(1).write.parquet(s"$d3/data")
       IndexManifest.commit(root, v3): Unit
@@ -308,13 +374,15 @@ class HadoopManifestSpec extends SparkSpec {
       // seed a crashed holder's expired lease at the head generation —
       // both contenders see a takeover opportunity at once
       seedForeignLease(local,
-        s"dead-holder\t${System.currentTimeMillis() - 1000}"): Unit
+        s"dead-holder\t${ManifestClock.now() - 1000}"): Unit
       val barrier = new java.util.concurrent.CyclicBarrier(2)
       val ts = Seq(root, alias).map { r =>
         val t = new Thread(() => {
           barrier.await()
           HadoopManifestIo.withLock(r) {
             if (inside.incrementAndGet() > 1) overlaps.incrementAndGet()
+            // hold the lease a moment inside the critical section, so
+            // an overlapping second holder would be seen
             Thread.sleep(15)
             inside.decrementAndGet()
           }
@@ -375,44 +443,47 @@ class HadoopManifestSpec extends SparkSpec {
       // the lease TTL, a successor taking over and committing, then
       // the zombie waking to publish — it must throw, and the
       // successor's version must survive as current
-      val prevTtl = HadoopManifestIo.LeaseTtlMs
-      HadoopManifestIo.LeaseTtlMs = 400
-      val stalled = new java.util.concurrent.atomic.AtomicBoolean(false)
-      IndexManifest.failpoint = msg =>
-        if (msg == s"publish:$root" && stalled.compareAndSet(false, true))
-          Thread.sleep(3000) // outlive the lease mid-commit, once —
-          // generous past the TTL so the successor's full takeover +
-          // commit (+ suite-load noise) always lands inside the stall
-      try {
-        val (vz, dz) = IndexManifest.stage(root)
-        spark.range(1).write.parquet(s"$dz/data")
-        @volatile var zombieErr: Throwable = null
-        val zombie = new Thread(() => {
-          try IndexManifest.commit(root, vz): Unit
-          catch { case t: Throwable => zombieErr = t }
-        })
-        zombie.start()
-        // wait until the zombie is stalled INSIDE the lock, then let
-        // its lease expire and commit over it from this thread. The
-        // zombie holds the in-process monitor for `root`, so the
-        // successor commits through an ALIAS spelling (same files,
-        // different monitor key) — mutual exclusion rests on the
-        // lease alone, as it would across processes
-        while (!stalled.get()) Thread.sleep(10)
-        Thread.sleep(500) // past LeaseTtlMs
-        val (vs, ds) = IndexManifest.stage(s"$root/")
-        spark.range(1).write.parquet(s"$ds/data")
-        IndexManifest.commit(s"$root/", vs): Unit
-        zombie.join(30000)
-        assert(zombieErr != null &&
-          zombieErr.isInstanceOf[ConcurrentCommitException],
-          s"the zombie commit did not lose loudly: $zombieErr")
-        assert(IndexManifest.current(root).contains(vs),
-          "the zombie displaced the successor's commit")
-        assert(IndexManifest.history(root).contains(vs))
-      } finally {
-        IndexManifest.failpoint = _ => ()
-        HadoopManifestIo.LeaseTtlMs = prevTtl
+      val stalled = new java.util.concurrent.CountDownLatch(1)
+      val resume = new java.util.concurrent.CountDownLatch(1)
+      val once = new java.util.concurrent.atomic.AtomicBoolean(false)
+      withClock {
+        withFailpoint { msg =>
+          if (msg == s"publish:$root" && once.compareAndSet(false, true)) {
+            stalled.countDown()
+            resume.await()
+          }
+        } {
+          try {
+            val (vz, dz) = IndexManifest.stage(root)
+            spark.range(1).write.parquet(s"$dz/data")
+            @volatile var zombieErr: Throwable = null
+            val zombie = new Thread(() => {
+              try IndexManifest.commit(root, vz): Unit
+              catch { case t: Throwable => zombieErr = t }
+            })
+            zombie.start()
+            // once the zombie is stalled INSIDE the lock, its lease
+            // lapses and this thread commits over it. The zombie holds
+            // the in-process monitor for `root`, so the successor
+            // commits through an ALIAS spelling (same files, different
+            // monitor key) — mutual exclusion rests on the lease
+            // alone, as it would across processes
+            assert(stalled.await(30, java.util.concurrent.TimeUnit.SECONDS),
+              "the commit never reached its publish failpoint")
+            ManifestClock.advance(HadoopManifestIo.LeaseTtlMs + 500)
+            val (vs, ds) = IndexManifest.stage(s"$root/")
+            spark.range(1).write.parquet(s"$ds/data")
+            IndexManifest.commit(s"$root/", vs): Unit
+            resume.countDown()
+            zombie.join(30000)
+            assert(zombieErr != null &&
+              zombieErr.isInstanceOf[ConcurrentCommitException],
+              s"the zombie commit did not lose loudly: $zombieErr")
+            assert(IndexManifest.current(root).contains(vs),
+              "the zombie displaced the successor's commit")
+            assert(IndexManifest.history(root).contains(vs))
+          } finally resume.countDown()
+        }
       }
       assertObjectStoreShape(local)
     }
@@ -437,16 +508,15 @@ class HadoopManifestSpec extends SparkSpec {
         "1"): Unit
       java.nio.file.Files.writeString(
         orphan.toPath.resolve("junk"), "x"): Unit
-      val prevTtl = HadoopManifestIo.LeaseTtlMs
-      HadoopManifestIo.LeaseTtlMs = 300
-      try {
+      withClock {
         HadoopManifestIo.withLock(root) {
-          Thread.sleep(600) // outlive our own lease: we are the zombie
+          // outlive our own lease: we are the zombie
+          ManifestClock.advance(HadoopManifestIo.LeaseTtlMs + 300)
           IndexManifest.gc(root)
         }
         assert(orphan.isDirectory,
           "a zombie holder's gc reaped past its lapsed lease")
-      } finally HadoopManifestIo.LeaseTtlMs = prevTtl
+      }
       // a live holder's gc reaps it
       HadoopManifestIo.withLock(root)(IndexManifest.gc(root))
       assert(!orphan.exists(),
@@ -601,12 +671,15 @@ class HadoopManifestSpec extends SparkSpec {
     java.nio.file.Files.writeString(java.nio.file.Paths.get(local,
       f"${IndexManifest.LockFile}-${3L}%09d"), "RELEASED\tzombie"): Unit
     val live = seedForeignLease(local,
-      s"foreign\t${System.currentTimeMillis() + 60000}")
+      s"foreign\t${ManifestClock.now() + 60000}")
     val entered = new java.util.concurrent.CountDownLatch(1)
+    val waits = new LockWaits(root)
     val t = new Thread(() =>
       HadoopManifestIo.withLock(root)(entered.countDown()))
-    t.start()
-    Thread.sleep(400)
+    withFailpoint(waits.hook) {
+      t.start()
+      assert(waits.await(), "the contender never waited on the head lease")
+    }
     assert(entered.getCount == 1,
       "a contender ignored a live head lease (stale low-generation " +
         "stubs confused the head selection)")
@@ -623,8 +696,6 @@ class HadoopManifestSpec extends SparkSpec {
       "lapses fast)") {
     val (root, local) = schemedTemp("hfs_ioretry")
     HadoopManifestIo.mkdirs(root)
-    val prevTtl = HadoopManifestIo.LeaseTtlMs
-    HadoopManifestIo.LeaseTtlMs = 600
     // a LIVE foreign head lease written through raw LocalFileSystem
     // (checksummed), so it records a .crc sidecar...
     val name = f"${IndexManifest.LockFile}-${1L}%09d"
@@ -632,7 +703,7 @@ class HadoopManifestSpec extends SparkSpec {
       .getFileSystem(new org.apache.hadoop.conf.Configuration())
     val lout = lfs.create(
       new org.apache.hadoop.fs.Path(s"$root/$name"), true)
-    lout.write(s"foreign\t${System.currentTimeMillis() + 3600000}"
+    lout.write(s"foreign\t${ManifestClock.now() + 3600000}"
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     lout.close()
     // ...then corrupt the content bytes behind its back: every read
@@ -641,22 +712,44 @@ class HadoopManifestSpec extends SparkSpec {
     // short burst of failed reads classified a live lease as lapsed
     // and took over inside the holder's deadline (re-admitting
     // concurrent fenced GC reaps); post-fix the contender waits out a
-    // full TTL from the first failure, past any live deadline.
-    try {
-      val raw = java.nio.file.Paths.get(local, name)
-      val bytes = java.nio.file.Files.readAllBytes(raw)
-      bytes(0) = (bytes(0) ^ 0x5a).toByte
-      java.nio.file.Files.write(raw, bytes): Unit
-      val t0 = System.nanoTime()
-      HadoopManifestIo.withLock(root) {}
-      val ms = (System.nanoTime() - t0) / 1000000
-      assert(ms >= HadoopManifestIo.LeaseTtlMs - 100,
-        s"takeover after ${ms}ms — an unreadable live head was usurped " +
-          s"inside the ${HadoopManifestIo.LeaseTtlMs}ms TTL patience")
-      assert(headGenOf(local) == 2L,
-        "takeover did not use the next generation")
-      assertLeasesReleased(local)
-    } finally HadoopManifestIo.LeaseTtlMs = prevTtl
+    // full TTL from the first failure, past any live deadline. The
+    // patience is read on the manifest clock, which the spec advances
+    // instead of waiting five minutes.
+    val raw = java.nio.file.Paths.get(local, name)
+    val bytes = java.nio.file.Files.readAllBytes(raw)
+    bytes(0) = (bytes(0) ^ 0x5a).toByte
+    java.nio.file.Files.write(raw, bytes): Unit
+    val ttl = HadoopManifestIo.LeaseTtlMs
+    val waits = new LockWaits(root)
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    @volatile var ms = -1L
+    withClock {
+      withFailpoint(waits.hook) {
+        val t0 = ManifestClock.now()
+        val t = new Thread(() =>
+          HadoopManifestIo.withLock(root) {
+            ms = ManifestClock.now() - t0
+            entered.countDown()
+          })
+        t.start()
+        assert(waits.await(2), "the contender never re-polled the head")
+        // a minute short of the patience: still waiting
+        ManifestClock.advance(ttl - 60000)
+        assert(waits.await(2), "the contender stopped polling the head")
+        assert(entered.getCount == 1,
+          "an unreadable live head was usurped inside the TTL patience")
+        ManifestClock.advance(60000 + 1000)
+        assert(entered.await(30, java.util.concurrent.TimeUnit.SECONDS),
+          "the contender never took over once the patience ran out")
+        t.join(30000)
+      }
+    }
+    assert(ms >= ttl - 100,
+      s"takeover after ${ms}ms — an unreadable live head was usurped " +
+        s"inside the ${ttl}ms TTL patience")
+    assert(headGenOf(local) == 2L,
+      "takeover did not use the next generation")
+    assertLeasesReleased(local)
   }
 
   private def headGenOf(local: String): Long =
@@ -670,14 +763,18 @@ class HadoopManifestSpec extends SparkSpec {
       "absorbs cross-process clock skew") {
     val (root, _) = schemedTemp("hfs_skew")
     HadoopManifestIo.mkdirs(root)
-    val prevTtl = HadoopManifestIo.LeaseTtlMs
-    HadoopManifestIo.LeaseTtlMs = 4000 // fence margin = min(5000, 1000)
-    try {
-      assert(HadoopManifestIo.fenceMarginMs == 1000)
+    // the allowance is capped at a quarter of the TTL, so a short
+    // storm lease keeps a usable window; at the 5-minute TTL it is 5 s
+    assert(HadoopManifestIo.fenceMarginFor(4000) == 1000)
+    assert(HadoopManifestIo.fenceMarginMs ==
+      HadoopManifestIo.LeaseSkewAllowanceMs)
+    withClock {
       HadoopManifestIo.withLock(root) {
         assert(HadoopManifestIo.lockStillHeld(root),
           "a fresh lease must pass its own fence")
-        Thread.sleep(3300) // inside the deadline, inside the margin
+        // inside the deadline, inside the margin
+        ManifestClock.advance(HadoopManifestIo.LeaseTtlMs -
+          HadoopManifestIo.fenceMarginMs + 300)
         assert(!HadoopManifestIo.lockStillHeld(root),
           "the fence trusted the lease inside the skew-allowance window")
         // ...while a CONTENDER at the same instant still honors the
@@ -689,11 +786,11 @@ class HadoopManifestSpec extends SparkSpec {
         val deadline = java.nio.file.Files.readString(
           java.nio.file.Paths.get(root.stripPrefix("file://"), head))
           .split("\t", 2)(1).trim.toLong
-        assert(deadline > System.currentTimeMillis(),
+        assert(deadline > ManifestClock.now(),
           "no gap: the contender-visible deadline had already passed " +
             "when the holder's fence gave up")
       }
-    } finally HadoopManifestIo.LeaseTtlMs = prevTtl
+    }
   }
 
   test("HOSTILE cross-process storm: three JVMs, a shrunken lease " +
@@ -791,8 +888,6 @@ class HadoopManifestSpec extends SparkSpec {
       "the re-list reads the lineage back and sees the chain carries " +
       "it, so no disown, no rebase, no double-apply") {
     val (root, local) = schemedTemp("hfs_fp_carried")
-    val prevTtl = HadoopManifestIo.LeaseTtlMs
-    HadoopManifestIo.LeaseTtlMs = 400
     val stalled = new java.util.concurrent.CountDownLatch(1)
     val resume = new java.util.concurrent.CountDownLatch(1)
     val once = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -821,7 +916,7 @@ class HadoopManifestSpec extends SparkSpec {
       // alias spelling (same files, different in-process monitor);
       // each takes over the expired lease, resolves the zombie's
       // commit as head, and rebases on top of it
-      Thread.sleep(HadoopManifestIo.LeaseTtlMs + 200)
+      ManifestClock.advance(HadoopManifestIo.LeaseTtlMs + 200)
       val successors = (1 to HadoopManifestIo.KeepCommitFiles).map { i =>
         val (vs, ds) = IndexManifest.stage(s"$root/")
         HadoopManifestIo.writeString(s"$ds/data", s"succ-$i")
@@ -846,7 +941,7 @@ class HadoopManifestSpec extends SparkSpec {
       assert(markers.distinct.size == markers.size)
     } finally {
       IndexManifest.failpoint = _ => ()
-      HadoopManifestIo.LeaseTtlMs = prevTtl
+      ManifestClock.reset()
       resume.countDown()
     }
   }
@@ -858,8 +953,6 @@ class HadoopManifestSpec extends SparkSpec {
       "does not carry it), the file is deleted, and no reader could " +
       "ever have resolved it (it was never the max sequence)") {
     val (root, local) = schemedTemp("hfs_fp_invisible")
-    val prevTtl = HadoopManifestIo.LeaseTtlMs
-    HadoopManifestIo.LeaseTtlMs = 400
     val stalled = new java.util.concurrent.CountDownLatch(1)
     val resume = new java.util.concurrent.CountDownLatch(1)
     val once = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -888,7 +981,7 @@ class HadoopManifestSpec extends SparkSpec {
       // publishes the very sequence number the zombie computed, the
       // last one's prune drops that name — so the zombie's delayed
       // create RECREATES a pruned name and succeeds
-      Thread.sleep(HadoopManifestIo.LeaseTtlMs + 200)
+      ManifestClock.advance(HadoopManifestIo.LeaseTtlMs + 200)
       val successors =
         (1 to HadoopManifestIo.KeepCommitFiles + 1).map { i =>
           val (vs, ds) = IndexManifest.stage(s"$root/")
@@ -919,7 +1012,7 @@ class HadoopManifestSpec extends SparkSpec {
       }
     } finally {
       IndexManifest.failpoint = _ => ()
-      HadoopManifestIo.LeaseTtlMs = prevTtl
+      ManifestClock.reset()
       resume.countDown()
     }
   }
@@ -930,8 +1023,6 @@ class HadoopManifestSpec extends SparkSpec {
       "carries, so lineage containment proves nothing and reporting " +
       "the unresolvable trim as applied would be a silent no-op") {
     val (root, _) = schemedTemp("hfs_fp_trim")
-    val prevTtl = HadoopManifestIo.LeaseTtlMs
-    HadoopManifestIo.LeaseTtlMs = 400
     val stalled = new java.util.concurrent.CountDownLatch(1)
     val resume = new java.util.concurrent.CountDownLatch(1)
     val once = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -955,7 +1046,7 @@ class HadoopManifestSpec extends SparkSpec {
       zombie.start()
       assert(stalled.await(30, java.util.concurrent.TimeUnit.SECONDS),
         "the trim never reached its pre-create failpoint")
-      Thread.sleep(HadoopManifestIo.LeaseTtlMs + 200)
+      ManifestClock.advance(HadoopManifestIo.LeaseTtlMs + 200)
       // successors bury AND PRUNE the name the zombie trim computed
       val successors =
         (1 to HadoopManifestIo.KeepCommitFiles + 1).map { i =>
@@ -978,7 +1069,7 @@ class HadoopManifestSpec extends SparkSpec {
       assert(IndexManifest.history(root).size == 1)
     } finally {
       IndexManifest.failpoint = _ => ()
-      HadoopManifestIo.LeaseTtlMs = prevTtl
+      ManifestClock.reset()
       resume.countDown()
     }
   }
@@ -1142,10 +1233,8 @@ class HadoopManifestSpec extends SparkSpec {
       // a LEAKED pin lapses by mtime (the hadoop liveness signal) and
       // stops blocking GC; deletes and expiry then reclaim normally
       val leaked = IndexManifest.pinCurrent(root)
-      val prevPinTtl = IndexManifest.ReaderPinTtlMs
-      try {
-        IndexManifest.ReaderPinTtlMs = 50
-        Thread.sleep(120)
+      withClock {
+        ManifestClock.advance(IndexManifest.ReaderPinTtlMs + 1000)
         chain()
         // expiry drops the carry-listing references too (on a listing
         // root a superseded version legitimately survives while a
@@ -1155,7 +1244,7 @@ class HadoopManifestSpec extends SparkSpec {
         assert(!new java.io.File(s"$local/${leaked.version}").exists(),
           "a stale (leaked) pin still blocked hadoop-backend GC " +
             "past its TTL")
-      } finally IndexManifest.ReaderPinTtlMs = prevPinTtl
+      }
       assertObjectStoreShape(local)
     }
   }
@@ -1202,8 +1291,6 @@ class HadoopManifestSpec extends SparkSpec {
       "out a pin naming the reaped version; it deletes the landed pin " +
       "and retries against the fresh current") {
     val (root, local) = schemedTemp("hfs_pinfence")
-    val prevTtl = HadoopManifestIo.LeaseTtlMs
-    HadoopManifestIo.LeaseTtlMs = 400
     val stalled = new java.util.concurrent.CountDownLatch(1)
     val resume = new java.util.concurrent.CountDownLatch(1)
     val once = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -1229,7 +1316,7 @@ class HadoopManifestSpec extends SparkSpec {
       // zombie holds current=v1 in hand; lapse its lease, then a
       // takeover (alias spelling: same files, different in-process
       // monitor) commits twice and expires history, reaping v1
-      Thread.sleep(HadoopManifestIo.LeaseTtlMs + 200)
+      ManifestClock.advance(HadoopManifestIo.LeaseTtlMs + 200)
       val (v2, d2) = IndexManifest.stage(s"$root/")
       HadoopManifestIo.writeString(s"$d2/data", "v2")
       IndexManifest.commit(s"$root/", v2): Unit
@@ -1268,7 +1355,7 @@ class HadoopManifestSpec extends SparkSpec {
       pin.release()
     } finally {
       IndexManifest.failpoint = _ => ()
-      HadoopManifestIo.LeaseTtlMs = prevTtl
+      ManifestClock.reset()
       resume.countDown()
     }
   }
@@ -1279,8 +1366,6 @@ class HadoopManifestSpec extends SparkSpec {
       "PinAcquireAttempts fenced attempts — it never returns a pin " +
       "it cannot prove, and leaves no pin litter behind") {
     val (root, local) = schemedTemp("hfs_pinexhaust")
-    val prevTtl = HadoopManifestIo.LeaseTtlMs
-    HadoopManifestIo.LeaseTtlMs = 300
     val hits = new java.util.concurrent.atomic.AtomicInteger()
     try {
       val (v1, d1) = IndexManifest.stage(root)
@@ -1292,7 +1377,7 @@ class HadoopManifestSpec extends SparkSpec {
           // stall past the lease TTL on EVERY attempt — the
           // post-write pin fence must fail each time, and the
           // bounded retry must exhaust rather than spin forever
-          Thread.sleep(HadoopManifestIo.LeaseTtlMs + 150)
+          ManifestClock.advance(HadoopManifestIo.LeaseTtlMs + 150)
         }
       val err = intercept[ConcurrentCommitException] {
         IndexManifest.pinCurrent(root)
@@ -1313,7 +1398,7 @@ class HadoopManifestSpec extends SparkSpec {
       pin.release()
     } finally {
       IndexManifest.failpoint = _ => ()
-      HadoopManifestIo.LeaseTtlMs = prevTtl
+      ManifestClock.reset()
     }
   }
 
@@ -1322,8 +1407,6 @@ class HadoopManifestSpec extends SparkSpec {
       "expires the base it resolved — rebases loudly onto the fresh " +
       "current instead of silently carrying from a reaped dir") {
     val (root, local) = schemedTemp("hfs_basefence")
-    val prevTtl = HadoopManifestIo.LeaseTtlMs
-    HadoopManifestIo.LeaseTtlMs = 400
     val stalled = new java.util.concurrent.CountDownLatch(1)
     val resume = new java.util.concurrent.CountDownLatch(1)
     val once = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -1349,7 +1432,7 @@ class HadoopManifestSpec extends SparkSpec {
       zombie.start()
       assert(stalled.await(30, java.util.concurrent.TimeUnit.SECONDS),
         "mutate never reached its base-pin failpoint")
-      Thread.sleep(HadoopManifestIo.LeaseTtlMs + 200)
+      ManifestClock.advance(HadoopManifestIo.LeaseTtlMs + 200)
       val (v2, d2) = IndexManifest.stage(s"$root/")
       HadoopManifestIo.writeString(s"$d2/data", "v2")
       IndexManifest.commit(s"$root/", v2): Unit
@@ -1374,7 +1457,7 @@ class HadoopManifestSpec extends SparkSpec {
         s"the mutation's delta is not the current version at $cur")
     } finally {
       IndexManifest.failpoint = _ => ()
-      HadoopManifestIo.LeaseTtlMs = prevTtl
+      ManifestClock.reset()
       resume.countDown()
     }
   }

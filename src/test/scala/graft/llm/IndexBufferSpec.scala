@@ -9,6 +9,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
 import graft.SparkSpec
 
+import ManifestHooks.withFailpoint
+
 /** The driver-side index buffer that serves small committed LSH and
   * BM25 versions without a Spark job:
   *
@@ -16,9 +18,10 @@ import graft.SparkSpec
   *     append → delete → compact, on both carry layouts, a buffered
   *     read returns the Spark plan's schema, ids and (bit-equal ANN,
   *     equal BM25) scores;
-  *   - one version per read: a compaction committed between a read's
-  *     pointer resolution and its artifact reads never makes the read
-  *     serve a deleted id, on the buffer path and on the Spark plan;
+  *   - one version per read: a compaction, or an append and a delete,
+  *     committed between a read's pointer resolution and its artifact
+  *     reads never change what the read serves, on the buffer path and
+  *     on the Spark plan;
   *   - heap bound: one decoded version per root, whatever the commit
   *     count;
   *   - pins: a decode that races two commits and GC still answers from
@@ -60,12 +63,6 @@ class IndexBufferSpec extends SparkSpec {
         else centres(r.nextInt(4)).toSeq.map(_ + 0.3 * r.nextGaussian())
       (i.toLong, v)
     }.toDF("id", "vec")
-  }
-
-  private def withFailpoint[T](hook: String => Unit)(body: => T): T = {
-    IndexManifest.failpoint = hook
-    try body
-    finally IndexManifest.failpoint = _ => ()
   }
 
   private def ann(dir: String, q: Array[Double], probe: Int = 1,
@@ -214,6 +211,54 @@ class IndexBufferSpec extends SparkSpec {
       val ids = annKey(served).map(_._1)
       assert(ids.nonEmpty && ids.intersect(dead).isEmpty,
         s"deleted ids served (planned=$planned): ${ids.intersect(dead)}")
+    }
+  }
+
+  test("an append and a delete committed between a read's resolution " +
+      "and its artifact reads leave the read serving exactly the " +
+      "version it resolved, buffered or planned") {
+    Seq(false, true).foreach { planned =>
+      val dir = tmpRoot("buf_beside")
+      val base = vectors(51, 0 until 160)
+      Similarity.writeLshIndex(Similarity.multiTableIndex(base, "vec", "id",
+        dim, bits, tables), dir, buildGroups)
+      val q = base.filter($"id" === 5).head().getSeq[Double](1).toArray
+      val v1 = IndexManifest.current(dir).get
+      val expected = annKey(annPlan(dir, v1, q))
+      // the append lands copies of the query (they would top the
+      // answer); the delete tombstones the query's nearest neighbours
+      // (they would leave it)
+      val near = (1000L until 1005L).map(i => (i, q.toSeq)).toDF("id", "vec")
+      val dead = expected.map(_._1).take(5)
+      // two commits push v1 out of the retained lineage: the caller
+      // holds a pin across the read, as a read beside a chain must
+      val served = IndexManifest.withPin(dir) { pin =>
+        assert(pin.version == v1)
+        var fired = false
+        withFailpoint { point =>
+          if (point == s"resolve:$dir" && !fired) {
+            fired = true
+            Similarity.appendLshIndex(near, "vec", "id", dir, dim, bits,
+              tables, buildGroups)
+            Similarity.deleteFromLshIndex(dead.toDF("id"), "id", dir)
+          }
+        } {
+          val df =
+            if (planned) annPlan(dir, IndexManifest.resolve(dir), q)
+            else ann(dir, q)
+          assert(fired)
+          assert(planned != df.queryExecution.analyzed
+            .isInstanceOf[LocalRelation])
+          annKey(df)
+        }
+      }
+      assert(IndexManifest.history(dir).size == 2 &&
+        !IndexManifest.history(dir).contains(v1),
+        "the append and the delete did not both commit inside the read")
+      assert(served == expected,
+        s"the read did not serve the version it resolved (planned=$planned)")
+      // the committed versions answer differently: the check has teeth
+      assert(annKey(ann(dir, q)) != expected)
     }
   }
 

@@ -23,11 +23,28 @@ class IndexManifestSpec extends SparkSpec {
       (if (i % 3 == 0) "banana" else "cherry"))
   }.toDF("doc_id", "text")
 
-  /** Arm the failpoint to throw on the next commit under `root`. */
-  private def failNextCommit(root: String): Unit =
+  /** What each stage dir held when the armed crash fired. */
+  @volatile private var stagedAtCrash = Map.empty[String, Set[String]]
+
+  /** Arm the failpoint to throw as the next commit under `root`
+    * enters (`commit:<root>`): after the verb staged every artifact,
+    * before the lock and the pointer flip.
+    */
+  private def failNextCommit(root: String): Unit = {
+    stagedAtCrash = Map.empty
     IndexManifest.failpoint = msg =>
-      if (msg.contains(root)) throw new RuntimeException(
-        s"injected crash before pointer flip: $msg")
+      if (msg == s"commit:$root") {
+        stagedAtCrash = ManifestHooks.stagedArtifacts(root,
+          Seq("postings", "stats", "tombstones", "data", "data_delta"))
+        throw new RuntimeException(
+          s"injected crash before pointer flip: $msg")
+      }
+  }
+
+  /** The crash hit exactly one stage, holding exactly `artifacts`. */
+  private def assertCrashedStaged(artifacts: String*): Unit =
+    assert(stagedAtCrash.values.toSeq == Seq(artifacts.toSet),
+      s"the crash did not land between staging and commit: $stagedAtCrash")
 
   private def disarm(): Unit = IndexManifest.failpoint = _ => ()
 
@@ -81,6 +98,7 @@ class IndexManifestSpec extends SparkSpec {
         Vocabulary.compactBm25Index(spark, path, buckets = 4)
       }
     } finally disarm()
+    assertCrashedStaged("postings", "stats")
     // the crash died AFTER staging all artifacts, BEFORE the pointer
     // flip: the committed version must be untouched and the serve
     // bit-identical — in particular NO double subtraction of the
@@ -123,6 +141,7 @@ class IndexManifestSpec extends SparkSpec {
           "doc_id", "text", path, buckets = 4)
       }
     } finally disarm()
+    assertCrashedStaged("postings", "stats")
     assert(bm25Serve(path) == pre,
       "a crashed append changed the served index")
     // the retry lands the full merge
@@ -160,6 +179,7 @@ class IndexManifestSpec extends SparkSpec {
         Similarity.compactLshIndex(spark, path)
       }
     } finally disarm()
+    assertCrashedStaged("data")
     // under the old two-rename swap this window had NO index at
     // `path` at all; now the committed version serves throughout
     assert(annServe(path) == pre)
@@ -169,6 +189,47 @@ class IndexManifestSpec extends SparkSpec {
       df.filter(col("id") >= 3), "vec", "id", dim = 8, bits = 4,
       tables = 4), fresh, groups = 8)
     assert(annServe(path) == annServe(fresh))
+  }
+
+  test("a crash at publish: (the stage renamed to its version, the " +
+      "pointer not yet replaced) leaves the old version serving; a " +
+      "fresh writer's retry lands and its gc reaps the crashed version") {
+    val docs = corpus
+    val path = Files.createTempDirectory("mfst").toString + "/idx"
+    Vocabulary.writeBm25Index(docs.filter(col("doc_id") % 4 =!= 0),
+      "doc_id", "text", path, buckets = 4)
+    val pre = bm25Serve(path)
+    val v1 = IndexManifest.current(path).get
+    var crashed: Option[String] = None
+    IndexManifest.failpoint = msg =>
+      if (msg == s"publish:$path") {
+        crashed = PosixManifestIo.listVersionDirNames(path)
+          .filterNot(_ == v1).headOption
+        throw new RuntimeException(s"injected crash at $msg")
+      }
+    try {
+      intercept[RuntimeException] {
+        Vocabulary.appendBm25Index(docs.filter(col("doc_id") % 4 === 0),
+          "doc_id", "text", path, buckets = 4)
+      }
+    } finally disarm()
+    assert(crashed.isDefined, "the crashed version was not finalized")
+    assert(IndexManifest.history(path) == Seq(v1),
+      "the crash moved the pointer")
+    assert(bm25Serve(path) == pre, "the crash changed the serve")
+    assert(rootDirs(path) == Set(v1, crashed.get))
+    // a fresh writer: the commit lock was released, the retry lands on
+    // top of v1, and its gc reaps the unreferenced crashed version
+    Vocabulary.appendBm25Index(docs.filter(col("doc_id") % 4 === 0),
+      "doc_id", "text", path, buckets = 4)
+    val h = IndexManifest.history(path)
+    assert(h.size == 2 && h(1) == v1 && !h.contains(crashed.get),
+      s"the retry did not land on v1: $h")
+    assert(rootDirs(path) == h.toSet,
+      s"the crashed version survived the next commit's gc: ${rootDirs(path)}")
+    val full = Files.createTempDirectory("mfst").toString + "/idx"
+    Vocabulary.writeBm25Index(docs, "doc_id", "text", full, buckets = 4)
+    assert(bm25Serve(path) == bm25Serve(full))
   }
 
   test("a half-staged version dir is invisible to readers, protected " +

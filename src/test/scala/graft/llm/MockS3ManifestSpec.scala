@@ -4,6 +4,8 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
+import ManifestHooks.{LockWaits, withClock, withFailpoint}
+
 /** Certification of the `trustConditionalCreate` OPT-IN path against
   * simulated object-store semantics ([[MockS3FileSystem]], scheme
   * `mocks3://`): atomic conditional PUT arbitrated at `close()`, NO
@@ -208,12 +210,15 @@ class MockS3ManifestSpec extends SparkSpec {
     // a LIVE foreign lease at the next generation blocks contenders
     val foreign = f"${IndexManifest.LockFile}-${6L}%09d"
     HadoopManifestIo.writeString(s"$root/$foreign",
-      s"foreign\t${System.currentTimeMillis() + 60000}")
+      s"foreign\t${ManifestClock.now() + 60000}")
     val entered = new java.util.concurrent.CountDownLatch(1)
+    val waits = new LockWaits(root)
     val t = new Thread(() =>
       HadoopManifestIo.withLock(root)(entered.countDown()))
-    t.start()
-    Thread.sleep(400)
+    withFailpoint(waits.hook) {
+      t.start()
+      assert(waits.await(), "the contender never waited on the lease")
+    }
     assert(entered.getCount == 1,
       "a contender ignored a live foreign lease on mocks3")
     HadoopManifestIo.deleteIfExists(s"$root/$foreign")
@@ -223,7 +228,7 @@ class MockS3ManifestSpec extends SparkSpec {
     // an EXPIRED foreign head is taken over at the NEXT generation
     val dead = f"${IndexManifest.LockFile}-${8L}%09d"
     HadoopManifestIo.writeString(s"$root/$dead",
-      s"dead\t${System.currentTimeMillis() - 1000}")
+      s"dead\t${ManifestClock.now() - 1000}")
     HadoopManifestIo.withLock(root) {}
     assert(headGen == 9, s"takeover did not use the next generation")
   }
@@ -431,7 +436,7 @@ class MockS3ManifestSpec extends SparkSpec {
     val rounds = 40
     val procs = (0 until writers).map(w =>
       spawnStorm(root, s"mk$w", rounds, Seq("700")))
-    Thread.sleep(1500)
+    Thread.sleep(1500) // let the storm get mid-flight before the kill
     val victim = procs.head._1
     victim.destroyForcibly(): Unit
     victim.waitFor(): Unit
@@ -488,9 +493,7 @@ class MockS3ManifestSpec extends SparkSpec {
       "stamp reaped at StageTtlMs, fresh stamp survives") {
     val (root, local) = mockRoot("gcleak")
     val io = HadoopManifestIo
-    val prevTtl = IndexManifest.StageTtlMs
-    val prevGrace = IndexManifest.UnknownMtimeGraceMs
-    try {
+    withClock {
       // a committed version so gc has a lineage to keep
       val (v1, d1) = IndexManifest.stage(root)
       io.writeString(s"$d1/data", "base")
@@ -513,13 +516,13 @@ class MockS3ManifestSpec extends SparkSpec {
       // STAGE_ACTIVITY (the reservation-to-first-touch kill window)
       assert(io.reserveStage(root, "v00090"))
       zeroMtimes(s"$local/v00090")
-      IndexManifest.StageTtlMs = 50
-      IndexManifest.UnknownMtimeGraceMs = 400
-      Thread.sleep(80) // past the stage TTL; only the grace rule holds it
+      // past the stage TTL; only the grace rule holds it
+      ManifestClock.advance(IndexManifest.StageTtlMs + 30)
       IndexManifest.gc(root)
       assert(new java.io.File(s"$local/v00090").exists(),
         "a no-signal stage was reaped INSIDE its grace window")
-      Thread.sleep(450) // past the grace window
+      // past the grace window
+      ManifestClock.advance(IndexManifest.UnknownMtimeGraceMs + 50)
       IndexManifest.gc(root)
       assert(!new java.io.File(s"$local/v00090").exists(),
         "a killed pre-heartbeat writer's stage leaked past the " +
@@ -529,7 +532,6 @@ class MockS3ManifestSpec extends SparkSpec {
       // the mtime-less store. Fresh stamp survives even with zero
       // mtimes; once the stamp goes stale the stage is reaped at the
       // NEXT pass, no grace needed
-      IndexManifest.StageTtlMs = 300
       val (v9, d9) = IndexManifest.stage(root) // touchStage stamps it
       io.writeString(s"$d9/data", "half-built")
       zeroMtimes(s"$local/$v9") // mtimes gone; the content stamp remains
@@ -537,7 +539,8 @@ class MockS3ManifestSpec extends SparkSpec {
       assert(new java.io.File(s"$local/$v9").exists(),
         "a freshly content-stamped stage was reaped on a store with " +
           "zero mtimes")
-      Thread.sleep(380) // the content stamp is now past StageTtlMs
+      // the content stamp is now past StageTtlMs
+      ManifestClock.advance(IndexManifest.StageTtlMs + 80)
       IndexManifest.gc(root)
       assert(!new java.io.File(s"$local/$v9").exists(),
         "a stamped stage with a stale heartbeat leaked on the " +
@@ -547,9 +550,6 @@ class MockS3ManifestSpec extends SparkSpec {
       assert(IndexManifest.current(root).contains(v1))
       assert(new java.io.File(s"$local/$v1/data").exists())
       assertMockShape(root, local)
-    } finally {
-      IndexManifest.StageTtlMs = prevTtl
-      IndexManifest.UnknownMtimeGraceMs = prevGrace
     }
   }
 
@@ -562,9 +562,7 @@ class MockS3ManifestSpec extends SparkSpec {
       "longer restart the 7-day window forever") {
     val (root, local) = mockRoot("gcdurable")
     val io = HadoopManifestIo
-    val prevTtl = IndexManifest.StageTtlMs
-    val prevGrace = IndexManifest.UnknownMtimeGraceMs
-    try {
+    withClock {
       val (v1, d1) = IndexManifest.stage(root)
       io.writeString(s"$d1/data", "base")
       IndexManifest.commit(root, v1): Unit
@@ -583,9 +581,8 @@ class MockS3ManifestSpec extends SparkSpec {
       // on a store exposing no readable mtimes
       assert(io.reserveStage(root, "v00080"))
       zeroMtimes(s"$local/v00080")
-      IndexManifest.StageTtlMs = 50
-      IndexManifest.UnknownMtimeGraceMs = 400
-      Thread.sleep(80) // past the stage TTL; only the grace rule holds
+      // past the stage TTL; only the grace rule holds
+      ManifestClock.advance(IndexManifest.StageTtlMs + 30)
       IndexManifest.gc(root) // FIRST observation — persists the marker
       val marker = new java.io.File(
         s"$local/v00080/${IndexManifest.FirstSeenFile}")
@@ -607,7 +604,7 @@ class MockS3ManifestSpec extends SparkSpec {
       // FRESH DRIVER past the window: reaps within ONE pass. The
       // pre-fix in-memory clock restarted the window per driver, so
       // this stage would have leaked forever under short-lived drivers
-      Thread.sleep(450)
+      ManifestClock.advance(IndexManifest.UnknownMtimeGraceMs + 50)
       IndexManifest.forgetUnknownSurvivalsForTest()
       IndexManifest.gc(root)
       assert(!new java.io.File(s"$local/v00080").exists(),
@@ -616,9 +613,6 @@ class MockS3ManifestSpec extends SparkSpec {
 
       assert(IndexManifest.current(root).contains(v1))
       assertMockShape(root, local)
-    } finally {
-      IndexManifest.StageTtlMs = prevTtl
-      IndexManifest.UnknownMtimeGraceMs = prevGrace
     }
   }
 }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
+import ManifestHooks.{LockWaits, withClock, withFailpoint}
+
 /** Reader pins and commit hardening: the retain-N window is argued in
   * the manifest scaladoc; this spec RACES it. A lazy reader that must
   * outlive a mutation CHAIN (append → delete → compact = 3 commits,
@@ -96,10 +98,9 @@ class ReaderPinSpec extends SparkSpec {
     val dir = Files.createTempDirectory("pinttl").toString + "/idx"
     buildBase(dir)
     val leaked = IndexManifest.pinCurrent(dir)
-    val prev = IndexManifest.ReaderPinTtlMs
-    try {
-      IndexManifest.ReaderPinTtlMs = 50
-      Thread.sleep(120) // the leaked pin is now stale
+    withClock {
+      // the leaked pin is now stale
+      ManifestClock.advance(IndexManifest.ReaderPinTtlMs + 1000)
       mutationChain(dir)
       assert(!new java.io.File(leaked.dir).exists(),
         "a stale (leaked) pin still blocked GC past its TTL")
@@ -110,18 +111,26 @@ class ReaderPinSpec extends SparkSpec {
       val lapsed = intercept[IllegalStateException](leaked.refresh())
       assert(lapsed.getMessage.contains("no longer protected"))
 
-      // refresh() keeps a long-lived scan protected past the TTL
-      IndexManifest.ReaderPinTtlMs = 60000
+      // a pin taken on the advanced clock is live at once: its mtime
+      // is stamped from the manifest clock, not the filesystem's
       val live = IndexManifest.pinCurrent(dir)
-      live.refresh()
       Similarity.appendLshIndex(corpus.filter(col("id") % 10 === 0),
         "vec", "id", dir, dim = dim, bits = bits, tables = tables,
         groups = groups)
+      IndexManifest.expireVersions(dir, keep = 1)
+      assert(new java.io.File(live.dir).isDirectory,
+        "a pin taken on an advanced clock was reaped as stale")
+      // refresh() keeps a long-lived scan protected past the TTL
+      ManifestClock.advance(IndexManifest.ReaderPinTtlMs - 1000)
+      live.refresh()
+      ManifestClock.advance(2000)
       Similarity.deleteFromLshIndex(Seq(7L).toDF("id"), "id", dir)
       Similarity.compactLshIndex(spark, dir)
-      assert(new java.io.File(live.dir).isDirectory)
+      IndexManifest.expireVersions(dir, keep = 1)
+      assert(new java.io.File(live.dir).isDirectory,
+        "a refreshed pin stopped protecting its version")
       live.release()
-    } finally IndexManifest.ReaderPinTtlMs = prev
+    }
   }
 
   test("withPin releases by construction: a body that THROWS mid-scan " +
@@ -202,8 +211,11 @@ class ReaderPinSpec extends SparkSpec {
       catch { case x: Throwable => err = x }
       finally done.countDown()
     })
-    t.start()
-    Thread.sleep(300)
+    val waits = new LockWaits(root)
+    withFailpoint(waits.hook) {
+      t.start()
+      assert(waits.await(), "the commit never waited on the foreign lock")
+    }
     assert(done.getCount == 1,
       "commit proceeded while a foreign process-level lock was held")
     assert(err == null, s"commit threw instead of waiting: $err")
