@@ -28,6 +28,8 @@ import graft.functions.CosineKernel
   * the exact version the read resolved
   * ([[IndexManifest.withVersionPin]]), so neither a second pointer
   * resolution nor a concurrent commit's GC can change what it reads.
+  * A read resolves once, in [[atCurrent]], and again only when its
+  * version was reaped before the buffer could pin it.
   * Pending tombstones fold at decode: the anti-join is applied once
   * per version, not per read.
   *
@@ -221,10 +223,32 @@ private[graft] object IndexBuffer {
   private val slots = new java.util.concurrent.ConcurrentHashMap[String, Slot]()
   private val clock = new java.util.concurrent.atomic.AtomicLong()
 
+  /** Run `read` on the version `root` resolves to: the one pointer
+    * resolution of every buffered read. If that version left the
+    * retained lineage before the buffer could look it up or pin it
+    * (`RetainVersions` commits landed after the resolve), the read
+    * resolves again and serves the new current, at most
+    * [[IndexManifest.PinAcquireAttempts]] times; then the "left the
+    * retained lineage" error is thrown.
+    */
+  private[llm] def atCurrent[T](root: String)(read: String => T): T = {
+    var gone: IndexManifest.LeftLineage = null
+    var i = 0
+    while (i < IndexManifest.PinAcquireAttempts) {
+      try return read(IndexManifest.resolve(root))
+      catch { case e: IndexManifest.LeftLineage => gone = e; i += 1 }
+    }
+    throw gone
+  }
+
   private def lookup(kind: String, root: String, version: String)(
       decode: => Option[Decoded]): Option[Decoded] =
     IndexManifest.ioFor(root).versionStamp(root, version) match {
-      case None => None
+      // no stamp: GC reaped the version, or it was committed before
+      // stamps existed (still retained; the Spark plan serves it)
+      case None =>
+        if (IndexManifest.retained(root, version)) None
+        else throw new IndexManifest.LeftLineage(root, version)
       case Some(stamp) =>
         val key = s"$kind|$root"
         var fresh = false
@@ -329,7 +353,8 @@ private[graft] object IndexBuffer {
   }
 
   /** The decoded LSH version `version` of `root`, or None when the
-    * Spark plan must serve it.
+    * Spark plan must serve it. Throws `IndexManifest.LeftLineage` when
+    * the version left the retained lineage.
     */
   private[llm] def lsh(spark: SparkSession, root: String,
       version: String): Option[Lsh] =
@@ -415,9 +440,7 @@ private[graft] object IndexBuffer {
       }
     }
 
-  /** The decoded BM25 version `version` of `root`, or None when the
-    * Spark plan must serve it.
-    */
+  /** [[lsh]] for BM25. */
   private[llm] def bm25(spark: SparkSession, root: String,
       version: String): Option[Bm25] =
     lookup("bm25", root, version)(decodeBm25(spark, root, version,

@@ -113,7 +113,8 @@ package graft.llm
   *     `v<N>/STAGE` marker), so concurrent stagers never share a dir;
   *   - staged dirs are invisible to a concurrent commit's GC until
   *     [[StageTtlMs]] old — liveness is read from the stage dir's
-  *     `STAGE_ACTIVITY` heartbeat (bumped by [[stage]]/[[carry]];
+  *     `STAGE_ACTIVITY` heartbeat (bumped by [[stage]] and
+  *     `Mutation.carry`;
   *     long-running builds call [[touchStage]]) with a full tree walk
   *     as the fallback when the heartbeat is stale, so GC under the
   *     commit lock stays O(stage-dirs) on the fast path and never
@@ -136,12 +137,13 @@ package graft.llm
   * [[mutate]]: the base version is captured and PINNED under the
   * commit lock (a `BASE` file in the stage dir that GC respects, so
   * the carry source can never be reaped mid-carry — and mid-build
-  * Spark reads of the base stay valid), the commit is compare-and-swap
-  * via [[commitCas]], and a lost race ([[ConcurrentCommitException]])
-  * discards the stale stage and REBASES: the whole verb re-runs
-  * against the new current. Two concurrent mutations therefore
-  * compose — a tombstone delete racing an append lands ON TOP of the
-  * append (or vice versa), never silently dropped
+  * Spark reads of the base stay valid), [[mutate]] itself commits
+  * compare-and-swap against that base, and a lost race
+  * ([[ConcurrentCommitException]]) discards the stale stage and
+  * REBASES: the whole verb re-runs against the new current. Two
+  * concurrent mutations therefore compose — a tombstone delete racing
+  * an append lands ON TOP of the append (or vice versa), never
+  * silently dropped
   * (ConcurrentIndexWriterSpec races the real verbs and asserts both
   * deltas serve).
   */
@@ -280,8 +282,8 @@ object IndexManifest {
     * [[ConcurrentCommitException]]. Each retry means the pinner's OWN
     * lease lapsed mid-acquisition (the pin fence fired) — a TTL-scale
     * stall, not ordinary contention — so consecutive failures signal
-    * something pathological about this process's scheduling; matches
-    * [[mutate]]'s default rebase bound.
+    * something pathological about this process's scheduling. Also
+    * [[mutate]]'s rebase bound and the buffer's re-resolve bound.
     */
   val PinAcquireAttempts = 5
 
@@ -317,11 +319,9 @@ object IndexManifest {
     * covers exactly ONE commit per in-flight read — a caller that
     * chains mutations (append then delete) while a lazy scan is still
     * draining unlinks that reader's version on the SECOND commit.
-    * Callers with longer reader windows either pass a larger `retain`
-    * to [[commit]] or — safe by construction, not convention — take a
-    * [[pinCurrent]] reader pin, which GC respects regardless of how
-    * many commits land while the scan drains. Storage is reclaimed
-    * explicitly via [[expireVersions]].
+    * Readers with longer windows take a [[pinCurrent]] reader pin,
+    * which GC respects however many commits land while the scan
+    * drains. Storage is reclaimed explicitly via [[expireVersions]].
     */
   val RetainVersions = 2
 
@@ -365,9 +365,9 @@ object IndexManifest {
     * appended the artifact, plus every location its `FILES` listing
     * carries (always empty on `link` roots, whose carry materializes
     * links instead). Empty ⇒ the artifact does not exist in that
-    * version. Listed refs are physical by construction ([[carry]]
-    * resolves through the base's own listing), so resolution never
-    * chains.
+    * version. Listed refs are physical by construction
+    * (`Mutation.carry` resolves through the base's own listing), so
+    * resolution never chains.
     */
   def artifactPaths(root: String, name: String,
       version: Option[String]): Seq[String] =
@@ -474,8 +474,9 @@ object IndexManifest {
     * two concurrent stagers can NEVER share a dir (the loser's claim
     * fails and it takes the next number). Returns (versionName,
     * stagedDirPath); [[commit]] finalizes the stage under its
-    * committed `v<N>` name (a rename on posix; marker removal on
-    * object stores, where data files never move). Never touches the
+    * committed `v<N>` name (a rename on posix; on object stores, where
+    * data files never move, a `COMMITTED` sentinel beside the `STAGE`
+    * marker, which stays). Never touches the
     * pointer. A brand-new root gets its backend's layout pinned here
     * (`pinLayout`); existing roots keep theirs — a root never
     * changes layout mid-life.
@@ -499,9 +500,9 @@ object IndexManifest {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Bump the stage dir's liveness heartbeat. [[stage]] and [[carry]]
-    * call it; a builder whose WRITE phase alone can outlast
-    * [[StageTtlMs]] calls it periodically (GC reads this one file
+  /** Bump the stage dir's liveness heartbeat. [[stage]] and
+    * `Mutation.carry` call it; a builder whose WRITE phase alone can
+    * outlast [[StageTtlMs]] calls it periodically (GC reads this one file
     * instead of walking the stage tree under the commit lock). The
     * wall-clock stamp is written as the file's CONTENT, not just its
     * mtime: on stores that expose no readable mtimes (S3A synthetic
@@ -555,21 +556,21 @@ object IndexManifest {
     * base version is captured and pinned UNDER THE COMMIT LOCK (the
     * stage dir's `BASE` file, which [[gc]] respects), so the version
     * the body carries from and lazily reads cannot be reaped by
-    * concurrent commits mid-build. The body must finish with
-    * [[commitCas]]`(root, m.version, m.base)`; if a concurrent commit
-    * moved the root first, the stale stage is discarded and the WHOLE
-    * body re-runs against the new current — mutations compose instead
-    * of silently dropping each other's deltas. Bodies are re-entrant
-    * by construction here (pure stage-dir writes + idempotent reads).
+    * concurrent commits mid-build. Once the body has written the
+    * stage, `mutate` commits it compare-and-swap against that base; if
+    * a concurrent commit moved the root first, the stale stage is
+    * discarded and the WHOLE body re-runs against the new current (at
+    * most [[PinAcquireAttempts]] times, then the last
+    * [[ConcurrentCommitException]] is thrown) — mutations compose
+    * instead of silently dropping each other's deltas. Bodies never
+    * commit; they are re-entrant by construction here (pure stage-dir
+    * writes + idempotent reads). Returns the committed version name.
     */
-  final case class Mutation(base: Option[String], version: String,
-      dir: String)
-
-  def mutate[T](root: String, attempts: Int = 5)(body: Mutation => T): T = {
+  def mutate(root: String)(body: Mutation => Unit): String = {
     val io = ioFor(root)
     var last: ConcurrentCommitException = null
     var i = 0
-    while (i < attempts) {
+    while (i < PinAcquireAttempts) {
       val (v, staged) = stage(root)
       try {
         // pin the base under the lock: current() cannot move and GC
@@ -577,10 +578,10 @@ object IndexManifest {
         // never written against an already-reaped version. FENCED like
         // pinCurrent: on lease backends a builder stalled past its
         // lease deadline inside this window could pin a base a
-        // takeover already reaped — carry() would then silently carry
-        // NOTHING (refsOf of a missing dir reads empty) and only the
-        // commit-time CAS would catch it; the fence turns that into an
-        // immediate loud rebase instead
+        // takeover already reaped — the carry would then silently
+        // carry NOTHING (refsOf of a missing dir reads empty) and only
+        // the commit-time CAS would catch it; the fence turns that
+        // into an immediate loud rebase instead
         val base = io.withLock(root) {
           val b = current(root)
           // failpoint: a TTL-scale stall inside the base-pin window
@@ -591,7 +592,8 @@ object IndexManifest {
             throw new ConcurrentCommitException(root, b, current(root))
           b
         }
-        return body(Mutation(base, v, staged))
+        body(new Mutation(root, base, staged))
+        return commitCas(root, v, base)
       } catch {
         case e: ConcurrentCommitException =>
           io.rmTree(staged)
@@ -600,6 +602,41 @@ object IndexManifest {
       }
     }
     throw last
+  }
+
+  /** One attempt of an [[IndexManifest.mutate]] body: `base` is the
+    * pinned version it carries from and reads (None on an empty root),
+    * `dir` the staged version dir it writes.
+    */
+  final class Mutation private[IndexManifest](root: String,
+      val base: Option[String], val dir: String) {
+    /** Carry artifacts `names` from `base` into the stage, those
+      * present (absent artifacts — e.g. no pending tombstones — stay
+      * absent; a None base carries nothing). `link` roots materialize
+      * hard links; `listing` roots append the base's physical locations
+      * of the artifacts to the staged `FILES` — zero data-file
+      * operations, which is the whole object-store story. A verb must
+      * never carry an artifact it then rewrites with overwrite
+      * semantics (the listing would resolve old AND new); carried
+      * artifacts are either untouched or appended INTO (new files
+      * beside the carried set), which both layouts represent exactly.
+      */
+    def carry(names: String*): Unit = {
+      touchStage(dir)
+      base.foreach { v =>
+        if (layoutOf(root) == ListingLayout) {
+          val existing = refsOf(dir).toSet
+          val add = names.flatMap(n => physicalPaths(root, v, n).map((n, _)))
+            .filterNot(existing.contains)
+          if (add.nonEmpty)
+            ioFor(root).writeString(s"$dir/$ListingFile",
+              (existing.toSeq ++ add)
+                .map { case (n, p) => s"$n\t$p" }.sorted
+                .mkString("", "\n", "\n"))
+        } else
+          names.foreach(n => linkTree(s"$root/$v/$n", s"$dir/$n"))
+      }
+    }
   }
 
   /** THE commit: prepend `version` to the committed lineage, truncate
@@ -616,10 +653,9 @@ object IndexManifest {
     * orphan dirs, never serveable state, and the next commit
     * re-collects them. `retain` is the reader-overlap window: a
     * reader's resolved version survives `retain − 1` subsequent
-    * commits, so roots whose callers chain mutations under lazy
-    * readers pass the chain length + 1 — or the reader takes a
-    * [[pinCurrent]] pin and needs no counting. Returns the COMMITTED
-    * version name — usually `version`, but on posix a
+    * commits (a reader that must outlive more takes a [[pinCurrent]]
+    * pin and needs no counting). Returns the COMMITTED version name —
+    * usually `version`, but on posix a
     * double-allocated number (the readdir-vs-rename race) is
     * renumbered inside the lock, so any caller referencing its own
     * commit afterwards must use the returned name. Replaying a commit
@@ -627,19 +663,17 @@ object IndexManifest {
     * fails loudly instead of publishing a dangling pointer.
     */
   def commit(root: String, version: String,
-      retain: Int = RetainVersions,
-      expectedBase: Option[String] = None): String =
-    commitImpl(root, version, retain, expectedBase.map(b => Some(b)))
-
-  /** CAS commit for [[mutate]] bodies: REQUIRES the current version to
-    * still equal `base` (None = still-empty root), else throws
-    * [[ConcurrentCommitException]]. Unlike [[commit]]'s optional
-    * `expectedBase`, the check always applies — an append staged
-    * against an empty root loses to a concurrent build, too.
-    */
-  def commitCas(root: String, version: String, base: Option[String],
       retain: Int = RetainVersions): String =
-    commitImpl(root, version, retain, Some(base))
+    commitImpl(root, version, retain, None)
+
+  /** [[mutate]]'s CAS commit: REQUIRES the current version to still
+    * equal `base` (None = still-empty root — an append staged against
+    * an empty root loses to a concurrent build, too), else throws
+    * [[ConcurrentCommitException]] and leaves the stage intact.
+    */
+  private[llm] def commitCas(root: String, version: String,
+      base: Option[String]): String =
+    commitImpl(root, version, RetainVersions, Some(base))
 
   private def commitImpl(root: String, version: String, retain: Int,
       cas: Option[Option[String]]): String = {
@@ -660,10 +694,11 @@ object IndexManifest {
       }
       // finalize the staged dir under its committed name (posix: an
       // atomic rename, renumbered if the readdir-vs-rename race
-      // double-allocated; object stores: drop the claim marker — the
-      // stage dir already IS the version dir). A crash after this but
-      // before the pointer write leaves an unreferenced v-dir —
-      // invisible to readers, reaped by later GC.
+      // double-allocated; object stores: a COMMITTED sentinel beside
+      // the claim marker, which stays — the stage dir already IS the
+      // version dir). A crash after this but before the pointer write
+      // leaves an unreferenced v-dir — invisible to readers, reaped by
+      // later GC.
       val finalName = io.finalizeVersion(root, version)
       val finalDir = s"$root/$finalName"
       // replay guard: publishing a pointer to a version with no dir
@@ -766,12 +801,22 @@ object IndexManifest {
     */
   def pinVersion(root: String, version: String): ReaderPin =
     pinWith(root) {
-      if (!history(root).contains(version) &&
-          !pinnedVersions(root).contains(version))
-        throw new IllegalStateException(s"version $version of $root " +
-          "left the retained lineage before it could be pinned")
+      if (!retained(root, version)) throw new LeftLineage(root, version)
       version
     }
+
+  /** Whether `version` is still in the lineage or held by a pin, so
+    * that GC has not reaped and will not reap it.
+    */
+  private[llm] def retained(root: String, version: String): Boolean =
+    history(root).contains(version) || pinnedVersions(root).contains(version)
+
+  /** A version a read resolved left the retained lineage (at least
+    * [[RetainVersions]] commits landed) before the read could pin it.
+    */
+  private[llm] final class LeftLineage(root: String, version: String)
+    extends IllegalStateException(s"version $version of $root left " +
+      "the retained lineage before it could be pinned")
 
   private def pinWith(root: String)(choose: => String): ReaderPin = {
     val io = ioFor(root)
@@ -1125,13 +1170,12 @@ object IndexManifest {
   }
 
   /** Hard-link `src`'s tree into `dst` (directories created real,
-    * files linked): the carry-forward step for artifacts a new version
-    * leaves unchanged — `link` layout only (a link-less store's
-    * backend throws the documented contract error). Spark job-temp
-    * droppings (`_temporary`, `._*`) are skipped; `_SUCCESS` markers
-    * link fine.
+    * files linked): `Mutation.carry`'s step on `link` roots (a
+    * link-less store's backend throws the documented contract error).
+    * Spark job-temp droppings (`_temporary`, `._*`) are skipped;
+    * `_SUCCESS` markers link fine.
     */
-  def linkTree(src: String, dst: String): Unit = {
+  private def linkTree(src: String, dst: String): Unit = {
     val io = ioFor(src)
     if (!io.exists(src)) return
     def walk(from: String, to: String): Unit = {
@@ -1144,39 +1188,5 @@ object IndexManifest {
       } else io.createLink(to, from)
     }
     walk(src, dst)
-  }
-
-  /** Carry artifact `name` from the base version into a staged
-    * version dir, if present (absent artifacts — e.g. no pending
-    * tombstones — stay absent). The base is the stage dir's pinned
-    * `BASE` ([[mutate]]) when present, else the root's current
-    * version. `link` roots materialize hard links; `listing` roots
-    * append the base's physical locations of the artifact to the
-    * staged `FILES` — zero data-file operations, which is the whole
-    * object-store story. A verb must never carry an artifact it then
-    * rewrites with overwrite semantics (the listing would resolve old
-    * AND new); carried artifacts are either untouched or appended
-    * INTO (new files beside the carried set), which both layouts
-    * represent exactly.
-    */
-  def carry(root: String, stagedDir: String, name: String): Unit = {
-    touchStage(stagedDir)
-    baseOf(stagedDir).orElse(current(root)).foreach { v =>
-      if (layoutOf(root) == ListingLayout) {
-        val io = ioFor(root)
-        val phys = physicalPaths(root, v, name)
-        if (phys.nonEmpty) {
-          val f = s"$stagedDir/$ListingFile"
-          val existing = refsOf(stagedDir).toSet
-          val add = phys.map(p => (name, p)).filterNot(existing.contains)
-          if (add.nonEmpty)
-            io.writeString(f,
-              (existing.toSeq ++ add)
-                .map { case (n, p) => s"$n\t$p" }.sorted
-                .mkString("", "\n", "\n"))
-        }
-      } else
-        linkTree(s"$root/$v/$name", s"$stagedDir/$name")
-    }
   }
 }

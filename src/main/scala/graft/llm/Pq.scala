@@ -458,12 +458,7 @@ object Pq {
       delta: DataFrame, vecCol: String, idCol: String,
       path: String): Unit = IndexManifest.mutate(path) { m =>
     val idx = readIvfPqIndex(spark, path, m.base)
-    val staged = m.dir
-    IndexManifest.carry(path, staged, "codes")
-    IndexManifest.carry(path, staged, "codes_delta")
-    IndexManifest.carry(path, staged, "codebooks")
-    IndexManifest.carry(path, staged, "params")
-    IndexManifest.carry(path, staged, "tombstones")
+    m.carry("codes", "codes_delta", "codebooks", "params", "tombstones")
     val assigned = normalized(delta, vecCol, idCol, idx.model.dim)
       .select(col("id"),
         GraftFunctions.nearestCentroid(col("nv"), idx.centroids)
@@ -483,7 +478,7 @@ object Pq {
         // prunes at row-group stats — but NO directory fan-out
         .repartition(col("cell")).sortWithinPartitions(col("cell"))
         .write.mode("append")
-        .parquet(s"$staged/codes_delta")
+        .parquet(s"${m.dir}/codes_delta")
       // angles over the RAW delta vectors — the same expression and
       // inputs as the build path's cellRadii(index ⋈ raw vecs), so the
       // widened radius is BIT-identical to a full recompute, not just
@@ -498,14 +493,13 @@ object Pq {
       val widened = idx.radii.zipWithIndex.map { case (r, c) =>
         math.max(r, deltaMax.getOrElse(c, r)) }
       import spark.implicits._
+      // delta codes + widened radii publish in ONE pointer flip — a
+      // crash never leaves new codes served under stale (narrow) radii
       idx.centroids.indices.map(i =>
           (i, idx.centroids(i).toSeq, widened(i)))
         .toDF("cell", "centroid", "radius")
         .coalesce(1).write.mode("overwrite")
-        .parquet(s"$staged/centroids")
-      // delta codes + widened radii publish in ONE pointer flip — a
-      // crash never leaves new codes served under stale (narrow) radii
-      IndexManifest.commitCas(path, m.version, m.base): Unit
+        .parquet(s"${m.dir}/centroids")
     } finally { assigned.unpersist(blocking = false); () }
   }
 
@@ -524,41 +518,31 @@ object Pq {
     */
   def deleteFromIvfPqIndex(ids: DataFrame, idCol: String,
       path: String): Unit = IndexManifest.mutate(path) { m =>
-    val staged = m.dir
-    IndexManifest.carry(path, staged, "codes")
-    IndexManifest.carry(path, staged, "codes_delta")
-    IndexManifest.carry(path, staged, "codebooks")
-    IndexManifest.carry(path, staged, "centroids")
-    IndexManifest.carry(path, staged, "params")
-    IndexManifest.carry(path, staged, "tombstones")
+    m.carry("codes", "codes_delta", "codebooks", "centroids", "params",
+      "tombstones")
     ids.select(col(idCol).as("graft_dead_id")).distinct()
       .coalesce(1)
-      .write.mode("append").parquet(s"$staged/tombstones")
-    IndexManifest.commitCas(path, m.version, m.base): Unit
+      .write.mode("append").parquet(s"${m.dir}/tombstones")
   }
 
   /** COMPACTION of an appended IVF×PQ index: rewrites the codes tree
     * to one file per `cell=` directory — FOLDING any pending
     * tombstones ([[deleteFromIvfPqIndex]]) — in a staged version that
     * carries the driver-sized sidecars (codebooks/centroids/params)
-    * forward ([[IndexManifest.carry]] — links or listing refs per the
-    * root's layout) and no tombstone artifact, published by the single
-    * [[IndexManifest.commit]] pointer flip (crash-atomic; same
+    * forward (`IndexManifest.Mutation.carry` — links or listing refs
+    * per the root's layout) and no tombstone artifact, published by the
+    * single [[IndexManifest.mutate]] pointer flip (crash-atomic; same
     * protocol as [[Similarity.compactLshIndex]]).
     */
   def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = IndexManifest.mutate(path) { m =>
     // tombstones fold here — against the PINNED base version
     val folded = readIvfPqIndex(spark, path, m.base).codes
-    val staged = m.dir
-    IndexManifest.carry(path, staged, "codebooks")
-    IndexManifest.carry(path, staged, "centroids")
-    IndexManifest.carry(path, staged, "params")
+    m.carry("codebooks", "centroids", "params")
     folded
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$staged/codes")
-    IndexManifest.commitCas(path, m.version, m.base): Unit
+      .parquet(s"${m.dir}/codes")
   }
 
   /** PQ shortlist → exact re-rank: ADC picks `shortlist` candidate ids

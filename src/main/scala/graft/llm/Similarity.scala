@@ -693,13 +693,10 @@ object Similarity {
   def appendIvfIndex(delta: DataFrame, vecCol: String, idCol: String,
       path: String, centroids: Array[Array[Double]]): Unit =
     IndexManifest.mutate(path) { m =>
-      IndexManifest.carry(path, m.dir, "data")
-      IndexManifest.carry(path, m.dir, "data_delta")
-      IndexManifest.carry(path, m.dir, "tombstones")
+      m.carry("data", "data_delta", "tombstones")
       ivfIndex(delta, vecCol, idCol, centroids)
         .repartition(col("cell")).sortWithinPartitions(col("cell"))
         .write.mode("append").parquet(s"${m.dir}/data_delta")
-      IndexManifest.commitCas(path, m.version, m.base): Unit
     }
 
   /** DELETE from a disk IVF index — the removal verb for the IVF
@@ -717,7 +714,7 @@ object Similarity {
 
   /** COMPACT a disk IVF index: rewrite the `cell=` layout minus any
     * tombstoned ids into a staged version carrying no tombstone
-    * artifact, published by the same single [[IndexManifest.commit]]
+    * artifact, published by the same single [[IndexManifest.mutate]]
     * pointer flip as [[compactLshIndex]] — crash-atomic by
     * construction.
     */
@@ -728,7 +725,6 @@ object Similarity {
         .repartition(col("cell"))
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"${m.dir}/data")
-      IndexManifest.commitCas(path, m.version, m.base): Unit
     }
 
   /** Read a disk IVF index back; `cell` returns as a partition column,
@@ -1012,9 +1008,9 @@ object Similarity {
     * so a delta computes byte-identical signatures to the base build
     * and its rows land in the SAME (table, grp) directory layout.
     * Base files carry into the new version without copying a byte
-    * ([[IndexManifest.carry]] — hard links on posix roots, listing
-    * refs on object-store roots) and the delta appends as new
-    * files beside them; the [[IndexManifest.commit]] pointer flip
+    * (`IndexManifest.Mutation.carry` — hard links on posix roots,
+    * listing refs on object-store roots) and the delta appends as new
+    * files beside them; the [[IndexManifest.mutate]] pointer flip
     * publishes base+delta atomically, so a concurrent reader sees the
     * whole old or the whole new index, never a torn listing. The
     * serve path ([[topKAnnDisk]]) is unchanged — probes prune to the
@@ -1028,8 +1024,7 @@ object Similarity {
       path: String, dim: Int, bits: Int, tables: Int = 8,
       groups: Int = 64, seedPrefix: String = "lsh"): Unit =
     IndexManifest.mutate(path) { m =>
-      IndexManifest.carry(path, m.dir, "data")
-      IndexManifest.carry(path, m.dir, "tombstones")
+      m.carry("data", "tombstones")
       multiTableIndex(delta, vecCol, idCol, dim, bits, tables, seedPrefix)
         .select(col("table"), col("sig"), col("id"), col("vec"))
         .withColumn("grp", pmod(col("sig"), lit(groups.toLong)))
@@ -1037,7 +1032,6 @@ object Similarity {
         .sortWithinPartitions(col("sig"))
         .write.mode("append").partitionBy("table", "grp")
         .parquet(s"${m.dir}/data")
-      IndexManifest.commitCas(path, m.version, m.base): Unit
     }
 
   /** COMPACTION of an appended index — the third maintenance verb of
@@ -1047,7 +1041,7 @@ object Similarity {
     * toward open-file overhead until compacted. Rewrites the index
     * with one file per (table, grp) directory (re-sorted by sig, so
     * row-group pruning recovers the freshly-built layout) as a NEW
-    * staged version, published by [[IndexManifest.commit]]'s single
+    * staged version, published by [[IndexManifest.mutate]]'s single
     * pointer flip — a crash anywhere leaves the pre- or
     * post-compaction index serving, never a mixture (pinned by
     * IndexManifestSpec's failure injection). Tombstoned ids
@@ -1074,10 +1068,9 @@ object Similarity {
         .sortWithinPartitions(col("sig"))
         .write.mode("overwrite").partitionBy("table", "grp")
         .parquet(s"${m.dir}/data")
-      IndexManifest.keepSchema(folded, s"${m.dir}/data", "table", "grp")
       // tombstones are folded into the rewrite: the new version carries
       // none, and both changes publish in the ONE pointer flip
-      IndexManifest.commitCas(path, m.version, m.base): Unit
+      IndexManifest.keepSchema(folded, s"${m.dir}/data", "table", "grp")
     }
 
   private[graft] def rmTree(f: java.io.File): Unit = {
@@ -1093,9 +1086,7 @@ object Similarity {
   def clearTombstones(path: String): Unit =
     if (IndexManifest.exists(path))
       IndexManifest.mutate(path) { m =>
-        IndexManifest.carry(path, m.dir, "data")
-        IndexManifest.carry(path, m.dir, "data_delta")
-        IndexManifest.commitCas(path, m.version, m.base): Unit
+        m.carry("data", "data_delta")
       }
 
   /** DELETE from a disk LSH index — the removal verb of the lifecycle
@@ -1112,15 +1103,12 @@ object Similarity {
   def deleteFromLshIndex(ids: DataFrame, idCol: String,
       path: String): Unit =
     IndexManifest.mutate(path) { m =>
-      IndexManifest.carry(path, m.dir, "data")
       // IVF roots ([[deleteFromIvfIndex]] delegates here) may hold
-      // level-0 appends; a no-op for LSH roots, which have none
-      IndexManifest.carry(path, m.dir, "data_delta")
-      IndexManifest.carry(path, m.dir, "tombstones")
+      // level-0 appends (`data_delta`); LSH roots have none
+      m.carry("data", "data_delta", "tombstones")
       ids.select(col(idCol).as("graft_dead_id")).distinct()
         .coalesce(1)
         .write.mode("append").parquet(s"${m.dir}/tombstones")
-      IndexManifest.commitCas(path, m.version, m.base): Unit
     }
 
   /** The tombstone set of `version`, if any deletions are pending
@@ -1159,7 +1147,8 @@ object Similarity {
 
   /** Serve a top-k query from a disk LSH index. The read resolves the
     * committed version once ([[IndexManifest.resolve]]); everything
-    * below reads that version only.
+    * below reads that version only. (It resolves again only when
+    * commits reaped that version before the buffer could pin it.)
     *
     * A version whose `data` and `tombstones` decode within the
     * driver-side buffer's budget (1/32 of the driver's max heap, in
@@ -1182,12 +1171,13 @@ object Similarity {
       query: Array[Double], dim: Int, bits: Int, tables: Int, k: Int,
       probeHamming: Int = 2, groups: Int = 64,
       seedPrefix: String = "lsh"): DataFrame = {
-    val ver = IndexManifest.resolve(path)
-    IndexBuffer.lsh(spark, path, ver) match {
-      case Some(buffered) => buffered.topK(spark, annProbes(query, dim, bits,
-        tables, probeHamming, groups, seedPrefix), query, k)
-      case None => topKAnnDiskPlan(spark, path, ver, query, dim, bits,
-        tables, k, probeHamming, groups, seedPrefix)
+    IndexBuffer.atCurrent(path) { ver =>
+      IndexBuffer.lsh(spark, path, ver) match {
+        case Some(buffered) => buffered.topK(spark, annProbes(query, dim,
+          bits, tables, probeHamming, groups, seedPrefix), query, k)
+        case None => topKAnnDiskPlan(spark, path, ver, query, dim, bits,
+          tables, k, probeHamming, groups, seedPrefix)
+      }
     }
   }
 

@@ -245,17 +245,15 @@ object Vocabulary {
       IndexManifest.mutate(path) { m =>
     val spark = delta.sparkSession
     require(m.base.isDefined, s"no committed index at $path")
-    val staged = m.dir
-    IndexManifest.carry(path, staged, "postings")
-    IndexManifest.carry(path, staged, "tombstones")
+    m.carry("postings", "tombstones")
     val docs = delta.select(col(idCol).as("id"),
         TextAnalysis.tokens(col(textCol)).as("toks"))
       .select(col("id"), col("toks"), size(col("toks")).as("dl"))
       .persist()
     try {
       // the delta-postings write and the stats merge read the same
-      // persisted delta independently — overlap them (guide §2.6); the
-      // CAS commit below still publishes both atomically
+      // persisted delta independently — overlap them (guide §2.6);
+      // mutate's CAS commit still publishes both atomically
       // carryJobDescription: the spawned job keeps the caller's
       // thread-local label/group (guide §1.5)
       val postingsWrite = graft.core.Sessions.carryJobDescription(spark) {
@@ -266,7 +264,7 @@ object Vocabulary {
           .repartition(col("bkt"))
           .sortWithinPartitions(col("term"))
           .write.mode("append").partitionBy("bkt")
-          .parquet(s"$staged/postings")
+          .parquet(s"${m.dir}/postings")
       }
       val pw = scala.concurrent.Future(postingsWrite())(
         scala.concurrent.ExecutionContext.global)
@@ -284,11 +282,10 @@ object Vocabulary {
       // rebuild's avg(dl), not a float recombination of two averages
       val merged = Seq((n, if (n == 0) 0.0 else s.toDouble / n, s))
       import spark.implicits._
-      merged.toDF("n_docs", "avgdl", "sum_dl")
-        .coalesce(1).write.mode("overwrite").parquet(s"$staged/stats")
       // delta postings + merged stats publish atomically — a crash
       // can no longer leave postings appended under stale stats
-      IndexManifest.commitCas(path, m.version, m.base): Unit
+      merged.toDF("n_docs", "avgdl", "sum_dl")
+        .coalesce(1).write.mode("overwrite").parquet(s"${m.dir}/stats")
     } finally { docs.unpersist(blocking = false); () }
   }
 
@@ -311,33 +308,29 @@ object Vocabulary {
     require(ids.nonEmpty, "deleteBm25Index needs at least one id")
     IndexManifest.mutate(path) { m =>
       require(m.base.isDefined, s"no committed index at $path")
-      val staged = m.dir
-      IndexManifest.carry(path, staged, "postings")
-      IndexManifest.carry(path, staged, "stats")
-      IndexManifest.carry(path, staged, "tombstones")
+      m.carry("postings", "stats", "tombstones")
       IndexManifest.readArtifact(spark, path, "postings", m.base)
         .filter(col("id").isin(ids.map(Long.box): _*))
         .select(col("id"), col("dl")).distinct()
         .coalesce(1)
-        .write.mode("append").parquet(s"$staged/tombstones")
-      IndexManifest.commitCas(path, m.version, m.base): Unit
+        .write.mode("append").parquet(s"${m.dir}/tombstones")
     }
   }
 
   /** COMPACT the disk inverted index: physically fold accumulated
     * tombstones (postings rewritten minus deleted ids, per-bucket
     * sorted files re-merged) and rewrite the stats sidecar to the
-    * already-adjusted integer-exact values, then swap in with the
-    * same two-rename protocol as the ANN index
-    * (`Similarity.swapCompacted` — caller must serialize with
-    * readers, as the registered queries' locks do). Serve results are
-    * unchanged by construction: the fold applies exactly the
-    * anti-join + stats recombination the tombstoned serve was already
-    * doing per query.
+    * already-adjusted integer-exact values, in a new version that
+    * [[IndexManifest.mutate]] commits against its base, as the ANN
+    * index's [[Similarity.compactLshIndex]] does. Readers need no
+    * serialization: each serves the one version it resolved. Serve
+    * results are unchanged by construction: the fold applies exactly
+    * the anti-join + stats recombination the tombstoned serve was
+    * already doing per query.
     *
     * Crash-atomic: the rewritten postings, the folded stats, and the
     * cleared tombstone set all live in ONE staged version published by
-    * a single [[IndexManifest.commit]] pointer rename — the historical
+    * a single pointer flip — the historical
     * three-artifact window (stats folded while tombstones persist →
     * double subtraction on the next serve) is structurally impossible;
     * IndexManifestSpec injects a failure at the commit point and pins
@@ -347,7 +340,6 @@ object Vocabulary {
       path: String, buckets: Int = 64): Unit =
       IndexManifest.mutate(path) { m =>
     require(m.base.isDefined, s"no committed index at $path")
-    val staged = m.dir
     val base = IndexManifest.readArtifact(spark, path, "postings", m.base)
     val (postings, removedN, removedS) =
       if (IndexManifest.artifactNonEmpty(path, "tombstones", m.base)) {
@@ -365,8 +357,8 @@ object Vocabulary {
       .repartition(col("bkt"))
       .sortWithinPartitions(col("term"))
       .write.mode("overwrite").partitionBy("bkt")
-      .parquet(s"$staged/postings")
-    IndexManifest.keepSchema(folded, s"$staged/postings", "bkt")
+      .parquet(s"${m.dir}/postings")
+    IndexManifest.keepSchema(folded, s"${m.dir}/postings", "bkt")
     val old = IndexManifest.readArtifact(spark, path, "stats", m.base)
       .select(col("n_docs").cast("long"), col("sum_dl").cast("long"))
       .collect().head
@@ -375,8 +367,7 @@ object Vocabulary {
     import spark.implicits._
     Seq((n, if (n == 0) 0.0 else sDl.toDouble / n, sDl))
       .toDF("n_docs", "avgdl", "sum_dl")
-      .coalesce(1).write.mode("overwrite").parquet(s"$staged/stats")
-    IndexManifest.commitCas(path, m.version, m.base): Unit
+      .coalesce(1).write.mode("overwrite").parquet(s"${m.dir}/stats")
   }
 
   /** Serve BM25 top-k from the disk inverted index. Identical scoring
@@ -388,7 +379,8 @@ object Vocabulary {
     * bit-identical to a rebuild over the surviving corpus.
     *
     * The read resolves the committed version once
-    * ([[IndexManifest.resolve]]). A version whose `postings`, `stats`
+    * ([[IndexManifest.resolve]]; again only when commits reaped it
+    * before the buffer could pin it). A version whose `postings`, `stats`
     * and `tombstones` decode within the driver-side buffer's budget
     * (1/32 of the driver's max heap, in decoded bytes; see
     * `IndexBuffer`) is decoded once, and every read of it is then
@@ -405,12 +397,13 @@ object Vocabulary {
     // ONE pointer resolution per query: every artifact read comes from
     // the same committed version, so a concurrent append/delete/compact
     // can never serve a mixed index
-    val ver = IndexManifest.resolve(path)
-    IndexBuffer.bm25(spark, path, ver) match {
-      case Some(buffered) =>
-        buffered.topK(spark, queryTerms, k1, b, topK, buckets)
-      case None => bm25DiskPlan(spark, path, ver, queryTerms, k1, b, topK,
-        buckets)
+    IndexBuffer.atCurrent(path) { ver =>
+      IndexBuffer.bm25(spark, path, ver) match {
+        case Some(buffered) =>
+          buffered.topK(spark, queryTerms, k1, b, topK, buckets)
+        case None => bm25DiskPlan(spark, path, ver, queryTerms, k1, b,
+          topK, buckets)
+      }
     }
   }
 

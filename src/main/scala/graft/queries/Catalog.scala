@@ -7783,8 +7783,8 @@ $union
     * across all three index families (LSH `sim_topk_ann_delete`, BM25
     * `doc_bm25_delete`, and now IVF): tombstones append at O(delta),
     * fold on read BEFORE scoring (a deleted id is unservable
-    * immediately), physical bytes go at `compactIvfIndex`'s
-    * two-rename swap. Exactness survives by construction — radii over
+    * immediately), physical bytes go when `compactIvfIndex`'s
+    * rewrite commits. Exactness survives by construction — radii over
     * the folded frame only tighten — so the oracle is brute force
     * over the surviving corpus, same contract as the other deletes.
     */

@@ -7,8 +7,8 @@ import graft.llm.IndexManifest
   * the root, and `gc` re-reads every retained version's `FILES`
   * listing, which is fine at retain=2 but unmeasured at the 10³–10⁴
   * accumulated commits a year of nightly appends produces. This probe
-  * drives N raw mutate→commit cycles with tiny artifact writes (the
-  * DATA cost is benched elsewhere; this isolates the METADATA term)
+  * drives N `IndexManifest.mutate` cycles with tiny artifact writes
+  * (the DATA cost is benched elsewhere; this isolates the METADATA term)
   * under both carry layouts and both storage backends, reporting
   * per-commit wall for the first and last decile so super-linear
   * drift shows as a ratio.
@@ -17,9 +17,10 @@ import graft.llm.IndexManifest
   *
   *   - `rebuild`: every commit stages a self-contained version (no
   *     carry) — the pure pointer/lock/GC term. MUST stay flat at any
-  *     depth: GC truncates the lineage to `retain` each commit, so
-  *     the root directory never accumulates (the object-store backend
-  *     additionally prunes its `MANIFEST-<seq>` tail).
+  *     depth: GC truncates the lineage to `RetainVersions` (2) each
+  *     commit, so the root directory never accumulates (the
+  *     object-store backend additionally prunes its `MANIFEST-<seq>`
+  *     tail).
   *   - `append` with compaction every `compactEvery`: each commit
   *     writes its own delta artifact AND carries the accumulated
   *     artifact forward (listing roots: one `FILES` ref per
@@ -42,7 +43,7 @@ import graft.llm.IndexManifest
   * O(retain) + uncompacted tail), not the local absolute.
   *
   * Usage: `runMain graft.tools.ProbeCommitChain [nCommits]
-  * [compactEvery] [retain] [configs]` (defaults 1000, 100, 2, all;
+  * [compactEvery] [configs]` (defaults 1000, 100, all;
   * `configs` = comma-set of posix_link|posix_listing|hadoop_listing
   * for depth sweeps that skip the fork-dominated local-Hadoop leg).
   * Prints one line per configuration; asserts last/first decile
@@ -52,9 +53,8 @@ object ProbeCommitChain {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toInt else 1000
     val compactEvery = if (args.length > 1) args(1).toInt else 100
-    val retain = if (args.length > 2) args(2).toInt else 2
     val wanted: String => Boolean =
-      if (args.length > 3) args(3).split(",").toSet else _ => true
+      if (args.length > 2) args(2).split(",").toSet else _ => true
 
     def writeTiny(path: String, content: String): Unit = {
       val p =
@@ -84,12 +84,10 @@ object ProbeCommitChain {
         val t0 = System.nanoTime()
         IndexManifest.mutate(root) { m =>
           if (append && i % compactEvery != 0)
-            IndexManifest.carry(root, m.dir, "data")
+            m.carry("data")
           // else: a self-contained rewrite — a rebuild step, or the
           // compaction stand-in that drops the accumulated carry refs
           writeTiny(s"${m.dir}/data/part-$i", s"commit $i")
-          IndexManifest.commitCas(root, m.version, m.base,
-            retain = retain): Unit
         }
         val dt = System.nanoTime() - t0
         if (i < decile) firstNs += dt
@@ -114,7 +112,7 @@ object ProbeCommitChain {
         val (firstMs, lastMs) = drive(root, layout, append)
         val ratio = lastMs / math.max(firstMs, 0.001)
         val entries = rootEntries(root)
-        println(f"[chain] $name shape=$shape n=$n retain=$retain " +
+        println(f"[chain] $name shape=$shape n=$n " +
           f"first_decile=$firstMs%.3fms/commit " +
           f"last_decile=$lastMs%.3fms/commit ratio=$ratio%.2f " +
           f"root_entries=$entries")

@@ -115,10 +115,10 @@ class ConcurrentIndexWriterSpec extends SparkSpec {
     val vA = stageMarked(r, "delta-A")
     val vB = stageMarked(r, "delta-B")
     // A lands first
-    IndexManifest.commit(r, vA, expectedBase = Some(v1))
+    IndexManifest.commitCas(r, vA, Some(v1))
     // B's CAS must fail — its content does not include A's delta
     val e = intercept[ConcurrentCommitException] {
-      IndexManifest.commit(r, vB, expectedBase = Some(v1))
+      IndexManifest.commitCas(r, vB, Some(v1))
     }
     assert(e.getMessage.contains(vA.toString) ||
       e.getMessage.contains("current"))
@@ -128,7 +128,7 @@ class ConcurrentIndexWriterSpec extends SparkSpec {
       "failed CAS destroyed the staged work")
     Files.writeString(Paths.get(s"$r/stage-$vB", "data"),
       "delta-B-rebased"): Unit
-    IndexManifest.commit(r, vB, expectedBase = Some(vA))
+    IndexManifest.commitCas(r, vB, Some(vA))
     assert(IndexManifest.current(r).contains(vB))
     assert(markerOf(r, vB) == "delta-B-rebased")
   }

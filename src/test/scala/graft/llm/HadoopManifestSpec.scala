@@ -1426,7 +1426,6 @@ class HadoopManifestSpec extends SparkSpec {
         try IndexManifest.mutate(root) { m =>
           seenBases = seenBases :+ m.base
           HadoopManifestIo.writeString(s"${m.dir}/data", "delta")
-          IndexManifest.commitCas(root, m.version, m.base): Unit
         } catch { case x: Throwable => err = x }
       })
       zombie.start()

@@ -25,7 +25,10 @@ import ManifestHooks.withFailpoint
   *   - heap bound: one decoded version per root, whatever the commit
   *     count;
   *   - pins: a decode that races two commits and GC still answers from
-  *     the version it pinned;
+  *     the version it pinned, and a pinned version survives commits and
+  *     an expiry at every failpoint of a read until its pin is released;
+  *   - a read whose unpinned version two commits reap before the lookup
+  *     resolves again, a bounded number of times;
   *   - keys: a root wiped and rebuilt (its version names restart) never
   *     serves the old root's decode;
   *   - budget: counted in decoded bytes, checked against the measured
@@ -259,6 +262,104 @@ class IndexBufferSpec extends SparkSpec {
         s"the read did not serve the version it resolved (planned=$planned)")
       // the committed versions answer differently: the check has teeth
       assert(annKey(ann(dir, q)) != expected)
+    }
+  }
+
+  test("a buffered read whose version an append and a delete reap " +
+      "before the lookup, with no pin held, serves the new current; a " +
+      "root that moves at every resolution fails with the lineage error") {
+    val dir = tmpRoot("buf_reaped")
+    val base = vectors(61, 0 until 160)
+    Similarity.writeLshIndex(Similarity.multiTableIndex(base, "vec", "id",
+      dim, bits, tables), dir, buildGroups)
+    val q = base.filter($"id" === 5).head().getSeq[Double](1).toArray
+    val v1 = IndexManifest.current(dir).get
+    val near = (1000L until 1005L).map(i => (i, q.toSeq)).toDF("id", "vec")
+    val dead = annKey(annPlan(dir, v1, q)).map(_._1).take(5)
+    var resolves = 0
+    val served = withFailpoint { point =>
+      if (point == s"resolve:$dir") {
+        resolves += 1
+        if (resolves == 1) {
+          Similarity.appendLshIndex(near, "vec", "id", dir, dim, bits,
+            tables, buildGroups)
+          Similarity.deleteFromLshIndex(dead.toDF("id"), "id", dir)
+        }
+      }
+    } {
+      ann(dir, q)
+    }
+    assert(!new java.io.File(s"$dir/$v1").exists(),
+      "the append and the delete did not reap v1 inside the read")
+    assert(resolves == 2, s"the read resolved $resolves times")
+    assertBuffered(served, dir)
+    assert(annKey(served) ==
+      annKey(annPlan(dir, IndexManifest.current(dir).get, q)))
+    // two empty commits at every resolution: the read gives up
+    var moves = 0
+    val err = intercept[IllegalStateException] {
+      withFailpoint { point =>
+        if (point == s"resolve:$dir") {
+          moves += 1
+          (0 until 2).foreach { _ =>
+            IndexManifest.commit(dir, IndexManifest.stage(dir)._1): Unit
+          }
+        }
+      } {
+        ann(dir, q)
+      }
+    }
+    assert(moves == IndexManifest.PinAcquireAttempts)
+    assert(err.getMessage.contains("left the retained lineage"),
+      err.getMessage)
+  }
+
+  test("GC under pins: two commits and an expiry at each failpoint of a " +
+      "pinned read leave the pinned version readable until release, " +
+      "and reaped after it") {
+    Seq("resolve", "pin-pre-write", "decode").foreach { at =>
+      val dir = tmpRoot("buf_gc_pin")
+      val base = vectors(71, 0 until 160)
+      Similarity.writeLshIndex(Similarity.multiTableIndex(base, "vec", "id",
+        dim, bits, tables), dir, buildGroups)
+      val q = base.filter($"id" === 7).head().getSeq[Double](1).toArray
+      val v1 = IndexManifest.current(dir).get
+      val expected = annKey(annPlan(dir, v1, q))
+      val near = (1000L until 1005L).map(i => (i, q.toSeq)).toDF("id", "vec")
+      // the writer runs on its own thread: at `pin-pre-write:` the read
+      // holds the commit lock, so the commits land once the pin is
+      // written, and the read waits for them at `decode:`
+      @volatile var err: Throwable = null
+      val writer = new Thread(() =>
+        try {
+          Similarity.appendLshIndex(near, "vec", "id", dir, dim, bits,
+            tables, buildGroups)
+          Similarity.deleteFromLshIndex(expected.take(5).map(_._1)
+            .toDF("id"), "id", dir)
+          IndexManifest.expireVersions(dir, keep = 1)
+        } catch { case t: Throwable => err = t })
+      val served = IndexManifest.withPin(dir) { pin =>
+        assert(pin.version == v1)
+        val got = withFailpoint { point =>
+          if (point == s"$at:$dir" && writer.getState == Thread.State.NEW) {
+            writer.start()
+            if (at != "pin-pre-write") writer.join()
+          }
+          if (point == s"decode:$dir") writer.join()
+        } {
+          annKey(ann(dir, q))
+        }
+        assert(err == null, s"the writer failed at $at: $err")
+        assert(!IndexManifest.history(dir).contains(v1),
+          s"the commits at $at: left $v1 in the lineage")
+        assert(new java.io.File(s"$dir/$v1").isDirectory,
+          s"GC reaped the pinned $v1 at $at:")
+        got
+      }
+      assert(served == expected, s"the read at $at: did not serve $v1")
+      IndexManifest.expireVersions(dir, keep = 1)
+      assert(!new java.io.File(s"$dir/$v1").exists(),
+        s"$v1 outlived its pins at $at:")
     }
   }
 
