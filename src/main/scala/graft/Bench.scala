@@ -21,6 +21,7 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config(graft.core.GraftSession.LocalFsConf)
       .withExtensions(new graft.functions.GraftExtensions)
     // SPARK_GRAFT_CONF="k=v;k=v": extra session confs (see Verify)
     sys.env.get("SPARK_GRAFT_CONF").foreach(

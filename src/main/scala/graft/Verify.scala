@@ -70,6 +70,7 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(graft.core.GraftSession.LocalFsConf)
       .withExtensions(new graft.functions.GraftExtensions)
     // SPARK_GRAFT_CONF="k=v;k=v": extra session confs for certification
     // sweeps (e.g. spark.memory.fraction=0.2 for the memory-pressure

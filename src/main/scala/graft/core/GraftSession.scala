@@ -15,6 +15,18 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** The session's local filesystem, `FileSystem` and `FileContext` side
+    * (see [[GraftRawLocalFileSystem]]). Every session graft builds sets
+    * these keys. Hadoop caches one `FileSystem` per scheme and user, not
+    * per conf, so a `file:` filesystem the JVM made before the session
+    * keeps serving `FileSystem.get`; `FileContext` reads the conf each
+    * time.
+    */
+  val LocalFsConf: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[GraftLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
+      classOf[GraftLocalFs].getName)
+
   def builder(
       master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
       shufflePartitions: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
@@ -29,6 +41,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .config("spark.ui.enabled", "false")
+      .config(LocalFsConf)
       // native graft SQL functions (graft_cosine, ...) available in any
       // session built here
       .withExtensions(new graft.functions.GraftExtensions)

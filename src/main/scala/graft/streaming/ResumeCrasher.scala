@@ -55,6 +55,7 @@ object ResumeCrasher {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(graft.core.GraftSession.LocalFsConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Streams.resumableAttempt(

@@ -24,6 +24,7 @@ object ScaleProbe {
       .master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.ui.enabled", "false")
+      .config(graft.core.GraftSession.LocalFsConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

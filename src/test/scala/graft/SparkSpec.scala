@@ -43,6 +43,7 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(graft.core.GraftSession.LocalFsConf)
       .withExtensions(new graft.functions.GraftExtensions)
     if (master.startsWith("local-cluster")) {
       val cp = Seq(classOf[SparkSpec].getProtectionDomain, // test classes

@@ -19,6 +19,7 @@ object BufferHeapProbe {
       .master("local[2]")
       .appName("buffer-heap-probe")
       .config("spark.ui.enabled", "false")
+      .config(graft.core.GraftSession.LocalFsConf)
       .config("spark.sql.shuffle.partitions", "4")
       // Spark refuses heaps under 450 MB unless told otherwise
       .config("spark.testing.memory", (512L << 20).toString)

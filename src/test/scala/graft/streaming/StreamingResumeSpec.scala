@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 
 /** Durable-checkpoint crash-resume certification. Every test runs a
@@ -142,7 +144,8 @@ class StreamingResumeSpec extends SparkSpec {
     * SparkSession outside spark-submit/sbt.
     */
   private def launchCrasher(staged: String, wd: String,
-      haltAt: Long, kind: String): String = {
+      haltAt: Long, kind: String,
+      env: Map[String, String] = Map.empty): String = {
     val addOpens = Seq(
       "java.base/java.lang", "java.base/java.lang.invoke",
       "java.base/java.lang.reflect", "java.base/java.io",
@@ -164,9 +167,11 @@ class StreamingResumeSpec extends SparkSpec {
     // child never produces
     val logFile = java.nio.file.Files
       .createTempFile("crasher", ".log").toFile
-    val proc = new ProcessBuilder(cmd: _*)
+    val pb = new ProcessBuilder(cmd: _*)
       .redirectErrorStream(true)
-      .redirectOutput(logFile).start()
+      .redirectOutput(logFile)
+    env.foreach { case (k, v) => pb.environment.put(k, v) }
+    val proc = pb.start()
     val finished =
       proc.waitFor(180, java.util.concurrent.TimeUnit.SECONDS)
     if (!finished) proc.destroyForcibly(): Unit
@@ -235,6 +240,35 @@ class StreamingResumeSpec extends SparkSpec {
     assert(rowsOf(out) === rowsOf(batchTwin),
       "aggregation state recovered from the halted JVM's checkpoint " +
         "diverged from the batch twin")
+  }
+
+  test("a streaming JVM's checkpoint forks no chmod, readlink, ls or " +
+      "stat") {
+    // logging wrappers first on the crasher's PATH; setsid is Hadoop's
+    // one probe when its Shell class loads, so its line proves the
+    // wrappers were in the way
+    val bin = java.nio.file.Files.createTempDirectory("fork_log")
+    val log = bin.resolve("forks.log")
+    val path = sys.env.getOrElse("PATH", "/usr/bin:/bin")
+    Seq("chmod", "readlink", "ls", "stat", "setsid").foreach { cmd =>
+      val real = path.split(':').map(d => new java.io.File(d, cmd))
+        .find(_.canExecute).getOrElse(fail(s"no $cmd on PATH"))
+      val w = bin.resolve(cmd)
+      java.nio.file.Files.writeString(w, "#!/bin/sh\n" +
+        s"echo \"$cmd $$*\" >> '$log'\nexec '$real' \"$$@\"\n")
+      assert(w.toFile.setExecutable(true))
+    }
+    val staged = Streams.stageEventsParts(spark, eventsFile, 4,
+      dupEvery = 7)
+    val wd = work()
+    val outLog = launchCrasher(staged, wd, haltAt = 2L, kind = "dedup",
+      env = Map("PATH" -> s"$bin:$path"))
+    assert(new java.io.File(s"$wd/sink/batch=1").isDirectory,
+      s"the crasher committed fewer than two epochs\n$outLog")
+    val forks = java.nio.file.Files.readAllLines(log).asScala.toSeq
+    val (probe, rest) = forks.partition(_.startsWith("setsid "))
+    assert(probe.nonEmpty, forks)
+    assert(rest.isEmpty, s"${rest.size} forks")
   }
 
   test("registered streaming_resume query matches its oracle shape") {
