@@ -22,6 +22,7 @@ object Bench {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       .config(graft.core.GraftSession.LocalFsConf)
+      .config(graft.core.GraftSession.executorClassPathConf(master))
       .withExtensions(new graft.functions.GraftExtensions)
     // SPARK_GRAFT_CONF="k=v;k=v": extra session confs (see Verify)
     sys.env.get("SPARK_GRAFT_CONF").foreach(
@@ -31,11 +32,6 @@ object Bench {
           s"bad SPARK_GRAFT_CONF entry (want k=v): '$kv'")
         builder.config(parts(0), parts(1)): Unit
       })
-    if (master.startsWith("local-cluster")) {
-      val classesDir = getClass.getProtectionDomain.getCodeSource
-        .getLocation.getPath
-      builder.config("spark.executor.extraClassPath", classesDir): Unit
-    }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

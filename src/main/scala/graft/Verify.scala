@@ -71,6 +71,7 @@ object Verify {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config(graft.core.GraftSession.LocalFsConf)
+      .config(graft.core.GraftSession.executorClassPathConf(master))
       .withExtensions(new graft.functions.GraftExtensions)
     // SPARK_GRAFT_CONF="k=v;k=v": extra session confs for certification
     // sweeps (e.g. spark.memory.fraction=0.2 for the memory-pressure
@@ -82,11 +83,6 @@ object Verify {
           s"bad SPARK_GRAFT_CONF entry (want k=v): '$kv'")
         builder.config(parts(0), parts(1)): Unit
       })
-    if (master.startsWith("local-cluster")) {
-      val classesDir = getClass.getProtectionDomain.getCodeSource
-        .getLocation.getPath
-      builder.config("spark.executor.extraClassPath", classesDir): Unit
-    }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -27,6 +27,18 @@ object GraftSession {
     "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
       classOf[GraftLocalFs].getName)
 
+  /** Executor JVMs of a `local-cluster` master launch from SPARK_HOME
+    * and know nothing of the driver's classpath, so graft's classes ride
+    * `spark.executor.extraClassPath` there. Without them an executor
+    * cannot load the [[LocalFsConf]] classes, and every `file:` read or
+    * write it runs fails. Empty for any other master.
+    */
+  def executorClassPathConf(master: String): Map[String, String] =
+    if (master.startsWith("local-cluster"))
+      Map("spark.executor.extraClassPath" ->
+        getClass.getProtectionDomain.getCodeSource.getLocation.getPath)
+    else Map.empty
+
   def builder(
       master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
       shufflePartitions: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
@@ -42,6 +54,7 @@ object GraftSession {
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .config("spark.ui.enabled", "false")
       .config(LocalFsConf)
+      .config(executorClassPathConf(master))
       // native graft SQL functions (graft_cosine, ...) available in any
       // session built here
       .withExtensions(new graft.functions.GraftExtensions)

@@ -575,12 +575,14 @@ private[graft] object HadoopManifestIo extends ManifestIo {
   def writeString(path: String, s: String): Unit = {
     val uri = new Path(path).toUri
     if ("file".equalsIgnoreCase(uri.getScheme)) {
-      // nio, not LocalFileSystem: the checksummed create forks a
-      // chmod per file on containers without native libhadoop
-      // (~10-20 ms each), and these are the protocol's hottest small
-      // writes (lease release, pins, FILES listings). Drop any stale
-      // checksum sidecar a pre-existing fs-written file left behind,
-      // or ChecksumFileSystem reads of the overwrite would fail.
+      // nio, not the checksummed FileSystem: these are the protocol's
+      // hottest small writes (lease release, pins, FILES listings), and
+      // its create writes a .crc sidecar beside each one. A JVM with no
+      // graft session (ProbeCommitChain, say) also gets Hadoop's stock
+      // local filesystem, whose create forks a chmod per file when no
+      // native libhadoop is loaded. Drop any stale checksum sidecar a
+      // pre-existing fs-written file left behind, or ChecksumFileSystem
+      // reads of the overwrite would fail.
       val p = java.nio.file.Paths.get(uri.getPath)
       // fs.create auto-creates missing parents and the hdfs:// branch
       // below inherits that — keep the nio fast path contract-equal

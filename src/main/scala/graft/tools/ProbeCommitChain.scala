@@ -33,14 +33,15 @@ import graft.llm.IndexManifest
   *     never compacts pays O(chain) listing resolution by design
   *     (same as Iceberg manifests before rewrite).
   *
-  * Absolute per-commit cost caveat (local runs): this container has
-  * no native `libhadoop`, so Hadoop's local filesystem loads file
-  * permissions by FORKING `ls`/`stat` per status call — the
-  * `hadoop_listing` config's ~0.2 s/commit here is ~20 process forks,
-  * not protocol work (HDFS/S3 pay network RTTs instead, and clusters
-  * ship the native lib). The engineered claims are the FLAT ratio and
-  * the bounded per-commit op count (O(root entries), which GC keeps
-  * O(retain) + uncompacted tail), not the local absolute.
+  * Absolute per-commit cost caveat (local runs): the probe builds no
+  * graft session, so its `hadoop_listing` config runs on Hadoop's stock
+  * local filesystem, not `GraftLocalFileSystem`. Without native
+  * `libhadoop` (Spark's distribution ships none) that filesystem forks
+  * a `chmod` for every version directory it makes, one per commit
+  * (HDFS/S3 pay network RTTs instead). The engineered claims are the
+  * FLAT ratio and the bounded per-commit op count (O(root entries),
+  * which GC keeps O(retain) + uncompacted tail), not the local
+  * absolute.
   *
   * Usage: `runMain graft.tools.ProbeCommitChain [nCommits]
   * [compactEvery] [configs]` (defaults 1000, 100, all;

@@ -20,6 +20,39 @@ class RunnersSpec extends SparkSpec {
     assert(loc.master == "local[8]" && loc.shufflePartitions == 8)
   }
 
+  test("an embedded session's executor JVM writes and reads parquet") {
+    // executors of a local-cluster master launch from SPARK_HOME with
+    // Spark's jars only; the session's `file:` filesystem is graft's
+    val jar = (c: Class[_]) =>
+      c.getProtectionDomain.getCodeSource.getLocation.getPath
+    val sparkJars = new java.io.File(
+      jar(classOf[org.apache.spark.sql.SparkSession])).getParentFile
+    val cp = Seq(classOf[RunnersSpec], RunnerConfig.getClass)
+      .map(jar).distinct :+ s"$sparkJars/*"
+    val opens = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.toArray.map(_.toString)
+      .filter(_.startsWith("--add-opens"))
+    val out = java.nio.file.Files.createTempDirectory("embedded_rt")
+      .resolve("t").toString
+    val log = java.nio.file.Files.createTempFile("embedded_rt", ".log").toFile
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java",
+      "-Xmx1g") ++ opens ++
+      Seq("-cp", cp.mkString(java.io.File.pathSeparator),
+        "graft.core.EmbeddedRoundTrip", out)
+    val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
+      .redirectOutput(log)
+    // the worker builds the executor command from these
+    pb.environment.put("SPARK_HOME", sparkJars.getParent)
+    pb.environment.put("SPARK_SCALA_VERSION",
+      scala.util.Properties.versionNumberString.split('.').take(2).mkString("."))
+    val p = pb.start()
+    val finished = p.waitFor(180, java.util.concurrent.TimeUnit.SECONDS)
+    if (!finished) p.destroyForcibly(): Unit
+    val text = java.nio.file.Files.readString(log.toPath)
+    assert(finished && p.exitValue() == 0, s"embedded JVM failed:\n$text")
+    assert(text.linesIterator.contains("sum=999000"), text)
+  }
+
   test("sql gate runs scripts and awaits views") {
     import spark.implicits._
     Seq((1, "a")).toDF("x", "s").createOrReplaceTempView("gate_src")

@@ -7,7 +7,8 @@ path class.
 Run from the root of a graft checkout. The harness is built first (as
 `perfbench/run.py` builds it, unwrapped); then one run of the workload
 goes with a directory of logging wrappers ahead of `PATH`, one per
-command in `--commands`. Each wrapper appends its command line to a log
+command in `COMMANDS` found on `PATH` (the summary's `not_wrapped`
+names the rest). Each wrapper appends its command line to a log
 and execs the real command. A fork's path class is the first directory
 below the run's work dir that its arguments name (`checkpoints`, `tmp`,
 ...), `other` for any other path and `-` for none. The last line is a JSON
@@ -27,7 +28,8 @@ import tempfile
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 RUN_PY = os.path.join(ROOT, "perfbench", "run.py")
 WORK = os.path.join(ROOT, "perfbench", "target", "run")
-COMMANDS = "chmod,chown,readlink,ls,stat,rm,mv,ln,setsid,bash,sh,id,groups,df,du"
+COMMANDS = ("chmod", "chown", "readlink", "ls", "stat", "rm", "mv", "ln",
+            "setsid", "bash", "sh", "id", "groups", "df", "du")
 
 
 def real_binaries(names, path):
@@ -66,12 +68,11 @@ def path_class(args):
 
 
 def main():
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap = argparse.ArgumentParser(
+        description=" ".join(__doc__.split("\n\n")[0].split()))
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, default=8)
-    ap.add_argument("--commands", default=COMMANDS,
-                    help=f"comma-separated commands to wrap (default {COMMANDS})")
     args = ap.parse_args()
 
     sys.dont_write_bytecode = True  # leave no cache beside run.py
@@ -81,7 +82,7 @@ def main():
     run.build()  # unwrapped, so sbt's own forks are not counted
 
     path = os.environ.get("PATH", "")
-    binaries = real_binaries(args.commands.split(","), path)
+    binaries = real_binaries(COMMANDS, path)
     bindir = tempfile.mkdtemp(prefix="fork_census_")
     log = os.path.join(bindir, "forks.log")
     open(log, "w").close()
@@ -112,7 +113,7 @@ def main():
           f"{result.get('attempted', '?')} passes, exit {proc.returncode}")
     for (cmd, cls), n in sorted(per_class.items(), key=lambda kv: -kv[1]):
         print(f"# {cmd:10s} {cls:24s} {n:6d}")
-    missing = sorted(set(args.commands.split(",")) - set(binaries))
+    missing = sorted(set(COMMANDS) - set(binaries))
     print(json.dumps({
         "workload": args.workload, "seed": args.seed,
         "attempted": result.get("attempted"), "correct": result.get("correct"),
