@@ -15,7 +15,7 @@ object Bench {
     // run the registry under local-cluster with graft's classes on the
     // executor classpath
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
@@ -23,16 +23,9 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .config(graft.core.GraftSession.LocalFsConf)
       .config(graft.core.GraftSession.executorClassPathConf(master))
+      .config(graft.core.GraftSession.envConf)
       .withExtensions(new graft.functions.GraftExtensions)
-    // SPARK_GRAFT_CONF="k=v;k=v": extra session confs (see Verify)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(
-      _.split(";").map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        val parts = kv.split("=", 2)
-        require(parts.length == 2 && parts(0).nonEmpty,
-          s"bad SPARK_GRAFT_CONF entry (want k=v): '$kv'")
-        builder.config(parts(0), parts(1)): Unit
-      })
-    val spark = builder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def esc(s: String): String = s.flatMap {

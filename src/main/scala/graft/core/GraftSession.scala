@@ -39,6 +39,21 @@ object GraftSession {
         getClass.getProtectionDomain.getCodeSource.getLocation.getPath)
     else Map.empty
 
+  /** Extra session confs from `SPARK_GRAFT_CONF="k=v;k=v"`, for the
+    * `Verify`/`Bench` certification sweeps (e.g.
+    * `spark.memory.fraction=0.2` for the memory-pressure pass — force
+    * spills, prove answers don't change). Empty when unset.
+    */
+  def envConf: Map[String, String] =
+    sys.env.get("SPARK_GRAFT_CONF").toSeq
+      .flatMap(_.split(";").map(_.trim).filter(_.nonEmpty))
+      .map { kv =>
+        val parts = kv.split("=", 2)
+        require(parts.length == 2 && parts(0).nonEmpty,
+          s"bad SPARK_GRAFT_CONF entry (want k=v): '$kv'")
+        parts(0) -> parts(1)
+      }.toMap
+
   def builder(
       master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
       shufflePartitions: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,

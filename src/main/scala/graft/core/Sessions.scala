@@ -1,5 +1,7 @@
 package graft.core
 
+import scala.concurrent.{ExecutionContext, Future}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-query SQL-conf isolation (the alternative to mutating the
@@ -39,19 +41,20 @@ object Sessions {
   def rebind(to: SparkSession, df: DataFrame): DataFrame =
     org.apache.spark.sql.graft.Bridge.ofRows(to, df.queryExecution.logical)
 
-  /** Run `body` on a spawned thread with the CALLER's job description
-    * re-applied: `setJobDescription` is thread-local (guide §1.5), so a
-    * job submitted from a Future otherwise renders unlabeled in the UI
-    * and escapes group cancellation. Capture happens HERE, on the
-    * calling thread; the body sets it on whichever pool thread runs.
+  /** Start `body` on `ec` with the CALLER's job description
+    * re-applied, and return the running job: `setJobDescription` is
+    * thread-local (guide §1.5), so a job submitted from a pool thread
+    * otherwise renders unlabeled in the UI and escapes group
+    * cancellation. Capture happens HERE, on the calling thread; the
+    * pool thread gets its own label back once `body` ends.
     */
-  def carryJobDescription[A](spark: SparkSession)(body: => A): () => A = {
+  def carryJobDescription[A](spark: SparkSession)(body: => A)(
+      implicit ec: ExecutionContext): Future[A] = {
     val sc = spark.sparkContext
     val desc = sc.getLocalProperty("spark.job.description")
-    () => {
-      // restore the pool thread's own label afterwards — global/pool
-      // threads are reused and must not leak this label into whatever
-      // runs on them next
+    Future {
+      // global/pool threads are reused and must not leak this label
+      // into whatever runs on them next
       val prev = sc.getLocalProperty("spark.job.description")
       sc.setJobDescription(desc)
       try body finally sc.setJobDescription(prev)

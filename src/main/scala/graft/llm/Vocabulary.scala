@@ -202,14 +202,11 @@ object Vocabulary {
       // integers below 2^53 is exact, so avg(dl) == sum_dl/n_docs here
       // carryJobDescription: the spawned job keeps the caller's
       // thread-local label/group (guide §1.5)
-      val statsWrite = graft.core.Sessions.carryJobDescription(
-          df.sparkSession) {
+      val sw = graft.core.Sessions.carryJobDescription(df.sparkSession) {
         docs.agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"),
             sum(col("dl")).as("sum_dl"))
           .write.mode("overwrite").parquet(s"$staged/stats")
-      }
-      val sw = scala.concurrent.Future(statsWrite())(
-        scala.concurrent.ExecutionContext.global)
+      }(scala.concurrent.ExecutionContext.global)
       docs.select(col("id"), col("dl"), explode(col("toks")).as("term"))
         .groupBy(col("id"), col("dl"), col("term"))
         .agg(count(lit(1)).as("tf"))
@@ -256,7 +253,7 @@ object Vocabulary {
       // mutate's CAS commit still publishes both atomically
       // carryJobDescription: the spawned job keeps the caller's
       // thread-local label/group (guide §1.5)
-      val postingsWrite = graft.core.Sessions.carryJobDescription(spark) {
+      val pw = graft.core.Sessions.carryJobDescription(spark) {
         docs.select(col("id"), col("dl"), explode(col("toks")).as("term"))
           .groupBy(col("id"), col("dl"), col("term"))
           .agg(count(lit(1)).as("tf"))
@@ -265,9 +262,7 @@ object Vocabulary {
           .sortWithinPartitions(col("term"))
           .write.mode("append").partitionBy("bkt")
           .parquet(s"${m.dir}/postings")
-      }
-      val pw = scala.concurrent.Future(postingsWrite())(
-        scala.concurrent.ExecutionContext.global)
+      }(scala.concurrent.ExecutionContext.global)
       val old = IndexManifest.readArtifact(spark, path, "stats", m.base)
         .select(col("n_docs").cast("long"), col("sum_dl").cast("long"))
         .collect().head

@@ -2349,7 +2349,6 @@ object Catalog {
       import graft.sources.synth.MemorySinkRegistry
       val tbl = s"stream_sink_${math.abs(d.hashCode)}"
       MemorySinkRegistry.clear(tbl)
-      val ckpt = s"/tmp/graft_ssink_${math.abs(d.hashCode)}_${System.nanoTime()}"
       val st = s.readStream
         .format("graft.sources.synth.SynthDocsProvider")
         .option("rows", "20000").option("slices", "8")
@@ -2368,15 +2367,12 @@ object Catalog {
       locally {
         val iso = graft.core.Sessions.isolated(s,
           Map("spark.sql.shuffle.partitions" -> "8"))
-        val q = graft.core.Sessions.rebind(iso, st).writeStream
-          .format("graft.sources.synth.MemorySinkProvider")
-          .option("table", tbl)
-          .option("checkpointLocation", ckpt)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .queryName(tbl)
-          .start()
-        try q.awaitTermination() finally q.stop()
+        graft.streaming.Streams.runOnce(
+          graft.core.Sessions.rebind(iso, st).writeStream
+            .format("graft.sources.synth.MemorySinkProvider")
+            .option("table", tbl)
+            .outputMode("complete")
+            .queryName(tbl), "graft_ssink"): Unit
       }
       val schema = StructType(Seq(
         StructField("grp", IntegerType),
@@ -4348,14 +4344,12 @@ object Catalog {
         scala.concurrent.ExecutionContext.global
       // carryJobDescription: both spawned jobs keep the bench's
       // thread-local label/group (guide §1.5)
-      val sketchJob = graft.core.Sessions.carryJobDescription(s)(
+      val fSketch = graft.core.Sessions.carryJobDescription(s)(
         graft.llm.Vocabulary.heavyHittersKeys(skewed, "sk", capacity))
-      val exactJob = graft.core.Sessions.carryJobDescription(s)(
+      val fExact = graft.core.Sessions.carryJobDescription(s)(
         skewed.groupBy(col("sk"))
           .agg(count(lit(1)).as("n_exact"))
           .collect())
-      val fSketch = scala.concurrent.Future(sketchJob())
-      val fExact = scala.concurrent.Future(exactJob())
       val (summary, n) = scala.concurrent.Await.result(fSketch,
         scala.concurrent.duration.Duration.Inf)
       val bound = n / capacity
@@ -7991,8 +7985,8 @@ $union
       // other streaming runners; the shared session is untouched)
       val iso = graft.core.Sessions.isolated(s,
         Map("spark.sql.shuffle.partitions" -> "8"))
-      val stream = Streams.embeddingsStreamBatches(iso,
-        s"$d/embeddings.parquet")
+      val stream = Streams.idParityStream(iso,
+        s"$d/embeddings.parquet", "vec_id")
       // groups=4 at fixture occupancy: 32 partition dirs per epoch
       // instead of 128 — the dominant cost of a tiny-batch append is
       // parquet writer open/close per directory, and group count is
@@ -8040,8 +8034,8 @@ $union
       val path = s"/tmp/$prefix${System.nanoTime()}"
       val iso = graft.core.Sessions.isolated(s,
         Map("spark.sql.shuffle.partitions" -> "8"))
-      val stream = Streams.documentsStreamBatches(iso,
-        s"$d/documents.parquet")
+      val stream = Streams.idParityStream(iso,
+        s"$d/documents.parquet", "doc_id")
       val nBatches = Streams.appendBm25AvailableNow(iso, stream,
         "doc_id", "text", path, buckets = 16)
       require(nBatches >= 2,
@@ -8082,8 +8076,8 @@ $union
       val base = s"/tmp/$prefix${System.nanoTime()}"
       val iso = graft.core.Sessions.isolated(s,
         Map("spark.sql.shuffle.partitions" -> "8"))
-      val stream = Streams.documentsStreamBatches(iso,
-        s"$d/documents.parquet")
+      val stream = Streams.idParityStream(iso,
+        s"$d/documents.parquet", "doc_id")
       val nPunct = length(
         regexp_replace(col("text"), "[\\p{L}\\p{Nd}\\s]", ""))
       val gate = TextAnalysis.tokenCount(col("text")) >= 10 &&
@@ -8151,8 +8145,8 @@ $union
       val base = s"/tmp/$prefix${System.nanoTime()}"
       val iso = graft.core.Sessions.isolated(s,
         Map("spark.sql.shuffle.partitions" -> "8"))
-      val stream = Streams.documentsStreamBatches(iso,
-        s"$d/documents.parquet")
+      val stream = Streams.idParityStream(iso,
+        s"$d/documents.parquet", "doc_id")
       val nBatches = Streams.dedupMinhashAvailableNow(iso, stream,
         "doc_id", "text", s"$base/store", s"$base/out")
       require(nBatches >= 2,
@@ -9870,8 +9864,7 @@ $union
       // tmpfs-backed when free: the checkpoint survives PROCESS death
       // there just the same (the spec's JVM-halt test resumes across
       // processes), and the 7 durable epoch commits skip disk fsyncs
-      val work = Streams.ephemeralCheckpointDir("graft_resume_q")
-      try {
+      Streams.withThrowawayDir("graft_resume_q") { work =>
         val res = Streams.resumeCertified(s,
           sess => Streams.hourlyAgg(Streams.pacedStream(sess, staged)),
           work, "streaming_resume", crashAfterBatch = 1L,
@@ -9882,7 +9875,7 @@ $union
         val rows = res.orderBy(col("hour_start")).collect()
         s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
           .orderBy(col("hour_start"))
-      } finally graft.llm.Similarity.rmTree(new java.io.File(work))
+      }
     },
     Some("""SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_start,
       count(*) AS n_events, round(sum(value), 2) AS sum_value
@@ -10185,18 +10178,17 @@ $union
       import scala.concurrent.duration.Duration
       // carryJobDescription: each pooled job keeps the bench's
       // thread-local label/group (guide §1.5)
-      def job[A](body: => A): Future[A] = {
-        // capture ON THIS thread, run on the pool thread
-        val labeled = graft.core.Sessions.carryJobDescription(s)(body)
-        Future(labeled())
-      }
+      import graft.core.Sessions.carryJobDescription
       val probes = Future.sequence(Seq(
-        job(df.count()),
-        job(a1.count()), job(b1.count()),
-        job(a1.join(b1, "o_orderkey").count()),
-        job(a1.exceptAll(a2).count()), job(a2.exceptAll(a1).count()),
-        job(s1.exceptAll(s2).count()), job(s2.exceptAll(s1).count()),
-        job(s1.count())))
+        carryJobDescription(s)(df.count()),
+        carryJobDescription(s)(a1.count()),
+        carryJobDescription(s)(b1.count()),
+        carryJobDescription(s)(a1.join(b1, "o_orderkey").count()),
+        carryJobDescription(s)(a1.exceptAll(a2).count()),
+        carryJobDescription(s)(a2.exceptAll(a1).count()),
+        carryJobDescription(s)(s1.exceptAll(s2).count()),
+        carryJobDescription(s)(s2.exceptAll(s1).count()),
+        carryJobDescription(s)(s1.count())))
       val Seq(total, na1, nb1, overlap, exA, exB, sxA, sxB, sN) =
         try Await.result(probes, Duration.Inf)
         finally pool.shutdown()

@@ -1,10 +1,16 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
+import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.concurrent.{Await, ExecutionContext}
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface (additive — the reference has no
@@ -48,28 +54,19 @@ object Streams {
   /** Stage a single fixture parquet FILE into a fresh directory (the
     * streaming file source requires a directory) and open it as an
     * event stream. `copies > 1` stages the same file several times —
-    * simulated at-least-once redelivery for the dedup operator.
-    * Staged dirs are immutable once written and memoized per (file,
-    * copies, stamp) — nine registered queries open this stream, and
-    * each previously re-copied the file AND re-ran the driver-side
-    * schema inference per invocation; the stamp key re-stages on an
-    * in-place fixture regeneration (the same invalidation discipline
-    * as the other staged-stream caches).
+    * simulated at-least-once redelivery for the dedup operator. Nine
+    * registered queries open this stream; the staged dir and its schema
+    * are memoized ([[staged]], `stagedSchema`), so none of them re-copies
+    * the file or re-runs the driver-side schema inference. Unpaced: the
+    * redelivered copies must land in one batch.
     */
-  private val singleFileStageCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def eventsStreamFromFile(spark: SparkSession, parquetFile: String,
       copies: Int = 1): DataFrame = {
-    val dir = singleFileStageCache.computeIfAbsent(
-      s"$parquetFile|$copies|${fileStamp(parquetFile)}", _ => {
-        val d = java.nio.file.Files.createTempDirectory("events_stream")
-        (0 until copies).foreach { i =>
-          java.nio.file.Files.copy(java.nio.file.Paths.get(parquetFile),
-            d.resolve(s"part-$i.parquet"))
-        }
-        d.toString
-      })
+    val dir = staged("events_stream", parquetFile, copies) { d =>
+      (0 until copies).foreach { i =>
+        Files.copy(Paths.get(parquetFile), d.resolve(s"part-$i.parquet"))
+      }
+    }
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.readStream.schema(stagedSchema(spark, dir)).parquet(dir)
     graft.sources.Tables.normalizeEventsTs(spark, raw, dir)
@@ -120,37 +117,46 @@ object Streams {
         col(tRight) <= col(tLeft) + expr(s"interval $maxGap"),
       "left_outer")
 
-  /** Stage the events fixture as TWO time-ordered files (split at
-    * `splitTs`) read with `maxFilesPerTrigger=1` — two micro-batches,
-    * so the second batch runs with the watermark advanced to
-    * `max(ts in file 1) − delay`. That makes outer-join flush points
-    * DERIVABLE: a batch oracle can compute exactly which unmatched
-    * rows the stream must have emitted. The nanos→µs conversion is
-    * applied at staging time, so the restaged files carry real
-    * timestamps.
-    */
-  /** Size+mtime stamp of a source file — staged-stream cache keys
-    * include it so an in-place fixture regeneration within one JVM
-    * invalidates the staging instead of serving a stale corpus (the
-    * same invalidation discipline as the stamp-gated index builds).
+  /** Size+mtime stamp of a source file: an in-place fixture
+    * regeneration within one JVM changes it, so [[staged]] re-stages
+    * instead of serving a stale corpus (the same invalidation
+    * discipline as the stamp-gated index builds).
     */
   private def fileStamp(p: String): String = {
     val f = new java.io.File(p)
     s"${f.length}:${f.lastModified}"
   }
 
-  /** Throwaway checkpoint dir for EPHEMERAL availableNow runs (the
-    * batch-equivalence harness and the single-shot foreachBatch
-    * epochs, all of which delete their checkpoint on termination):
-    * memory-backed tmpfs when the platform has one, else the normal
-    * temp dir. The checkpoint exists only to satisfy the engine's WAL
-    * within one run — durability across process death buys nothing
-    * for a run whose own contract deletes it — and the r12 floor
-    * probe measured ~0.1 s/batch of commit-log fsync latency on real
-    * disk. DURABLE streaming (user-supplied checkpointLocation, e.g.
-    * [[runAvailableNowToParquet]] restart recovery) is unaffected.
+  private val stagedDirs = new ConcurrentHashMap[String, String]()
+
+  /** The staged fixture dir for (`kind`, `file`, `params`, the file's
+    * stamp), written by `stage` into a fresh temp dir the first time
+    * and memoized for the process. A staged dir is immutable once
+    * written, so every query that opens the same staged stream pays the
+    * staging once.
     */
-  private[graft] def ephemeralCheckpointDir(prefix: String): String = {
+  private[streaming] def staged(kind: String, file: String, params: Any*)(
+      stage: Path => Unit): String =
+    stagedDirs.computeIfAbsent(
+      (Seq(kind, file) ++ params.map(_.toString) :+ fileStamp(file))
+        .mkString("|"),
+      _ => {
+        val d = Files.createTempDirectory(kind)
+        stage(d)
+        d.toString
+      })
+
+  /** Throwaway dir for EPHEMERAL streaming state (one-shot checkpoints
+    * and the `streaming_resume` work dir, all deleted when their run
+    * ends): memory-backed tmpfs when the platform has one, else the
+    * normal temp dir. The checkpoint exists only to satisfy the
+    * engine's WAL within one run — durability across process death buys
+    * nothing for a run whose own contract deletes it — and the r12
+    * floor probe measured ~0.1 s/batch of commit-log fsync latency on
+    * real disk. DURABLE streaming (a caller-supplied checkpoint, e.g.
+    * [[resumableAttempt]]) is unaffected.
+    */
+  private def ephemeralCheckpointDir(prefix: String): String = {
     // tmpfs is RAM-capped (typically 50% of it) and full means ENOSPC,
     // not spill — so take the fast path only with real headroom left
     // (state-store files for these single-shot epochs are tens of MB;
@@ -160,27 +166,30 @@ object Streams {
     val shm = new java.io.File("/dev/shm")
     val MinFree = 2L << 30
     if (shm.isDirectory && shm.canWrite && shm.getUsableSpace > MinFree)
-      java.nio.file.Files
-        .createTempDirectory(shm.toPath, prefix).toString
-    else java.nio.file.Files.createTempDirectory(prefix).toString
+      Files.createTempDirectory(shm.toPath, prefix).toString
+    else Files.createTempDirectory(prefix).toString
   }
 
-  // staged (file, split) dirs are immutable once written — memoize per
-  // process (stamp-keyed) so the several stream-join queries over the
-  // same source pay the restage once, not once each
-  private val twoBatchCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Run `body` over a fresh [[ephemeralCheckpointDir]] named after
+    * `prefix`, and delete the dir however `body` ends.
+    */
+  private[graft] def withThrowawayDir[A](prefix: String)(
+      body: String => A): A = {
+    val dir = ephemeralCheckpointDir(prefix)
+    try body(dir)
+    finally graft.llm.Similarity.rmTree(new java.io.File(dir))
+  }
 
   /** Schema of a staged-stream dir, memoized per dir. Every stream
     * open re-ran a driver-side batch footer inference just to hand
     * `readStream.schema(...)` the staged files' own schema; staged
-    * dirs are immutable once written (and their caches stamp-keyed),
+    * dirs are immutable once written (and their cache stamp-keyed),
     * so the probe result is metadata that can be pinned exactly like
     * [[graft.sources.Tables.table]]'s fixture schemas — the r20
     * schema-pinning discipline extended to the streaming sources.
     */
-  private val stagedSchemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, StructType]()
+  private val stagedSchemaCache =
+    new ConcurrentHashMap[String, StructType]()
 
   private def stagedSchema(spark: SparkSession, probePath: String): StructType =
     stagedSchemaCache.computeIfAbsent(probePath,
@@ -189,60 +198,82 @@ object Streams {
   /** Write `df` as ONE parquet file named `name` directly under `d` —
     * the staged-stream layout (each file = one paced micro-batch).
     */
-  private def stageSingleFile(df: DataFrame, d: java.nio.file.Path,
-      name: String): Unit = {
+  private def stageSingleFile(df: DataFrame, d: Path, name: String): Unit = {
     val tmp = d.resolve(name + "_tmp")
     df.coalesce(1).write.parquet(tmp.toString)
     val part = new java.io.File(tmp.toString).listFiles()
       .find(_.getName.endsWith(".parquet")).get
-    java.nio.file.Files.move(part.toPath, d.resolve(name)): Unit
+    Files.move(part.toPath, d.resolve(name)): Unit
   }
 
+  /** Stage the events fixture as TWO time-ordered files (split at
+    * `splitTs`) read with [[pacedStream]] — two micro-batches, so the
+    * second batch runs with the watermark advanced to
+    * `max(ts in file 1) − delay`. That makes outer-join flush points
+    * DERIVABLE: a batch oracle can compute exactly which unmatched
+    * rows the stream must have emitted. The nanos→µs conversion is
+    * applied at staging time, so the restaged files carry real
+    * timestamps.
+    */
   def eventsStreamTwoBatches(spark: SparkSession, parquetFile: String,
-      splitTs: String): DataFrame = {
-    val dir = twoBatchCache.computeIfAbsent(
-      s"$parquetFile|$splitTs|${fileStamp(parquetFile)}", _ => {
-      val d = java.nio.file.Files.createTempDirectory("events_2b")
+      splitTs: String): DataFrame =
+    pacedStream(spark, staged("events_2b", parquetFile, splitTs) { d =>
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val full = graft.sources.Tables.normalizeEventsTs(spark,
         spark.read.parquet(parquetFile), parquetFile)
       val cut = col("ts") < lit(splitTs).cast("timestamp")
       stageSingleFile(full.filter(cut), d, "part-0.parquet")
       stageSingleFile(full.filter(!cut), d, "part-1.parquet")
-      d.toString
     })
-    spark.readStream
-      .schema(stagedSchema(spark, s"$dir/part-0.parquet"))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dir)
-  }
 
-  // staged per (file, halves, stamp) once per process — several
-  // queries over the same staged stream pay the restage once, and a
-  // regenerated fixture re-stages instead of serving stale rows
-  private val vecTwoBatchCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Stage an embeddings parquet into `halves` files split by id
-    * parity and open it as a file stream paced at one file per
-    * micro-batch — the ingest shape for streaming index maintenance.
+  /** Stage a parquet table into `halves` files split by `idCol` parity
+    * and open it with [[pacedStream]], one file per micro-batch — the
+    * ingest shape for streaming index maintenance and the
+    * foreachBatch runners below (embeddings or documents alike).
     */
-  def embeddingsStreamBatches(spark: SparkSession, parquetFile: String,
-      idCol: String = "vec_id", halves: Int = 2): DataFrame = {
-    val dir = vecTwoBatchCache.computeIfAbsent(
-      s"$parquetFile/$halves/${fileStamp(parquetFile)}", _ => {
-      val d = java.nio.file.Files.createTempDirectory("emb_stream")
-      val full = spark.read.parquet(parquetFile)
-      (0 until halves).foreach { h =>
-        stageSingleFile(full.filter(pmod(col(idCol), lit(halves)) === h),
-          d, s"part-$h.parquet")
-      }
-      d.toString
+  def idParityStream(spark: SparkSession, parquetFile: String,
+      idCol: String, halves: Int = 2): DataFrame =
+    pacedStream(spark, staged("parity_stream", parquetFile, idCol, halves) {
+      d =>
+        val full = spark.read.parquet(parquetFile)
+        (0 until halves).foreach { h =>
+          stageSingleFile(full.filter(pmod(col(idCol), lit(halves)) === h),
+            d, s"part-$h.parquet")
+        }
     })
-    spark.readStream
-      .schema(stagedSchema(spark, s"$dir/part-0.parquet"))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dir)
+
+  /** Run an already configured `writer` once over all available input
+    * (`AvailableNow`) on a throwaway checkpoint, wait for it, and drop
+    * the checkpoint whether the run succeeded or threw. The checkpoint's
+    * only job is this run's offset tracking; a resumable deployment
+    * passes a durable location instead, as [[resumableAttempt]] does.
+    * Returns the terminated query (its progress stays readable).
+    */
+  private[graft] def runOnce(writer: DataStreamWriter[Row],
+      checkpointPrefix: String): StreamingQuery =
+    withThrowawayDir(checkpointPrefix) { ckpt =>
+      val q = writer.option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      // no stop(): it cancels the query's job group, and a pool thread
+      // that inherited that group may be running another query's job
+      q.awaitTermination()
+      q
+    }
+
+  /** [[runOnce]] over an append-mode `foreachBatch` sink running `body`
+    * per micro-batch; returns the number of micro-batches run, so
+    * callers can assert the ingest was actually incremental.
+    */
+  private def runBatches(stream: DataFrame, checkpointPrefix: String)(
+      body: (Dataset[Row], Long) => Unit): Long = {
+    val batches = new java.util.concurrent.atomic.AtomicLong(0)
+    runOnce(stream.writeStream.outputMode(OutputMode.Append())
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        body(batch, batchId)
+        batches.incrementAndGet(): Unit
+      }, checkpointPrefix)
+    batches.get()
   }
 
   /** STREAMING ANN index maintenance: each micro-batch of arriving
@@ -253,67 +284,17 @@ object Streams {
     * delivery; the serve path's `dropDuplicates(id)` makes a replayed
     * append harmless for top-k (idempotent SERVING rather than
     * idempotent output — the right trade for an index whose reader
-    * dedups anyway). Returns the number of micro-batches run so
-    * callers can assert the ingest was actually incremental.
+    * dedups anyway). Returns the number of micro-batches run.
     */
   def appendIndexAvailableNow(spark: SparkSession, vecStream: DataFrame,
       vecCol: String, idCol: String, path: String, dim: Int, bits: Int,
       tables: Int = 8, groups: Int = 64,
-      seedPrefix: String = "lsh"): Long = {
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val ckpt = ephemeralCheckpointDir("idx_append_ckpt")
-    val q = vecStream.writeStream
-      .option("checkpointLocation", ckpt)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.llm.Similarity.appendLshIndex(batch, vecCol, idCol, path,
-          dim = dim, bits = bits, tables = tables, groups = groups,
-          seedPrefix = seedPrefix)
-        batches.incrementAndGet(): Unit
-      }
-      .start()
-    try q.awaitTermination()
-    finally
-      // one-shot AvailableNow run: the checkpoint's only job was this
-      // invocation's offset tracking — drop it so repeated runs don't
-      // grow the temp space (a resumable deployment would pass a
-      // durable location instead, as runAvailableNowToParquet does)
-      graft.llm.Similarity.rmTree(new java.io.File(ckpt))
-    batches.get()
-  }
-
-  /** Stage a documents parquet into `halves` id-parity files and open
-    * it as a paced file stream — the ingest shape for streaming SPARSE
-    * index maintenance (the documents twin of
-    * [[embeddingsStreamBatches]]; shares the stamp-keyed cache
-    * discipline).
-    */
-  private val docTwoBatchCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  def documentsStreamBatches(spark: SparkSession, parquetFile: String,
-      idCol: String = "doc_id", halves: Int = 2): DataFrame = {
-    val dir = docTwoBatchCache.computeIfAbsent(
-      s"$parquetFile/$halves/${fileStamp(parquetFile)}", _ => {
-      val d = java.nio.file.Files.createTempDirectory("doc_stream")
-      val full = spark.read.parquet(parquetFile)
-      (0 until halves).foreach { h =>
-        val tmp = d.resolve(s"h${h}_tmp")
-        full.filter(pmod(col(idCol), lit(halves)) === h)
-          .coalesce(1).write.parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        java.nio.file.Files.move(part.toPath,
-          d.resolve(s"part-$h.parquet")): Unit
-      }
-      d.toString
-    })
-    spark.readStream
-      .schema(stagedSchema(spark, s"$dir/part-0.parquet"))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dir)
-  }
+      seedPrefix: String = "lsh"): Long =
+    runBatches(vecStream, "idx_append_ckpt") { (batch, _) =>
+      graft.llm.Similarity.appendLshIndex(batch, vecCol, idCol, path,
+        dim = dim, bits = bits, tables = tables, groups = groups,
+        seedPrefix = seedPrefix)
+    }
 
   /** STREAMING BM25 index maintenance — the sparse-retrieval twin of
     * [[appendIndexAvailableNow]]: the FIRST micro-batch builds the
@@ -328,26 +309,16 @@ object Streams {
     */
   def appendBm25AvailableNow(spark: SparkSession, docStream: DataFrame,
       idCol: String, textCol: String, path: String,
-      buckets: Int = 64): Long = {
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val ckpt = ephemeralCheckpointDir("bm25_append_ckpt")
-    val q = docStream.writeStream
-      .option("checkpointLocation", ckpt)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (batches.getAndIncrement() == 0L)
-          graft.llm.Vocabulary.writeBm25Index(batch, idCol, textCol,
-            path, buckets = buckets)
-        else
-          graft.llm.Vocabulary.appendBm25Index(batch, idCol, textCol,
-            path, buckets = buckets)
-      }
-      .start()
-    try q.awaitTermination()
-    finally graft.llm.Similarity.rmTree(new java.io.File(ckpt))
-    batches.get()
-  }
+      buckets: Int = 64): Long =
+    // the checkpoint is fresh, so the first micro-batch is batch 0
+    runBatches(docStream, "bm25_append_ckpt") { (batch, batchId) =>
+      if (batchId == 0L)
+        graft.llm.Vocabulary.writeBm25Index(batch, idCol, textCol,
+          path, buckets = buckets)
+      else
+        graft.llm.Vocabulary.appendBm25Index(batch, idCol, textCol,
+          path, buckets = buckets)
+    }
 
   /** STREAMING first-seen-wins near-dup dedup against a PERSISTENT
     * band-signature store — the online half of the MinHash-LSH dedup
@@ -370,64 +341,46 @@ object Streams {
     */
   def dedupMinhashAvailableNow(spark: SparkSession, docStream: DataFrame,
       idCol: String, textCol: String, storeDir: String, outDir: String,
-      numHashes: Int = 8, bands: Int = 4): Long = {
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val ckpt = ephemeralCheckpointDir("dedup_stream_ckpt")
-    val q = docStream.writeStream
-      .option("checkpointLocation", ckpt)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch {
-        (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          val s2 = batch.sparkSession
-          val keys = graft.llm.Dedup.bandKeysPortable(batch, idCol,
-            textCol, numHashes, bands).persist()
-          // window-min, not groupBy+self-join: one shuffle on band
-          // instead of two (the minhashClusters idiom) — partition
-          // size is the band bucket, bounded by collision rate
-          val dupBatch = keys
-            .withColumn("first_id", min(col("id")).over(
-              org.apache.spark.sql.expressions.Window
-                .partitionBy(col("band"))))
-            .filter(col("id") > col("first_id")).select(col("id"))
-          // the HISTORY side stays a keyed semi join — the band store
-          // is corpus-sized at scale (never broadcastable); only the
-          // batch-bounded dup-id set below broadcasts
-          val dups =
-            (if (new java.io.File(storeDir).exists())
-               keys.join(
-                 s2.read.parquet(storeDir)
-                   .filter(col("batch") < batchId).select(col("band")),
-                 Seq("band"), "left_semi").select(col("id"))
-                 .union(dupBatch)
-             else dupBatch).distinct()
-          // the survivor write and the store-key write are independent
-          // actions on the persisted keys frame — overlap them (guide
-          // §2.6); both land in idempotent batch=<id> dirs, and the
-          // replay contract never orders one against the other (the
-          // history read filters batch < current either way)
-          // carryJobDescription: the spawned job keeps the caller's
-          // thread-local label/group (guide §1.5)
-          val storeWrite = graft.core.Sessions.carryJobDescription(s2) {
-            keys.select(col("band")).distinct()
-              .write.mode("overwrite").parquet(s"$storeDir/batch=$batchId")
-          }
-          val sw = scala.concurrent.Future(storeWrite())(
-            scala.concurrent.ExecutionContext.global)
-          batch.join(
-              broadcast(dups.withColumnRenamed("id", idCol)), Seq(idCol),
-              "left_anti")
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-          scala.concurrent.Await.result(sw,
-            scala.concurrent.duration.Duration.Inf)
-          keys.unpersist()
-          batches.incrementAndGet(): Unit
-      }
-      .start()
-    try q.awaitTermination()
-    finally graft.llm.Similarity.rmTree(new java.io.File(ckpt))
-    batches.get()
-  }
+      numHashes: Int = 8, bands: Int = 4): Long =
+    runBatches(docStream, "dedup_stream_ckpt") { (batch, batchId) =>
+      val s2 = batch.sparkSession
+      val keys = graft.llm.Dedup.bandKeysPortable(batch, idCol,
+        textCol, numHashes, bands).persist()
+      // window-min, not groupBy+self-join: one shuffle on band
+      // instead of two (the minhashClusters idiom) — partition
+      // size is the band bucket, bounded by collision rate
+      val dupBatch = keys
+        .withColumn("first_id", min(col("id")).over(
+          org.apache.spark.sql.expressions.Window
+            .partitionBy(col("band"))))
+        .filter(col("id") > col("first_id")).select(col("id"))
+      // the HISTORY side stays a keyed semi join — the band store
+      // is corpus-sized at scale (never broadcastable); only the
+      // batch-bounded dup-id set below broadcasts
+      val dups =
+        (if (new java.io.File(storeDir).exists())
+           keys.join(
+             s2.read.parquet(storeDir)
+               .filter(col("batch") < batchId).select(col("band")),
+             Seq("band"), "left_semi").select(col("id"))
+             .union(dupBatch)
+         else dupBatch).distinct()
+      // the survivor write and the store-key write are independent
+      // actions on the persisted keys frame — overlap them (guide
+      // §2.6); both land in idempotent batch=<id> dirs, and the
+      // replay contract never orders one against the other (the
+      // history read filters batch < current either way)
+      val storeWrite = graft.core.Sessions.carryJobDescription(s2) {
+        keys.select(col("band")).distinct()
+          .write.mode("overwrite").parquet(s"$storeDir/batch=$batchId")
+      }(ExecutionContext.global)
+      batch.join(
+          broadcast(dups.withColumnRenamed("id", idCol)), Seq(idCol),
+          "left_anti")
+        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+      Await.result(storeWrite, Duration.Inf)
+      keys.unpersist(): Unit
+    }
 
   /** STREAMING ROUTER with a dead-letter side output — the
     * quality-gate shape of a production ingest: each micro-batch is
@@ -442,46 +395,27 @@ object Streams {
     */
   def routeAvailableNow(spark: SparkSession, stream: DataFrame,
       accept: org.apache.spark.sql.Column, reason: String,
-      acceptDir: String, deadLetterDir: String): Long = {
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val ckpt = ephemeralCheckpointDir("router_ckpt")
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch {
-        (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          // NULL predicates (3VL) must route to the DLQ, not vanish
-          // from both sinks: coalesce pins the gate to a real boolean
-          // so acceptance+rejection stays a partition of the input
-          val marked = batch
-            .withColumn("__accept", coalesce(accept, lit(false))).persist()
-          // the two sides of the router are independent writes over the
-          // persisted gate frame — overlap them (guide §2.6); each is
-          // idempotent in its own batch=<id> dir
-          // carryJobDescription: the spawned job keeps the caller's
-          // thread-local label/group (guide §1.5)
-          val dlqWrite = graft.core.Sessions.carryJobDescription(
-              batch.sparkSession) {
-            marked.filter(!col("__accept")).drop("__accept")
-              .withColumn("reject_reason", lit(reason))
-              .write.mode("overwrite")
-              .parquet(s"$deadLetterDir/batch=$batchId")
-          }
-          val dlq = scala.concurrent.Future(dlqWrite())(
-            scala.concurrent.ExecutionContext.global)
-          marked.filter(col("__accept")).drop("__accept")
-            .write.mode("overwrite").parquet(s"$acceptDir/batch=$batchId")
-          scala.concurrent.Await.result(dlq,
-            scala.concurrent.duration.Duration.Inf)
-          marked.unpersist()
-          batches.incrementAndGet(): Unit
-      }
-      .start()
-    try q.awaitTermination()
-    finally graft.llm.Similarity.rmTree(new java.io.File(ckpt))
-    batches.get()
-  }
+      acceptDir: String, deadLetterDir: String): Long =
+    runBatches(stream, "router_ckpt") { (batch, batchId) =>
+      // NULL predicates (3VL) must route to the DLQ, not vanish
+      // from both sinks: coalesce pins the gate to a real boolean
+      // so acceptance+rejection stays a partition of the input
+      val marked = batch
+        .withColumn("__accept", coalesce(accept, lit(false))).persist()
+      // the two sides of the router are independent writes over the
+      // persisted gate frame — overlap them (guide §2.6); each is
+      // idempotent in its own batch=<id> dir
+      val dlq = graft.core.Sessions.carryJobDescription(batch.sparkSession) {
+        marked.filter(!col("__accept")).drop("__accept")
+          .withColumn("reject_reason", lit(reason))
+          .write.mode("overwrite")
+          .parquet(s"$deadLetterDir/batch=$batchId")
+      }(ExecutionContext.global)
+      marked.filter(col("__accept")).drop("__accept")
+        .write.mode("overwrite").parquet(s"$acceptDir/batch=$batchId")
+      Await.result(dlq, Duration.Inf)
+      marked.unpersist(): Unit
+    }
 
   /** STREAMING CDC UPSERT INTO A LAKEHOUSE TABLE — the canonical
     * stream-to-lakehouse pattern: each micro-batch of changelog rows
@@ -503,40 +437,28 @@ object Streams {
     * doing what the whole-table rewrite does here. Returns the
     * micro-batch count.
     */
-  def cdcMergeAvailableNow(stream: DataFrame, targetTable: String): Long = {
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val ckpt = ephemeralCheckpointDir("cdc_merge_ckpt")
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val bs = batch.sparkSession
-        bs.conf.set("spark.sql.catalog.graft_cat",
-          classOf[graft.sources.catalog.GraftCatalog].getName)
-        batch.groupBy(col("user_id"))
-          .agg(max_by(
-            struct(col("op"), col("value"), col("ts"), col("event_id")),
-            struct(col("ts"), col("event_id"))).as("l"))
-          .select(col("user_id"), col("l.op").as("op"),
-            col("l.value").as("value"), col("l.ts").as("ts"),
-            col("l.event_id").as("event_id"))
-          .createOrReplaceTempView("graft_cdc_batch")
-        bs.sql(s"""MERGE INTO $targetTable t USING graft_cdc_batch s
-          ON t.user_id = s.user_id
-          WHEN MATCHED AND s.op = 'D' THEN DELETE
-          WHEN MATCHED THEN UPDATE SET value = s.value, ts = s.ts,
-            event_id = s.event_id
-          WHEN NOT MATCHED AND s.op <> 'D' THEN
-            INSERT (user_id, value, ts, event_id)
-            VALUES (s.user_id, s.value, s.ts, s.event_id)""")
-        batches.incrementAndGet(): Unit
-      }
-      .start()
-    try q.awaitTermination()
-    finally graft.llm.Similarity.rmTree(new java.io.File(ckpt))
-    batches.get()
-  }
+  def cdcMergeAvailableNow(stream: DataFrame, targetTable: String): Long =
+    runBatches(stream, "cdc_merge_ckpt") { (batch, _) =>
+      val bs = batch.sparkSession
+      bs.conf.set("spark.sql.catalog.graft_cat",
+        classOf[graft.sources.catalog.GraftCatalog].getName)
+      batch.groupBy(col("user_id"))
+        .agg(max_by(
+          struct(col("op"), col("value"), col("ts"), col("event_id")),
+          struct(col("ts"), col("event_id"))).as("l"))
+        .select(col("user_id"), col("l.op").as("op"),
+          col("l.value").as("value"), col("l.ts").as("ts"),
+          col("l.event_id").as("event_id"))
+        .createOrReplaceTempView("graft_cdc_batch")
+      bs.sql(s"""MERGE INTO $targetTable t USING graft_cdc_batch s
+        ON t.user_id = s.user_id
+        WHEN MATCHED AND s.op = 'D' THEN DELETE
+        WHEN MATCHED THEN UPDATE SET value = s.value, ts = s.ts,
+          event_id = s.event_id
+        WHEN NOT MATCHED AND s.op <> 'D' THEN
+          INSERT (user_id, value, ts, event_id)
+          VALUES (s.user_id, s.value, s.ts, s.event_id)"""): Unit
+    }
 
   /** Tumbling-window hourly aggregate with a watermark — the streaming
     * twin of the batch `events_hourly` catalog query.
@@ -788,11 +710,9 @@ object Streams {
     * join/window queries get drop accounting for free; StreamsSpec
     * pins the counter against a planted late event.
     */
-  val lateDrops =
-    new java.util.concurrent.ConcurrentHashMap[String, Long]()
+  val lateDrops = new ConcurrentHashMap[String, Long]()
 
-  private def recordLateDrops(queryName: String,
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+  private def recordLateDrops(queryName: String, q: StreamingQuery): Unit = {
     val dropped = q.recentProgress.iterator
       .flatMap(_.stateOperators.iterator.map(_.numRowsDroppedByWatermark))
       .sum
@@ -806,57 +726,14 @@ object Streams {
     */
   def runAvailableNow(spark: SparkSession, streamed: DataFrame,
       queryName: String, outputMode: OutputMode = OutputMode.Complete()): DataFrame = {
-    val ckpt = ephemeralCheckpointDir("graft_ephemeral_ckpt")
-    val q = streamed.writeStream
+    recordLateDrops(queryName, runOnce(streamed.writeStream
       .format("memory")
       .queryName(queryName)
-      .option("checkpointLocation", ckpt)
-      .outputMode(outputMode)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try {
-      q.awaitTermination()
-      recordLateDrops(queryName, q)
-    } finally graft.llm.Similarity.rmTree(new java.io.File(ckpt))
+      .outputMode(outputMode), "graft_ephemeral_ckpt"))
     spark.table(queryName)
   }
 
-  /** Exactly-once parquet sink via `foreachBatch`: each micro-batch
-    * overwrites its own `batch=<id>` directory, so a retried batch
-    * (at-least-once delivery from the engine) rewrites the same path
-    * instead of duplicating rows — idempotence is what upgrades
-    * at-least-once execution to exactly-once OUTPUT. This is the
-    * production file-sink idiom when the built-in file sink's
-    * single-directory commit log doesn't fit (e.g. downstream
-    * partition-registration or compaction needs).
-    */
-  def runAvailableNowToParquet(spark: SparkSession, streamed: DataFrame,
-      outDir: String, queryName: String,
-      checkpointDir: Option[String] = None): Unit = {
-    val builder = streamed.writeStream
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-    // with a checkpoint, a LATER run over the same source resumes at
-    // the recorded offsets: already-processed input is never re-read
-    // (restart recovery), and a batch retried after a crash rewrites
-    // its own batch=<id> dir (idempotent output) — together, exactly
-    // once across restarts
-    checkpointDir.foreach(d => builder.option("checkpointLocation", d))
-    val q = builder
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
-    q.awaitTermination()
-  }
-
   // ──────────────────── durable crash-resume ────────────────────
-
-  private val stagedPartsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Stage a fixture parquet FILE as `parts` time-ordered files in a
     * fresh directory (memoized per (file, parts, dupEvery, stamp)) —
@@ -872,36 +749,33 @@ object Streams {
   def stageEventsParts(spark: SparkSession, parquetFile: String,
       parts: Int, dupEvery: Int = 0): String = {
     require(parts >= 2, s"need >=2 parts for multi-epoch pacing, got $parts")
-    stagedPartsCache.computeIfAbsent(
-      s"$parquetFile|$parts|$dupEvery|${fileStamp(parquetFile)}", _ => {
-        val d = java.nio.file.Files.createTempDirectory("events_parts")
-        val full = graft.sources.Tables.normalizeEventsTs(spark,
-          spark.read.parquet(parquetFile), parquetFile)
-        // contiguous time slices of equal row count: ntile over the
-        // global (ts, event_id) order — a one-partition sort BY
-        // CONSTRUCTION at staging volume, so the constant partition
-        // key (non-foldable + null-robust, the codebase idiom) states
-        // that intent and keeps WindowExec's single-partition warning
-        // out of scale logs. Persisted: every slice filter below
-        // would otherwise re-run the global sort
-        val sliced = full.withColumn("_slice",
-          ntile(parts).over(org.apache.spark.sql.expressions.Window
-            .partitionBy(pmod(hash(col("event_id")), lit(1)))
-            .orderBy(col("ts"), col("event_id"))))
-          .persist()
-        try {
-          (1 to parts).foreach { p =>
-            val slice = sliced.filter(col("_slice") === p).drop("_slice")
-            val withDups =
-              if (p == parts && dupEvery > 0)
-                slice.unionAll(sliced.drop("_slice")
-                  .filter(pmod(col("event_id"), lit(dupEvery)) === 0))
-              else slice
-            stageSingleFile(withDups, d, f"part-${p - 1}%02d.parquet")
-          }
-        } finally sliced.unpersist(): Unit
-        d.toString
-      })
+    staged("events_parts", parquetFile, parts, dupEvery) { d =>
+      val full = graft.sources.Tables.normalizeEventsTs(spark,
+        spark.read.parquet(parquetFile), parquetFile)
+      // contiguous time slices of equal row count: ntile over the
+      // global (ts, event_id) order — a one-partition sort BY
+      // CONSTRUCTION at staging volume, so the constant partition
+      // key (non-foldable + null-robust, the codebase idiom) states
+      // that intent and keeps WindowExec's single-partition warning
+      // out of scale logs. Persisted: every slice filter below
+      // would otherwise re-run the global sort
+      val sliced = full.withColumn("_slice",
+        ntile(parts).over(org.apache.spark.sql.expressions.Window
+          .partitionBy(pmod(hash(col("event_id")), lit(1)))
+          .orderBy(col("ts"), col("event_id"))))
+        .persist()
+      try {
+        (1 to parts).foreach { p =>
+          val slice = sliced.filter(col("_slice") === p).drop("_slice")
+          val withDups =
+            if (p == parts && dupEvery > 0)
+              slice.unionAll(sliced.drop("_slice")
+                .filter(pmod(col("event_id"), lit(dupEvery)) === 0))
+            else slice
+          stageSingleFile(withDups, d, f"part-${p - 1}%02d.parquet")
+        }
+      } finally sliced.unpersist(): Unit
+    }
   }
 
   /** Open a staged parts directory as a file stream paced at
@@ -952,7 +826,7 @@ object Streams {
       .outputMode(
         if (complete) OutputMode.Complete() else OutputMode.Append())
       .option("checkpointLocation", ckptDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val dir = if (complete) s"$sinkDir/snapshot"
                   else s"$sinkDir/batch=$batchId"

@@ -101,7 +101,7 @@ object DistributedTrainer {
   }
 
   /** Numeric leaf paths in the column order `prepare` emitted them. */
-  def numericPaths(df: DataFrame, state: ModelState, labelCol: String): Seq[String] =
+  def numericPaths(df: DataFrame, labelCol: String): Seq[String] =
     SchemaPaths.flatten(df.schema)
       .filterNot(p => p.path == labelCol || p.path.startsWith(labelCol + "/"))
       .filter(_.kind == Numeric).map(_.path)
@@ -187,14 +187,6 @@ object DistributedTrainer {
     total
   }
 
-  /** A trainable bridge (E-3 parity, reference
-    * `DataframeModeler.scala:149-157`): measure() launches the Spark job
-    * for the CURRENT parameters.
-    */
-  trait Trainable {
-    def measure(state: ModelState, net: Network): Grads
-  }
-
   final case class TrainConfig(
       hidden: Seq[Int] = Seq(20, 20),
       classes: Int,
@@ -223,7 +215,7 @@ object DistributedTrainer {
     var state = Encoder.fit(
       df.drop(cfg.labelCol), encSpec)
     var net = Network.classifier(encSpec.featureDim, cfg.hidden, cfg.classes)
-    val numPaths = numericPaths(df, state, cfg.labelCol)
+    val numPaths = numericPaths(df, cfg.labelCol)
     var history = Vector.empty[Double]
 
     cfg.schedule.foreach { fraction =>

@@ -38,8 +38,9 @@ import org.apache.hadoop.util.Progressable
   *   - `rename` THROWS by default: object stores have no rename
   *     primitive, so the commit protocol must never reach it. For
   *     end-to-end lifecycles that push Spark's own output committer
-  *     through this store, [[MockS3FileSystem.allowCopyRename]]
-  *     enables the stock-S3A emulation (userland copy+delete,
+  *     through this store, a bucket's
+  *     [[MockS3FileSystem.CopyRenameMarker]] enables the stock-S3A
+  *     emulation (userland copy+delete,
   *     check-then-act, NON-atomic) — but renames whose destination is
   *     a protocol file name (`MANIFEST-*`, `COMMIT_LOCK*`, `STAGE`,
   *     `COMMITTED`, `MANIFEST`) still throw in every mode: a protocol
@@ -64,6 +65,7 @@ class MockS3FileSystem extends FileSystem {
   private var fsUri: URI = _
   private var objectsDir: NioPath = _
   private var inflightDir: NioPath = _
+  private var copyRenameMarker: NioPath = _
   private var workDir: Path = _
 
   override def getScheme: String = "mocks3"
@@ -79,6 +81,7 @@ class MockS3FileSystem extends FileSystem {
       .getOrElse("/tmp/mocks3")
     objectsDir = Paths.get(base, bucket, "objects")
     inflightDir = Paths.get(base, bucket, ".inflight")
+    copyRenameMarker = Paths.get(base, bucket, MockS3FileSystem.CopyRenameMarker)
     Files.createDirectories(objectsDir): Unit
     Files.createDirectories(inflightDir): Unit
     workDir = new Path(fsUri.toString + "/")
@@ -254,11 +257,11 @@ class MockS3FileSystem extends FileSystem {
         s"mocks3: a manifest protocol file reached rename ($src -> " +
           s"$dst) — the commit protocol must only conditional-create " +
           "these names")
-    if (!MockS3FileSystem.allowCopyRename)
+    if (!Files.exists(copyRenameMarker))
       throw new UnsupportedOperationException(
-        s"mocks3: no rename primitive ($src -> $dst); set " +
-          "MockS3FileSystem.allowCopyRename for the stock-S3A " +
-          "copy+delete emulation")
+        s"mocks3: no rename primitive ($src -> $dst); create the " +
+          s"bucket's ${MockS3FileSystem.CopyRenameMarker} marker for " +
+          "the stock-S3A copy+delete emulation")
     // stock-S3A emulation: userland copy+delete, check-then-act,
     // non-atomic — exactly why the protocol refuses to run on it
     val sb = backing(src)
@@ -408,12 +411,14 @@ class MockS3FileSystem extends FileSystem {
 object MockS3FileSystem {
   /** Stock-S3A rename emulation (userland copy+delete) for driving
     * Spark's own output committer through the store in end-to-end
-    * lifecycles. Default OFF: the manifest protocol itself must never
-    * reach rename, and protocol file names throw in every mode.
-    * Cross-JVM storms set it via `-Dmocks3.allowCopyRename=true`.
+    * lifecycles, opted into per bucket by this marker file beside the
+    * bucket's objects (outside every listing). Default OFF: the
+    * manifest protocol itself must never reach rename, and protocol
+    * file names throw in every mode. Every JVM that shares the backing
+    * dir sees the marker, so Spark executors in separate processes
+    * (`local-cluster`) rename exactly as the driver does.
     */
-  @volatile var allowCopyRename: Boolean =
-    sys.props.get("mocks3.allowCopyRename").exists(_ == "true")
+  val CopyRenameMarker = ".allow-copy-rename"
 
   /** TRANSIENT-FAULT NEMESIS (`-Dmocks3.transientFaults=true`): every
     * distinct (operation, key) pair throws ONE plain `IOException` —

@@ -37,11 +37,16 @@ class MockS3ManifestSpec extends SparkSpec {
     // order-dependent flake whenever this suite runs first
     spark.sparkContext: Unit
     sys.props("mocks3.backing") = backingBase
+    // executor JVMs (local-cluster) see no driver system property; the
+    // backing dir reaches them in the Hadoop conf every job carries
+    spark.sparkContext.hadoopConfiguration.set("fs.mocks3.backing",
+      backingBase)
     sys.props(HadoopManifestIo.TrustConditionalCreateConf) = "true"
   }
 
   override def afterAll(): Unit = {
     sys.props -= HadoopManifestIo.TrustConditionalCreateConf
+    spark.sparkContext.hadoopConfiguration.unset("fs.mocks3.backing")
     sys.props -= "mocks3.backing"
     super.afterAll()
   }
@@ -52,6 +57,18 @@ class MockS3ManifestSpec extends SparkSpec {
   private def mockRoot(tag: String): (String, String) = {
     val bucket = s"$tag-${java.util.UUID.randomUUID().toString.take(8)}"
     (s"mocks3://$bucket/idx", s"$backingBase/$bucket/objects/idx")
+  }
+
+  /** Run `body` with stock-S3A copy+delete renames allowed on `root`'s
+    * bucket, in every JVM that shares the backing dir (the driver and
+    * any executor processes).
+    */
+  private def withCopyRename[A](root: String)(body: => A): A = {
+    val marker = java.nio.file.Paths.get(backingBase,
+      new java.net.URI(root).getAuthority, MockS3FileSystem.CopyRenameMarker)
+    java.nio.file.Files.createDirectories(marker.getParent)
+    java.nio.file.Files.write(marker, Array.emptyByteArray)
+    try body finally java.nio.file.Files.deleteIfExists(marker): Unit
   }
 
   private def backingNames(local: String): Seq[String] =
@@ -266,8 +283,7 @@ class MockS3ManifestSpec extends SparkSpec {
       Vocabulary.bm25Disk(spark, path, Seq("apple", "banana"),
           topK = 10, buckets = 4)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    MockS3FileSystem.allowCopyRename = true
-    try {
+    withCopyRename(root) {
       Vocabulary.writeBm25Index(docs.filter(col("doc_id") < 40),
         "doc_id", "text", root, buckets = 4)
       Vocabulary.appendBm25Index(docs.filter(col("doc_id") >= 40),
@@ -275,7 +291,7 @@ class MockS3ManifestSpec extends SparkSpec {
       Vocabulary.deleteBm25Index(spark, root,
         (0 until 60 by 4).map(_.toLong))
       Vocabulary.compactBm25Index(spark, root, buckets = 4)
-    } finally MockS3FileSystem.allowCopyRename = false
+    }
     IndexManifest.pinLayout(twin, IndexManifest.ListingLayout)
     Vocabulary.writeBm25Index(docs.filter(col("doc_id") < 40),
       "doc_id", "text", twin, buckets = 4)
@@ -298,9 +314,9 @@ class MockS3ManifestSpec extends SparkSpec {
         (i.toLong, s"w$i apple shared${i % 5} " +
           (if (i % 3 == 0) "banana" else "cherry"))
       }.toDF("doc_id", "text")
-      MockS3FileSystem.allowCopyRename = true
-      try Vocabulary.writeBm25Index(docs, "doc_id", "text", root, buckets = 4)
-      finally MockS3FileSystem.allowCopyRename = false
+      withCopyRename(root) {
+        Vocabulary.writeBm25Index(docs, "doc_id", "text", root, buckets = 4)
+      }
     }
     def serve() =
       Vocabulary.bm25Disk(spark, root, Seq("apple", "banana"), topK = 10,

@@ -44,9 +44,9 @@ class StreamsSpec extends SparkSpec {
 
   test("foreachBatch parquet sink writes per-batch dirs, rows preserved") {
     val out = java.nio.file.Files.createTempDirectory("stream_out").toString
+    val ck = java.nio.file.Files.createTempDirectory("stream_ck").toString
     val raw = Streams.eventsStream(spark, eventsDir)
-    Streams.runAvailableNowToParquet(spark, raw,
-      out, s"sink_test_${System.nanoTime()}")
+    Streams.resumableAttempt(raw, out, ck, s"sink_test_${System.nanoTime()}")
     val written = spark.read.parquet(out)
     val expected = Tables.events(spark, "/root/testdata/sf0.001")
     assert(written.count() == expected.count())
@@ -249,14 +249,14 @@ class StreamsSpec extends SparkSpec {
 
     (1 to 500).toDF("id").coalesce(1)
       .write.mode("append").parquet(srcDir.toString)
-    Streams.runAvailableNowToParquet(spark, stream, out, "ck_run1", Some(ck))
+    Streams.resumableAttempt(stream, out, ck, "ck_run1")
     assert(spark.read.parquet(out).count() == 500)
 
     // new data lands while the query is DOWN; the original files are
     // still in the source dir on restart
     (501 to 1000).toDF("id").coalesce(1)
       .write.mode("append").parquet(srcDir.toString)
-    Streams.runAvailableNowToParquet(spark, stream, out, "ck_run2", Some(ck))
+    Streams.resumableAttempt(stream, out, ck, "ck_run2")
 
     val ids = spark.read.parquet(out).select(col("id"))
       .collect().map(_.getInt(0))
@@ -317,8 +317,8 @@ class StreamsSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     val src = java.nio.file.Files.createTempDirectory("emb_src").toString
     corpus.write.mode("overwrite").parquet(src + "/embeddings.parquet")
-    val stream = Streams.embeddingsStreamBatches(spark,
-      src + "/embeddings.parquet", halves = 3)
+    val stream = Streams.idParityStream(spark,
+      src + "/embeddings.parquet", "vec_id", halves = 3)
     val path = java.nio.file.Files.createTempDirectory("idx_stream")
       .toString + "/idx"
     val n = Streams.appendIndexAvailableNow(spark, stream, "embedding",
@@ -354,7 +354,7 @@ class StreamsSpec extends SparkSpec {
       .parquet(src.resolve("tbl").toString)
     val file = new java.io.File(src.resolve("tbl").toString).listFiles()
       .find(_.getName.endsWith(".parquet")).get.getPath
-    val stream = Streams.documentsStreamBatches(spark, file, halves = 3)
+    val stream = Streams.idParityStream(spark, file, "doc_id", halves = 3)
     val inc = java.nio.file.Files.createTempDirectory("bm25_stream")
       .toString + "/idx"
     val n = Streams.appendBm25AvailableNow(spark, stream, "doc_id",
@@ -385,8 +385,8 @@ class StreamsSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val src = java.nio.file.Files.createTempDirectory("doc_src").toString
     docs.write.mode("overwrite").parquet(src + "/docs.parquet")
-    val stream = Streams.documentsStreamBatches(spark,
-      src + "/docs.parquet", halves = 2)
+    val stream = Streams.idParityStream(spark,
+      src + "/docs.parquet", "doc_id", halves = 2)
     val base = java.nio.file.Files.createTempDirectory("dedup_stream")
       .toString
     val n = Streams.dedupMinhashAvailableNow(spark, stream, "doc_id",
@@ -413,8 +413,8 @@ class StreamsSpec extends SparkSpec {
     val src = java.nio.file.Files.createTempDirectory("router_src")
       .toString
     docs.write.mode("overwrite").parquet(src + "/docs.parquet")
-    val stream = Streams.documentsStreamBatches(spark,
-      src + "/docs.parquet", halves = 2)
+    val stream = Streams.idParityStream(spark,
+      src + "/docs.parquet", "doc_id", halves = 2)
     val base = java.nio.file.Files.createTempDirectory("router_out")
       .toString
     val n = Streams.routeAvailableNow(spark, stream,
@@ -444,8 +444,8 @@ class StreamsSpec extends SparkSpec {
     val src = java.nio.file.Files.createTempDirectory("router_null_src")
       .toString
     docs.write.mode("overwrite").parquet(src + "/docs.parquet")
-    val stream = Streams.documentsStreamBatches(spark,
-      src + "/docs.parquet", halves = 1)
+    val stream = Streams.idParityStream(spark,
+      src + "/docs.parquet", "doc_id", halves = 1)
     val base = java.nio.file.Files.createTempDirectory("router_null_out")
       .toString
     Streams.routeAvailableNow(spark, stream,
@@ -508,4 +508,74 @@ class StreamsSpec extends SparkSpec {
     }
   }
 
+  /** Dirs named `prefix*` in the places a throwaway checkpoint can
+    * land (tmpfs or the normal temp dir).
+    */
+  private def throwawayDirs(prefix: String): Seq[java.io.File] =
+    Seq("/dev/shm", System.getProperty("java.io.tmpdir"))
+      .flatMap(d => Option(new java.io.File(d).listFiles()).toSeq.flatten)
+      .filter(_.getName.startsWith(prefix))
+
+  test("the one-shot runner deletes its checkpoint after a clean run and " +
+      "after a batch body throws") {
+    val src = java.nio.file.Files.createTempDirectory("oneshot_src")
+    (1 to 20).toDF("id").coalesce(1).write.parquet(src.resolve("t").toString)
+    def stream = spark.readStream
+      .schema(org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("id",
+          org.apache.spark.sql.types.IntegerType))))
+      .parquet(src.resolve("t").toString)
+    def run(prefix: String, fail: Boolean): Seq[Int] = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
+      Streams.runOnce(stream.writeStream.foreachBatch {
+        (_: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+          seen.add(throwawayDirs(prefix).size)
+          if (fail) throw new IllegalStateException("planted batch failure")
+      }, prefix)
+      seen.toArray(Array.empty[Integer]).toSeq.map(_.intValue)
+    }
+    val clean = s"oneshot_clean_${System.nanoTime()}_"
+    assert(run(clean, fail = false) == Seq(1),
+      "the batch body did not see exactly one live checkpoint")
+    assert(throwawayDirs(clean).isEmpty,
+      s"a clean run left its checkpoint: ${throwawayDirs(clean)}")
+    val failing = s"oneshot_fail_${System.nanoTime()}_"
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      run(failing, fail = true)
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage == "planted batch failure"), e.toString)
+    assert(throwawayDirs(failing).isEmpty,
+      s"a failed run left its checkpoint: ${throwawayDirs(failing)}")
+  }
+
+  test("the staging cache returns the same dir for an unchanged file and " +
+      "stages again once its size or mtime changes") {
+    val file = java.nio.file.Files.createTempFile("staged_src", ".bin")
+    java.nio.file.Files.write(file, Array[Byte](1, 2, 3))
+    val f = file.toFile
+    f.setLastModified(1700000000000L)
+    val stagings = new java.util.concurrent.atomic.AtomicInteger(0)
+    def stage(param: Int): String =
+      Streams.staged("staged_spec", f.toString, param) { _ =>
+        stagings.incrementAndGet(): Unit
+      }
+    val first = stage(1)
+    assert(stage(1) == first && stagings.get == 1,
+      "an unchanged file was staged again")
+    assert(stage(2) != first && stagings.get == 2,
+      "a different parameter shared the staged dir")
+    // same size, new mtime
+    f.setLastModified(1700000060000L)
+    val afterTouch = stage(1)
+    assert(afterTouch != first && stagings.get == 3,
+      "an mtime change served the stale staging")
+    // new size, mtime pinned back to the previous value
+    java.nio.file.Files.write(file, Array[Byte](1, 2, 3, 4))
+    f.setLastModified(1700000060000L)
+    val afterGrow = stage(1)
+    assert(afterGrow != afterTouch && stagings.get == 4,
+      "a size change served the stale staging")
+    assert(stage(1) == afterGrow && stagings.get == 4)
+  }
 }
